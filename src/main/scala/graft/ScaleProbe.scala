@@ -264,10 +264,11 @@ object ScaleProbe {
     // up to K² within a bucket-user cell; on the replica corpus the
     // duplicated purchase ids collapse the null-arm anti-join linearly
     "q_events_attrib",
-    // delete propagation: the postings build + one tombstone/fold
-    // cycle; the fold's cost contract is measured separately with
-    // fan-out scaling (op_index_retract) — this row tracks the whole
-    // query's replica growth like q_index_compact's
+    // delete propagation: the postings build + one staged-delete/fold
+    // cycle on the snapshot store; the fold's cost contract is
+    // measured separately with fan-out scaling (op_snapshot_retract) —
+    // this row tracks the whole query's replica growth like
+    // q_index_compact's
     "q_index_retract",
     // MMR: retrieval is a TakeOrdered over a linear relevance scan; the
     // greedy runs on the CONSTANT 50-row pool at any factor — must
@@ -278,7 +279,7 @@ object ScaleProbe {
     // constant-size inversion projection
     "q_doc_bpe_bytes_detok",
     // the composed maintenance cycle: postings build + compact +
-    // tombstone/fold — must track q_index_retract's growth (same
+    // staged-delete/fold — must track q_index_retract's growth (same
     // lineage, one extra increment-bound append)
     "q_index_lifecycle",
     // the λ sweep: four greedies on the constant 50-row pool over the
@@ -690,7 +691,7 @@ object ScaleProbe {
       (probeQueries ++ hostileQueries ++ hostileTokQueries ++
         hostileEventQueries ++ hostileStreamFaces ++ hostileVecQueries ++
         hostileVecStreamFaces).toSet + "op_index_compact" +
-        "op_index_retract" + "op_snapshot_retract" + "op_snapshot_binpack" +
+        "op_snapshot_retract" + "op_snapshot_binpack" +
         "op_snapshot_diff" + "op_snapshot_diffwalk" + "op_snapshot_diffvac" +
         "op_snapshot_packskew" + "op_snapshot_respec")
     require(unknownQ.isEmpty,
@@ -855,76 +856,15 @@ object ScaleProbe {
     }
 
     // index-retraction cost: a CONSTANT delete-list (one doc's gram
-    // postings) folded out of partition-routed stores of growing size,
-    // with partition fan-out scaled to the corpus (64·k partitions —
-    // the production sizing rule: partitions ∝ corpus bytes). The op's
+    // postings) folded out of snapshot stores of growing size, with
+    // partition fan-out scaled to the corpus (64·k partitions — the
+    // production sizing rule: partitions ∝ corpus bytes). The op's
     // claim is that copy-on-write cost ∝ AFFECTED-partition bytes, so
-    // with fan-out scaling the timed fold stays ~flat while the store
-    // grows k×. Store build time is setup, not timed. Synthetic
-    // distinct grams per replica copy keep the distinct-key mass
-    // actually growing (the compact block's device).
-    if (qFilter.isEmpty || qFilter("op_index_retract")) {
-      val postings = {
-        val docs = Tables.table(spark, base, "documents")
-          .filter(length(trim(col("text"))) > 0)
-          .select(col("doc_id"),
-            split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
-              .as("t"))
-          .filter(size(col("t")) >= 5)
-        Tables.spread(docs, col("doc_id"))
-          .select(col("doc_id"), col("t"),
-            explode(sequence(lit(1), size(col("t")) - 4)).as("i"))
-          .select(col("doc_id"),
-            md5(concat_ws(" ", slice(col("t"), col("i"), lit(5)))).as("g"))
-          .distinct()
-          .localCheckpoint()
-      }
-      factors.foreach { k =>
-        val parts = 64 * k
-        val store = s"gram_postings_probe_f$k"
-        val tomb = s"gram_tombstones_probe_f$k"
-        graft.sources.Layout.resetTable(spark, store)
-        graft.sources.Layout.resetTable(spark, tomb)
-        spark.range(k).toDF("copy")
-          .crossJoin(postings)
-          .select(
-            when(col("copy") === 0, col("g"))
-              .otherwise(concat(col("g"), lit("#"), col("copy"))).as("g"),
-            col("doc_id"))
-          .withColumn("pt", pmod(xxhash64(col("g")), lit(parts)).cast("int"))
-          .write.partitionBy("pt").format("parquet").saveAsTable(store)
-        val storeRows = spark.table(store).count()
-        val dead = postings.filter(col("doc_id") === 7)
-          .withColumn("pt", pmod(xxhash64(col("g")), lit(parts)).cast("int"))
-          .localCheckpoint()
-        // the naive baseline the op exists to avoid: full-store
-        // anti-join + full rewrite (to a scratch table — same read
-        // volume, same survivors, every partition written). Timed
-        // FIRST so the real store is still pre-fold.
-        val t1 = System.nanoTime()
-        val naive = spark.table(store)
-          .join(dead.select(col("g"), col("doc_id")), Seq("g", "doc_id"),
-            "left_anti")
-          .repartition(col("pt"))
-        naive.write.mode(SaveMode.Overwrite).partitionBy("pt")
-          .format("parquet").saveAsTable(s"${store}_rewrite")
-        val rewriteSec = (System.nanoTime() - t1) / 1e9
-        spark.sql(s"DROP TABLE IF EXISTS ${store}_rewrite")
-        graft.operators.IndexRetract.tombstone(spark, tomb, dead)
-        val t0 = System.nanoTime()
-        val stats = graft.operators.IndexRetract.fold(
-          spark, store, tomb, "pt", Seq("g", "doc_id"))
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"""{"factor":$k,"query":"op_index_retract","sec":$sec%.3f,"rows":${stats.rowsRemoved},"store_rows":$storeRows,"partitions":$parts,"affected":${stats.partitionsRewritten},"rewrite_sec":$rewriteSec%.3f}""")
-        spark.sql(s"DROP TABLE IF EXISTS $store")
-      }
-    }
-
-    // op_snapshot_retract: the SAME constant-delete-list fold through
-    // the atomic snapshot protocol — the claim the SCALING r21 table
-    // makes ("the commit protocol costs nothing measurable; cost stays
-    // affected-partition-bound") measured at the table path's exact
-    // geometry, plus the vacuum sweep's cost
+    // with fan-out scaling the timed retract stays ~flat while the
+    // store grows k×; the vacuum sweep's cost rides along. Store build
+    // time is setup, not timed. Synthetic distinct grams per replica
+    // copy keep the distinct-key mass actually growing (the compact
+    // block's device).
     if (qFilter.isEmpty || qFilter("op_snapshot_retract")) {
       val postings = {
         val docs = Tables.table(spark, base, "documents")

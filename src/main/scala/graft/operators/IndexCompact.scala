@@ -53,21 +53,20 @@ object IndexCompact {
     require(keys.nonEmpty, "compact needs at least one key column")
     val bcols = if (bucketCols.nonEmpty) bucketCols else keys
     // a PRIOR round's append must be visible to THIS round's anti-join
-    // even when the session cached the table's file listing (the
-    // streaming ingest loop compacts once per micro-batch and read a
-    // stale pre-append listing without this — StreamCompactLoopSpec)
+    // even when the session cached the table's file listing (a caller
+    // compacting once per round otherwise reads a stale pre-append
+    // listing)
     spark.catalog.refreshTable(table)
     val target = spark.table(table)
     val missing = target.columns.filterNot(admits.columns.contains)
     require(missing.isEmpty,
       s"admits frame lacks index columns: ${missing.mkString(", ")}")
     // the admitted count rides the write job as an observed metric
-    // (r20; the IndexRetract.fold r19 device): the old
-    // localCheckpoint + write + count shape paid two extra Spark jobs
-    // per op (a blocking materialization, then a count over the
+    // (r20): the old localCheckpoint + write + count shape paid two
+    // extra Spark jobs per op (a blocking materialization, then a count over the
     // blocks) purely so the count would see exactly the written rows —
     // observe() reports exactly the rows that flowed into the write,
-    // by construction, with zero extra passes (WriteMetricsSpec pins
+    // by construction, with zero extra passes (IndexCompactSpec pins
     // the value against a read-back count)
     val obs = new org.apache.spark.sql.Observation()
     val fresh = admits
@@ -82,44 +81,9 @@ object IndexCompact {
       .format("parquet")
       .saveAsTable(table)
     // ...and THIS append must be visible to the session's next reader
-    // (the stream-loop's follow-up batch, the caller's read-back) even
-    // where the relation cache kept the pre-append listing
+    // (the next round, the caller's read-back) even where the relation
+    // cache kept the pre-append listing
     spark.catalog.refreshTable(table)
-    obs.get.getOrElse("rows", 0L).asInstanceOf[Long]
-  }
-
-  /** [[compact]] for a PARTITION-ROUTED store (the [[IndexRetract]]
-    * layout, partitioned on a deterministic function of the key): same
-    * keep-first semantics, same one-exchange-of-the-increment cost —
-    * the anti-join plans against the table, and the append shuffles
-    * only the survivors, partition-ALIGNED on the routing column so
-    * each touched directory gains one file instead of one sliver per
-    * task (the write-fan-out lesson from q_index_retract's store
-    * build). Existing files are never rewritten: Append mode only adds
-    * files, so untouched partitions stay byte-identical — pinned, with
-    * the retraction composition, by IndexLifecycleSpec. Together with
-    * [[IndexRetract.tombstone]]/[[IndexRetract.fold]] this gives the
-    * partitioned index its full maintenance lifecycle: nightly admits
-    * in, delete-lists out, never a store rewrite. */
-  def compactPartitioned(spark: SparkSession, table: String,
-                         admits: DataFrame, keys: Seq[String],
-                         partCol: String): Long = {
-    require(keys.nonEmpty, "compact needs at least one key column")
-    spark.catalog.refreshTable(table) // see compact()
-    val target = spark.table(table)
-    val missing = target.columns.filterNot(admits.columns.contains)
-    require(missing.isEmpty,
-      s"admits frame lacks index columns: ${missing.mkString(", ")}")
-    // observed-count-on-the-write, the compact() r20 device
-    val obs = new org.apache.spark.sql.Observation()
-    val fresh = admits
-      .select(target.columns.map(org.apache.spark.sql.functions.col): _*)
-      .join(target, keys, "left_anti")
-      .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("rows"))
-    fresh.repartition(org.apache.spark.sql.functions.col(partCol))
-      .write.mode(SaveMode.Append).insertInto(table)
-    spark.catalog.refreshTable(table) // see compact()
     obs.get.getOrElse("rows", 0L).asInstanceOf[Long]
   }
 }

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Clean, Tables}
+import graft.{Clean, InParallel, Tables}
+import graft.sources.{SnapshotGroup, SnapshotStore}
 
 /** Deduplication operators for a training-data pipeline, over `documents`
   * (exact, n-gram Jaccard, MinHash-LSH, SimHash) and `embeddings`
@@ -35,55 +36,14 @@ object DedupQueries {
     * the engine-wide shared definition. */
   private def fingerprint(text: Column): Column = Clean.fingerprint(text)
 
-  /** The gram POSTINGS index the maintenance queries
-    * (q_index_retract / q_index_lifecycle) build and maintain: one
-    * (gram md5, doc_id) identity row per distinct 5-token window per
-    * doc, partition-routed on pmod(xxhash64(g), 64) — the
-    * substring/winnow-family inverted index, chosen because its keys
-    * naturally span documents (deletions force real owner
-    * re-elections; the corpus has zero full-text duplicates). */
-  /** Run two INDEPENDENT maintenance steps concurrently — distinct
-    * store roots only (no data/version dependency): Spark happily runs
-    * both jobs at once and the second back-fills executors the first's
-    * tail frees (r19; the optimization guide's overlap-independent-jobs
-    * device). Session-conf safety: [[graft.sources.SnapshotStore]]'s
-    * writeData scopes its parquet-writer conf through a
-    * reference-counted save/restore, so concurrent writers cannot leave
-    * the session flipped (the naive pair raced exactly here and leaked
-    * TIMESTAMP_MICROS into every later write of the session).
-    *
-    * FAILURE SEMANTICS (r20, the r19 verdict's finding #4): a failing
-    * arm surfaces its ORIGINAL exception — the pool's
-    * ExecutionException wrapper is unwrapped, so a
-    * [[graft.sources.SnapshotStore.ConcurrentCommitException]] thrown
-    * inside a parallel txn step keeps its type for the store's
-    * documented retry-on-ConcurrentCommit doctrine (InParallelSpec pins
-    * it) — and the SIBLING future is cancelled with interrupt instead
-    * of being left running fire-and-forget (best-effort: the interrupt
-    * aborts the sibling's driver thread between/inside its blocking
-    * Spark actions; pool teardown is shutdownNow so the throw never
-    * strands a thread). */
-  private[graft] def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val f1 = pool.submit(new java.util.concurrent.Callable[A] {
-        def call(): A = fa })
-      val f2 = pool.submit(new java.util.concurrent.Callable[B] {
-        def call(): B = fb })
-      def await[T](f: java.util.concurrent.Future[T],
-          sibling: java.util.concurrent.Future[_]): T =
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            sibling.cancel(true)
-            throw Option(e.getCause).getOrElse(e)
-        }
-      val a = await(f1, f2)
-      val b = await(f2, f1)
-      (a, b)
-    } finally { pool.shutdownNow(); () }
-  }
-
+  /** The gram POSTINGS index the q_index_* maintenance queries build
+    * and maintain: one (g = gram md5, doc_id, pt) identity row per
+    * distinct 5-token window per doc, partition-routed on
+    * pt = pmod(xxhash64(g), 64) — the substring/winnow-family inverted
+    * index, chosen because its keys naturally span documents
+    * (deletions force real owner re-elections; the corpus has zero
+    * full-text duplicates). Checkpointed: one materialization serves
+    * every slice a query cuts from it (base, admits, delete-list). */
   private def gramPostings(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.table(s, dir, "documents")
@@ -93,10 +53,51 @@ object DedupQueries {
     Tables.spread(docs, $"doc_id")
       .select($"doc_id", $"t",
         explode(sequence(lit(1), size($"t") - 4)).as("i"))
-      .select($"doc_id",
-        md5(concat_ws(" ", slice($"t", $"i", lit(5)))).as("g"))
+      .select(md5(concat_ws(" ", slice($"t", $"i", lit(5)))).as("g"),
+        $"doc_id")
       .distinct()
       .withColumn("pt", pmod(xxhash64($"g"), lit(64)).cast("int"))
+      .localCheckpoint()
+  }
+
+  /** The postings identity: the keep-first / delete grain. */
+  private val GramKeys = Seq("g", "doc_id")
+
+  /** The BAND index over the postings (band = the md5 prefix an
+    * LSH-style blocker buckets on), routed 32-way on the band. */
+  private def gramBands(postings: DataFrame): DataFrame =
+    postings.select(substring(col("g"), 1, 4).as("band"), col("doc_id"))
+      .distinct()
+      .withColumn("pt", pmod(xxhash64(col("band")), lit(32L)).cast("int"))
+      .localCheckpoint()
+
+  /** The snapshot-store root `name` under the session warehouse, with
+    * any previous run's store there deleted (re-runnable queries). */
+  private def freshRoot(s: SparkSession, name: String): String = {
+    val root = new org.apache.hadoop.fs.Path(
+      s.conf.get("spark.sql.warehouse.dir"), name)
+    root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
+    root.toString
+  }
+
+  /** The first-occurrence owner view of a postings frame: per gram,
+    * the min doc_id and the holder count, ordered by gram. */
+  private def ownerView(postings: DataFrame): DataFrame =
+    postings.groupBy(col("g"))
+      .agg(min(col("doc_id")).as("owner_id"), count(lit(1)).as("n_docs"))
+      .orderBy("g")
+
+  /** The lifecycle slices on one store: init the %3==1 base (v1),
+    * compact the %3≠0 admits (v2 — keep-first drops the re-admitted
+    * base rows), then hand `takedown` the %5==0 postings among the
+    * admits (the query picks retract or staged-delete fold). */
+  private def lifecycle(s: SparkSession, root: String,
+                        postings: DataFrame)(takedown: DataFrame => Any): Unit = {
+    import s.implicits._
+    SnapshotStore.init(s, root, postings.filter($"doc_id" % 3 === 1), "pt")
+    SnapshotStore.compact(s, root,
+      postings.filter($"doc_id" % 3 =!= 0), GramKeys, "pt")
+    takedown(postings.filter($"doc_id" % 5 === 0 && $"doc_id" % 3 =!= 0))
   }
 
   /** Default gram document-frequency cap for q_dedup_containment — the
@@ -978,7 +979,9 @@ object DedupQueries {
     // oracle: compacted = history ∪ (admits under keep-first), exactly.
     // IndexCompactSpec re-pins the NEXT increment's one-exchange plan
     // against the compacted table; the ScaleProbe compact block
-    // measures cost flat in history size.
+    // measures cost flat in history size. This index stays a bucketed
+    // catalog table, not a SnapshotStore: the one-exchange admit plan
+    // needs the bucket layout, which the store does not offer.
     "q_index_compact" -> ((s, dir) => {
       import s.implicits._
       val docs = Tables.table(s, dir, "documents")
@@ -1006,137 +1009,78 @@ object DedupQueries {
     // naturally span documents, so deleting a doc forces real owner
     // RE-ELECTIONS in the first-occurrence view (this corpus has zero
     // full-text duplicates — a fingerprint-grain retraction would never
-    // exercise the cascade). The cycle runs end to end: build the store
-    // partition-routed on pmod(xxhash64(g), 64); stage the delete-list
-    // docs' postings as tombstones (merge-on-read, cost ∝ delete-list —
-    // derived from the DELETED docs' content only, increment-sized at
-    // scale); FOLD (copy-on-write of ONLY the affected partitions —
-    // operators/IndexRetract, the Delta/Iceberg MOR→COW split); emit
-    // the owner view read BACK from the folded files, so the dump
-    // certifies what the store physically contains. Owners re-elect
-    // implicitly at the postings grain: min(doc_id) over survivors.
-    // HARD oracle: surviving docs' postings, grouped. IndexRetractSpec
-    // pins the physical claims (untouched partitions byte-identical,
-    // all-victims directories dropped, MOR == COW, idempotence);
-    // ScaleProbe's retract block measures fold cost ∝ affected bytes.
+    // exercise the cascade). The cycle runs end to end on the snapshot
+    // store, partition-routed on pmod(xxhash64(g), 64): stage the
+    // delete-list docs' keys as ONE delete file (merge-on-read, cost ∝
+    // delete-list — derived from the DELETED docs' content only,
+    // increment-sized at scale), then FOLD the staged deletes
+    // (copy-on-write of ONLY the affected partitions, in one commit —
+    // the Delta/Iceberg MOR→COW split); emit the owner view read BACK
+    // from the folded files, so the dump certifies what the store
+    // physically contains. q_index_snapshot_mor stops at the
+    // merge-on-read view of the same staged deletes; this query pays
+    // the fold. Owners re-elect implicitly at the postings grain:
+    // min(doc_id) over survivors. HARD oracle: surviving docs'
+    // postings, grouped. SnapshotStoreSpec pins the physical claims
+    // (untouched partitions keep their exact files, all-victims
+    // partitions leave the manifest, MOR == COW, composite identities,
+    // escaped string routing values); ScaleProbe's op_snapshot_retract
+    // block measures fold cost ∝ affected bytes.
     "q_index_retract" -> ((s, dir) => {
       import s.implicits._
-      // one materialization serves the store build AND the delete-list
-      // derivation (the lineage re-runs the explode+distinct otherwise)
-      val postings = gramPostings(s, dir).localCheckpoint()
-      graft.sources.Layout.resetTable(s, "gram_postings_retract_q")
-      graft.sources.Layout.resetTable(s, "gram_tombstones_retract_q")
-      postings.select($"g", $"doc_id", $"pt")
-        // align the write with the routing: without this every task
-        // writes a sliver into every pt directory (tasks × partitions
-        // small files — measured 2.5× the whole query's cost at sf0.1);
-        // partition-aligned, each directory gets one writer
-        .repartition($"pt")
-        .write.partitionBy("pt").format("parquet")
-        .saveAsTable("gram_postings_retract_q")
-      val dead = postings.filter($"doc_id" % 5 === 0)
-      graft.operators.IndexRetract.tombstone(
-        s, "gram_tombstones_retract_q", dead)
-      graft.operators.IndexRetract.fold(
-        s, "gram_postings_retract_q", "gram_tombstones_retract_q",
-        "pt", Seq("g", "doc_id"))
-      s.table("gram_postings_retract_q")
-        .groupBy($"g")
-        .agg(min($"doc_id").as("owner_id"),
-          count(lit(1)).as("n_docs"))
-        .orderBy("g")
+      val postings = gramPostings(s, dir)
+      val root = freshRoot(s, "gram_idx_retract_q")
+      SnapshotStore.init(s, root, postings, "pt")
+      SnapshotStore.stageDeletes(s, root,
+        postings.filter($"doc_id" % 5 === 0).select($"g", $"doc_id"),
+        GramKeys)
+      SnapshotStore.foldStagedDeletes(s, root, GramKeys, "pt")
+      ownerView(SnapshotStore.read(s, root))
     }),
 
     // The FULL maintenance lifecycle on one partition-routed index —
     // the composition the two ops imply: build the base index (docs
-    // with doc_id%3==1), run a nightly INGEST round
-    // (IndexCompact.compactPartitioned: admits = %3∈{1,2} postings,
-    // keep-first on the (g, doc_id) identity, so re-admitted base rows
-    // drop and only the %3==2 postings append — one exchange of the
-    // increment, partition-aligned, never a rewrite), then a TAKEDOWN
-    // round (IndexRetract tombstone + fold of the %5==0 docs'
-    // postings), and emit the owner view read BACK from storage. The
-    // point is that admits in and delete-lists out are BOTH
-    // increment-bound file operations on the same layout: partitions
-    // untouched by either op keep their exact files across the whole
-    // cycle (IndexLifecycleSpec pins this by part-file name-set).
+    // with doc_id%3==1), run a nightly INGEST round (compact: admits =
+    // %3∈{1,2} postings, keep-first on the (g, doc_id) identity, so
+    // re-admitted base rows drop and only the %3==2 postings append —
+    // one exchange of the increment, partition-aligned, never a
+    // rewrite), then a TAKEDOWN round staged as deletes and folded
+    // (the %5==0 docs' postings), and emit the owner view read BACK
+    // from storage. The point is that admits in and delete-lists out
+    // are BOTH increment-bound file operations on the same layout:
+    // partitions untouched by either op keep their exact files across
+    // the whole cycle. q_index_snapshot_lifecycle runs the same slices
+    // with a direct retract instead of the staged-delete fold.
     // HARD oracle: distinct postings of docs in %3∈{1,2} minus %5==0,
     // grouped — pure set algebra over the shared gram derivation.
     "q_index_lifecycle" -> ((s, dir) => {
-      import s.implicits._
-      // one materialization serves base, admits, and the delete-list
-      val postings = gramPostings(s, dir).localCheckpoint()
-      graft.sources.Layout.resetTable(s, "gram_idx_lifecycle_q")
-      graft.sources.Layout.resetTable(s, "gram_tomb_lifecycle_q")
-      postings.filter($"doc_id" % 3 === 1)
-        .select($"g", $"doc_id", $"pt")
-        .repartition($"pt")
-        .write.partitionBy("pt").format("parquet")
-        .saveAsTable("gram_idx_lifecycle_q")
-      // the admit compact (idx table) and the tombstone staging (tomb
-      // table) touch DIFFERENT tables with no dependency — overlap them
-      // (the txn query's inParallel discipline); fold then consumes both
-      inParallel(
-        graft.operators.IndexCompact.compactPartitioned(
-          s, "gram_idx_lifecycle_q",
-          postings.filter($"doc_id" % 3 =!= 0).select($"g", $"doc_id", $"pt"),
-          Seq("g", "doc_id"), "pt"),
-        graft.operators.IndexRetract.tombstone(
-          s, "gram_tomb_lifecycle_q",
-          postings.filter($"doc_id" % 5 === 0 && $"doc_id" % 3 =!= 0)))
-      graft.operators.IndexRetract.fold(
-        s, "gram_idx_lifecycle_q", "gram_tomb_lifecycle_q",
-        "pt", Seq("g", "doc_id"))
-      s.table("gram_idx_lifecycle_q")
-        .groupBy($"g")
-        .agg(min($"doc_id").as("owner_id"),
-          count(lit(1)).as("n_docs"))
-        .orderBy("g")
+      val root = freshRoot(s, "gram_idx_lifecycle_q")
+      lifecycle(s, root, gramPostings(s, dir)) { dead =>
+        SnapshotStore.stageDeletes(s, root, dead, GramKeys)
+        SnapshotStore.foldStagedDeletes(s, root, GramKeys, "pt")
+      }
+      ownerView(SnapshotStore.read(s, root))
     }),
 
-    // The lifecycle on the ATOMIC-SNAPSHOT store — q_index_lifecycle's
-    // semantics (same base/admit/takedown slices, same owner-view
-    // oracle: hash-match = equivalence) through sources/SnapshotStore's
-    // versioned commit protocol instead of the table-backed dynamic
-    // overwrite. What changes is the CONSISTENCY contract, not the
-    // answer or the cost model: every maintenance step publishes one
+    // The lifecycle through a DIRECT retract — q_index_lifecycle's
+    // slices and owner-view oracle (hash-match = equivalence), with
+    // the takedown as one copy-on-write commit instead of a staged
+    // delete file plus its fold. Every maintenance step publishes one
     // immutable manifest (data files are never overwritten or deleted
     // in place), so a concurrent reader resolved against ANY version
-    // sees exactly that version — never the half-folded mix the
-    // table-backed fold could expose between its overwrite and its
-    // directory drops — and a second concurrent writer is REFUSED at
-    // commit (optimistic version check) instead of silently
-    // interleaving. SnapshotStoreSpec pins all of it: mid-cycle reader
-    // isolation, conflict refusal, untouched-partition file identity,
-    // vacuum reclaim. Cost shape identical to the table path: compact
-    // = one anti-join + increment-sized write; retract = affected
-    // partitions' survivors rewritten, manifest swap, nothing else
-    // touched.
+    // sees exactly that version — never a half-folded mix — and a
+    // second concurrent writer is REFUSED at commit (optimistic
+    // version check) instead of silently interleaving.
+    // SnapshotStoreSpec pins all of it: mid-cycle reader isolation,
+    // conflict refusal, untouched-partition file identity, vacuum
+    // reclaim. Cost: compact = one anti-join + increment-sized write;
+    // retract = affected partitions' survivors rewritten, manifest
+    // swap, nothing else touched.
     "q_index_snapshot_lifecycle" -> ((s, dir) => {
-      import s.implicits._
-      val postings = gramPostings(s, dir).localCheckpoint()
-      val root = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"),
-        "gram_idx_snapshot_q").toString
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // re-runnable
-      graft.sources.SnapshotStore.init(s, root,
-        postings.filter($"doc_id" % 3 === 1)
-          .select($"g", $"doc_id", $"pt"), "pt")
-      graft.sources.SnapshotStore.compact(s, root,
-        postings.filter($"doc_id" % 3 =!= 0)
-          .select($"g", $"doc_id", $"pt"),
-        Seq("g", "doc_id"), "pt")
-      graft.sources.SnapshotStore.retract(s, root,
-        postings.filter($"doc_id" % 5 === 0 && $"doc_id" % 3 =!= 0)
-          .select($"g", $"doc_id", $"pt"),
-        Seq("g", "doc_id"), "pt")
-      graft.sources.SnapshotStore.read(s, root)
-        .groupBy($"g")
-        .agg(min($"doc_id").as("owner_id"),
-          count(lit(1)).as("n_docs"))
-        .orderBy("g")
+      val root = freshRoot(s, "gram_idx_snapshot_q")
+      lifecycle(s, root, gramPostings(s, dir))(
+        SnapshotStore.retract(s, root, _, GramKeys, "pt"))
+      ownerView(SnapshotStore.read(s, root))
     }),
 
     // TIME TRAVEL behind its own oracle — the training-data payoff of
@@ -1154,31 +1098,11 @@ object DedupQueries {
     // version is checked by DuckDB, not just ScalaTest), and vacuum's
     // retention window is exactly what keeps this query answerable.
     "q_index_snapshot_timetravel" -> ((s, dir) => {
-      import s.implicits._
-      val postings = gramPostings(s, dir).localCheckpoint()
-      val root = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"),
-        "gram_idx_snaptt_q").toString
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // re-runnable
-      graft.sources.SnapshotStore.init(s, root,
-        postings.filter($"doc_id" % 3 === 1)
-          .select($"g", $"doc_id", $"pt"), "pt")
-      graft.sources.SnapshotStore.compact(s, root,
-        postings.filter($"doc_id" % 3 =!= 0)
-          .select($"g", $"doc_id", $"pt"),
-        Seq("g", "doc_id"), "pt")
-      graft.sources.SnapshotStore.retract(s, root,
-        postings.filter($"doc_id" % 5 === 0 && $"doc_id" % 3 =!= 0)
-          .select($"g", $"doc_id", $"pt"),
-        Seq("g", "doc_id"), "pt")
-      graft.sources.SnapshotStore.read(s, root,
-          graft.sources.SnapshotStore.snapshotAt(s, root, 1L))
-        .groupBy($"g")
-        .agg(min($"doc_id").as("owner_id"),
-          count(lit(1)).as("n_docs"))
-        .orderBy("g")
+      val root = freshRoot(s, "gram_idx_snaptt_q")
+      lifecycle(s, root, gramPostings(s, dir))(
+        SnapshotStore.retract(s, root, _, GramKeys, "pt"))
+      ownerView(SnapshotStore.read(s, root,
+        SnapshotStore.snapshotAt(s, root, 1L)))
     }),
 
     // BIN-PACKING behind a hard oracle — the OPTIMIZE op on the
@@ -1196,28 +1120,15 @@ object DedupQueries {
     // recovery the op exists for.
     "q_index_snapshot_binpack" -> ((s, dir) => {
       import s.implicits._
-      val postings = gramPostings(s, dir).localCheckpoint()
-      val root = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"),
-        "gram_idx_snappack_q").toString
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // re-runnable
-      graft.sources.SnapshotStore.init(s, root,
-        postings.filter($"doc_id" % 5 === 0)
-          .select($"g", $"doc_id", $"pt"), "pt")
+      val postings = gramPostings(s, dir)
+      val root = freshRoot(s, "gram_idx_snappack_q")
+      SnapshotStore.init(s, root, postings.filter($"doc_id" % 5 === 0), "pt")
       (1 to 4).foreach { slice =>
-        graft.sources.SnapshotStore.compact(s, root,
-          postings.filter($"doc_id" % 5 === slice)
-            .select($"g", $"doc_id", $"pt"),
-          Seq("g", "doc_id"), "pt")
+        SnapshotStore.compact(s, root,
+          postings.filter($"doc_id" % 5 === slice), GramKeys, "pt")
       }
-      graft.sources.SnapshotStore.binPack(s, root)
-      graft.sources.SnapshotStore.read(s, root)
-        .groupBy($"g")
-        .agg(min($"doc_id").as("owner_id"),
-          count(lit(1)).as("n_docs"))
-        .orderBy("g")
+      SnapshotStore.binPack(s, root)
+      ownerView(SnapshotStore.read(s, root))
     }),
 
     // The CHANGE FEED between two corpus versions — the question an
@@ -1237,29 +1148,13 @@ object DedupQueries {
     // the feed emits the key columns.
     "q_index_snapshot_diff" -> ((s, dir) => {
       import s.implicits._
-      val postings = gramPostings(s, dir).localCheckpoint()
-      val root = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"),
-        "gram_idx_snapdiff_q").toString
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // re-runnable
-      graft.sources.SnapshotStore.init(s, root,
-        postings.filter($"doc_id" % 3 === 1)
-          .select($"g", $"doc_id", $"pt"), "pt")
-      graft.sources.SnapshotStore.compact(s, root,
-        postings.filter($"doc_id" % 3 =!= 0)
-          .select($"g", $"doc_id", $"pt"),
-        Seq("g", "doc_id"), "pt")
-      graft.sources.SnapshotStore.retract(s, root,
-        postings.filter($"doc_id" % 5 === 0 && $"doc_id" % 3 =!= 0)
-          .select($"g", $"doc_id", $"pt"),
-        Seq("g", "doc_id"), "pt")
+      val root = freshRoot(s, "gram_idx_snapdiff_q")
+      lifecycle(s, root, gramPostings(s, dir))(
+        SnapshotStore.retract(s, root, _, GramKeys, "pt"))
       // v1 -> current (v3 on any non-degenerate corpus; an all-empty
       // input's retract is a commitless no-op, leaving current at v2)
-      graft.sources.SnapshotStore.diff(s, root, 1L,
-          graft.sources.SnapshotStore.current(s, root).version,
-          Seq("g", "doc_id"))
+      SnapshotStore.diff(s, root, 1L,
+          SnapshotStore.current(s, root).version, GramKeys)
         .select($"g", $"doc_id", $"change_type")
         .orderBy("change_type", "g", "doc_id")
     }),
@@ -1277,24 +1172,17 @@ object DedupQueries {
     // keep-first bug shows up as a hash mismatch.
     "q_index_snapshot_evolve" -> ((s, dir) => {
       import s.implicits._
-      val postings = gramPostings(s, dir).localCheckpoint()
-      val root = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"),
-        "gram_idx_snapevo_q").toString
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // re-runnable
-      graft.sources.SnapshotStore.init(s, root,
-        postings.filter($"doc_id" % 3 === 1)
-          .select($"g", $"doc_id", $"pt"), "pt")
-      graft.sources.SnapshotStore.evolve(s, root,
+      val postings = gramPostings(s, dir)
+      val root = freshRoot(s, "gram_idx_snapevo_q")
+      SnapshotStore.init(s, root, postings.filter($"doc_id" % 3 === 1), "pt")
+      SnapshotStore.evolve(s, root,
         Seq(org.apache.spark.sql.types.StructField("wt",
           org.apache.spark.sql.types.LongType)))
-      graft.sources.SnapshotStore.compact(s, root,
+      SnapshotStore.compact(s, root,
         postings.filter($"doc_id" % 3 =!= 0)
           .select($"g", $"doc_id", ($"doc_id" % 7).as("wt"), $"pt"),
-        Seq("g", "doc_id"), "pt")
-      graft.sources.SnapshotStore.read(s, root)
+        GramKeys, "pt")
+      SnapshotStore.read(s, root)
         .groupBy($"g")
         .agg(min($"doc_id").as("owner_id"),
           count(lit(1)).as("n_docs"),
@@ -1313,27 +1201,10 @@ object DedupQueries {
     // the live-loop side (the view stays frozen while commits land);
     // SnapshotStoreSpec pins view-vs-readAt equality directly.
     "q_index_snapshot_sql" -> ((s, dir) => {
-      import s.implicits._
-      val postings = gramPostings(s, dir).localCheckpoint()
-      val root = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"),
-        "gram_idx_snapsql_q").toString
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // re-runnable
-      graft.sources.SnapshotStore.init(s, root,
-        postings.filter($"doc_id" % 3 === 1)
-          .select($"g", $"doc_id", $"pt"), "pt")
-      graft.sources.SnapshotStore.compact(s, root,
-        postings.filter($"doc_id" % 3 =!= 0)
-          .select($"g", $"doc_id", $"pt"),
-        Seq("g", "doc_id"), "pt")
-      graft.sources.SnapshotStore.retract(s, root,
-        postings.filter($"doc_id" % 5 === 0 && $"doc_id" % 3 =!= 0)
-          .select($"g", $"doc_id", $"pt"),
-        Seq("g", "doc_id"), "pt")
-      graft.sources.SnapshotStore.registerVersionView(
-        s, root, "gram_idx_snapsql_v1", 1L)
+      val root = freshRoot(s, "gram_idx_snapsql_q")
+      lifecycle(s, root, gramPostings(s, dir))(
+        SnapshotStore.retract(s, root, _, GramKeys, "pt"))
+      SnapshotStore.registerVersionView(s, root, "gram_idx_snapsql_v1", 1L)
       s.sql(
         """SELECT g, min(doc_id) AS owner_id,
           |  count(*) AS n_docs
@@ -1343,33 +1214,24 @@ object DedupQueries {
 
     // The snapshot store's MERGE-ON-READ arm behind its own oracle —
     // the deletion-vector shape: the delete-list lands as ONE staged
-    // delete file in ONE atomic commit (zero data files touched,
-    // q_index_snapshot_lifecycle's store build), readMor applies it as
-    // an anti-join — deletes visible atomically, cost ∝ delete-list —
-    // and the emitted owner view must equal what a physical fold
-    // produces (MOR == COW is the contract; SnapshotStoreSpec also
-    // pins the fold itself plus vacuum of the retired delete file).
-    // HARD oracle: surviving docs' postings grouped, the q_index_retract
-    // set algebra — one lineage, two consistency protocols, same hash.
+    // delete file in ONE atomic commit (zero data files touched),
+    // readMor applies it as an anti-join — deletes visible atomically,
+    // cost ∝ delete-list — and the emitted owner view must equal what
+    // a physical fold produces (MOR == COW is the contract;
+    // q_index_retract folds the same staged deletes and carries the
+    // same oracle, and SnapshotStoreSpec pins the fold itself plus
+    // vacuum of the retired delete file). HARD oracle: surviving docs'
+    // postings grouped, the q_index_retract set algebra — one staged
+    // delete-list, two read protocols, same hash.
     "q_index_snapshot_mor" -> ((s, dir) => {
       import s.implicits._
-      val postings = gramPostings(s, dir).localCheckpoint()
-      val root = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"),
-        "gram_idx_snapmor_q").toString
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // re-runnable
-      graft.sources.SnapshotStore.init(s, root,
-        postings.select($"g", $"doc_id", $"pt"), "pt")
-      graft.sources.SnapshotStore.stageDeletes(s, root,
+      val postings = gramPostings(s, dir)
+      val root = freshRoot(s, "gram_idx_snapmor_q")
+      SnapshotStore.init(s, root, postings, "pt")
+      SnapshotStore.stageDeletes(s, root,
         postings.filter($"doc_id" % 5 === 0).select($"g", $"doc_id"),
-        Seq("g", "doc_id"))
-      graft.sources.SnapshotStore.readMor(s, root, Seq("g", "doc_id"))
-        .groupBy($"g")
-        .agg(min($"doc_id").as("owner_id"),
-          count(lit(1)).as("n_docs"))
-        .orderBy("g")
+        GramKeys)
+      ownerView(SnapshotStore.readMor(s, root, GramKeys))
     }),
 
     // The VALUE-GRAIN change feed behind a hard oracle — the r17
@@ -1391,27 +1253,20 @@ object DedupQueries {
     // can't produce (different slices ⇒ different owner doc_ids).
     "q_index_snapshot_diff_values" -> ((s, dir) => {
       import s.implicits._
-      val postings = gramPostings(s, dir).localCheckpoint()
-      val root = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"),
-        "gram_idx_snapdiffv_q").toString
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // re-runnable
+      val postings = gramPostings(s, dir)
+      val root = freshRoot(s, "gram_idx_snapdiffv_q")
       def owners(slice: org.apache.spark.sql.DataFrame) = slice
         .groupBy($"g", $"pt").agg(min($"doc_id").as("owner_id"))
         .select($"g", $"owner_id", $"pt")
-      graft.sources.SnapshotStore.init(s, root,
+      SnapshotStore.init(s, root,
         owners(postings.filter($"doc_id" % 3 === 1)), "pt")
-      graft.sources.SnapshotStore.retract(s, root,
-        graft.sources.SnapshotStore.read(s, root)
-          .filter($"owner_id" % 2 === 1),
+      SnapshotStore.retract(s, root,
+        SnapshotStore.read(s, root).filter($"owner_id" % 2 === 1),
         Seq("g"), "pt")
-      graft.sources.SnapshotStore.compact(s, root,
-        owners(postings.filter($"doc_id" % 3 === 2)),
-        Seq("g"), "pt")
-      graft.sources.SnapshotStore.diff(s, root, 1L,
-          graft.sources.SnapshotStore.current(s, root).version,
+      SnapshotStore.compact(s, root,
+        owners(postings.filter($"doc_id" % 3 === 2)), Seq("g"), "pt")
+      SnapshotStore.diff(s, root, 1L,
+          SnapshotStore.current(s, root).version,
           Seq("g"), valueGrain = true)
         .select($"g", $"owner_id", $"change_type")
         .orderBy("change_type", "g")
@@ -1432,31 +1287,17 @@ object DedupQueries {
     // byte-exact pre-respec time travel.
     "q_index_snapshot_respec" -> ((s, dir) => {
       import s.implicits._
-      val postings = gramPostings(s, dir).localCheckpoint()
-      val root = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"),
-        "gram_idx_snaprespec_q").toString
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // re-runnable
-      graft.sources.SnapshotStore.init(s, root,
-        postings.filter($"doc_id" % 3 === 1)
-          .select($"g", $"doc_id", $"pt"), "pt")
-      graft.sources.SnapshotStore.compact(s, root,
-        postings.filter($"doc_id" % 3 =!= 0)
-          .select($"g", $"doc_id", $"pt"),
-        Seq("g", "doc_id"), "pt")
-      graft.sources.SnapshotStore.respec(s, root,
+      val postings = gramPostings(s, dir)
+      val root = freshRoot(s, "gram_idx_snaprespec_q")
+      SnapshotStore.init(s, root, postings.filter($"doc_id" % 3 === 1), "pt")
+      SnapshotStore.compact(s, root,
+        postings.filter($"doc_id" % 3 =!= 0), GramKeys, "pt")
+      SnapshotStore.respec(s, root,
         pmod(xxhash64($"g"), lit(128L)).cast("int"))
-      graft.sources.SnapshotStore.retract(s, root,
-        graft.sources.SnapshotStore.read(s, root)
-          .filter($"doc_id" % 5 === 0),
-        Seq("g", "doc_id"), "pt")
-      graft.sources.SnapshotStore.read(s, root)
-        .groupBy($"g")
-        .agg(min($"doc_id").as("owner_id"),
-          count(lit(1)).as("n_docs"))
-        .orderBy("g")
+      SnapshotStore.retract(s, root,
+        SnapshotStore.read(s, root).filter($"doc_id" % 5 === 0),
+        GramKeys, "pt")
+      ownerView(SnapshotStore.read(s, root))
     }),
 
     // MULTI-TABLE TRANSACTIONS behind a hard oracle — two coupled
@@ -1477,23 +1318,11 @@ object DedupQueries {
     // deterministic query can't.
     "q_index_snapshot_txn" -> ((s, dir) => {
       import s.implicits._
-      val postings = gramPostings(s, dir).localCheckpoint()
-      val bands = postings
-        .select(substring($"g", 1, 4).as("band"), $"doc_id")
-        .distinct()
-        .withColumn("pt", pmod(xxhash64($"band"), lit(32L)).cast("int"))
-        .localCheckpoint()
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val aRoot = new org.apache.hadoop.fs.Path(wh,
-        "gram_idx_snaptxn_a").toString
-      val bRoot = new org.apache.hadoop.fs.Path(wh,
-        "gram_idx_snaptxn_b").toString
-      val gRoot = new org.apache.hadoop.fs.Path(wh,
-        "gram_idx_snaptxn_g").toString
-      val fs = new org.apache.hadoop.fs.Path(gRoot)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      Seq(aRoot, bRoot, gRoot).foreach(r => // re-runnable
-        fs.delete(new org.apache.hadoop.fs.Path(r), true))
+      val postings = gramPostings(s, dir)
+      val bands = gramBands(postings)
+      val aRoot = freshRoot(s, "gram_idx_snaptxn_a")
+      val bRoot = freshRoot(s, "gram_idx_snaptxn_b")
+      val gRoot = freshRoot(s, "gram_idx_snaptxn_g")
       // the two member stores are INDEPENDENT roots: their inits, and
       // their compacts inside the one transaction, have no data or
       // version dependency — run each pair concurrently so the second
@@ -1501,27 +1330,20 @@ object DedupQueries {
       // overlap-independent-jobs discipline; Spark schedules concurrent
       // jobs FIFO, which is exactly back-fill). The group protocol is
       // untouched: both commits still land inside ONE transact claim.
-      inParallel(
-        graft.sources.SnapshotStore.init(s, aRoot,
-          postings.filter($"doc_id" % 3 === 1)
-            .select($"g", $"doc_id", $"pt"), "pt"),
-        graft.sources.SnapshotStore.init(s, bRoot,
-          bands.filter($"doc_id" % 3 === 1), "pt"))
-      graft.sources.SnapshotGroup.init(s, gRoot,
-        Map("postings" -> aRoot, "bands" -> bRoot))
-      graft.sources.SnapshotGroup.transact(s, gRoot) { txn =>
-        inParallel(
+      InParallel(
+        SnapshotStore.init(s, aRoot, postings.filter($"doc_id" % 3 === 1), "pt"),
+        SnapshotStore.init(s, bRoot, bands.filter($"doc_id" % 3 === 1), "pt"))
+      SnapshotGroup.init(s, gRoot, Map("postings" -> aRoot, "bands" -> bRoot))
+      SnapshotGroup.transact(s, gRoot) { txn =>
+        InParallel(
           txn.compact("postings",
-            postings.filter($"doc_id" % 3 =!= 0)
-              .select($"g", $"doc_id", $"pt"),
-            Seq("g", "doc_id"), "pt"),
+            postings.filter($"doc_id" % 3 =!= 0), GramKeys, "pt"),
           txn.compact("bands",
-            bands.filter($"doc_id" % 3 =!= 0),
-            Seq("band", "doc_id"), "pt"))
+            bands.filter($"doc_id" % 3 =!= 0), Seq("band", "doc_id"), "pt"))
         ()
       }
-      val a = graft.sources.SnapshotGroup.read(s, gRoot, "postings")
-      val b = graft.sources.SnapshotGroup.read(s, gRoot, "bands")
+      val a = SnapshotGroup.read(s, gRoot, "postings")
+      val b = SnapshotGroup.read(s, gRoot, "bands")
       a.withColumn("band", substring($"g", 1, 4))
         .join(b.select($"band", $"doc_id").distinct(),
           Seq("band", "doc_id"), "left_semi")
@@ -1546,50 +1368,30 @@ object DedupQueries {
     // time travel and group-aware vacuum across the membership change.
     "q_index_snapshot_txn_sql" -> ((s, dir) => {
       import s.implicits._
-      val postings = gramPostings(s, dir).localCheckpoint()
-      val bands = postings
-        .select(substring($"g", 1, 4).as("band"), $"doc_id")
-        .distinct()
-        .withColumn("pt", pmod(xxhash64($"band"), lit(32L)).cast("int"))
-        .localCheckpoint()
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val aRoot = new org.apache.hadoop.fs.Path(wh,
-        "gram_idx_snaptxnsql_a").toString
-      val bRoot = new org.apache.hadoop.fs.Path(wh,
-        "gram_idx_snaptxnsql_b").toString
-      val gRoot = new org.apache.hadoop.fs.Path(wh,
-        "gram_idx_snaptxnsql_g").toString
-      val fs = new org.apache.hadoop.fs.Path(gRoot)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      Seq(aRoot, bRoot, gRoot).foreach(r => // re-runnable
-        fs.delete(new org.apache.hadoop.fs.Path(r), true))
-      graft.sources.SnapshotStore.init(s, aRoot,
-        postings.filter($"doc_id" % 3 === 1)
-          .select($"g", $"doc_id", $"pt"), "pt")
-      graft.sources.SnapshotGroup.init(s, gRoot,
-        Map("postings" -> aRoot))                       // group v1
+      val postings = gramPostings(s, dir)
+      val bands = gramBands(postings)
+      val aRoot = freshRoot(s, "gram_idx_snaptxnsql_a")
+      val bRoot = freshRoot(s, "gram_idx_snaptxnsql_b")
+      val gRoot = freshRoot(s, "gram_idx_snaptxnsql_g")
+      SnapshotStore.init(s, aRoot, postings.filter($"doc_id" % 3 === 1), "pt")
+      SnapshotGroup.init(s, gRoot, Map("postings" -> aRoot))  // group v1
       // the not-yet-enrolled band store's init is independent of the
       // postings transaction (different roots, no group claim overlap)
-      // — overlap them (the txn query's inParallel discipline); the
+      // — overlap them (the txn query's InParallel discipline); the
       // group version history v1→v4 is unchanged
-      inParallel(
-        graft.sources.SnapshotGroup.transact(s, gRoot) { txn =>
+      InParallel(
+        SnapshotGroup.transact(s, gRoot) { txn =>
           txn.compact("postings",
-            postings.filter($"doc_id" % 3 =!= 0)
-              .select($"g", $"doc_id", $"pt"),
-            Seq("g", "doc_id"), "pt"): Unit
-        },                                              // group v2
-        graft.sources.SnapshotStore.init(s, bRoot,
-          bands.filter($"doc_id" % 3 === 1), "pt"))
-      graft.sources.SnapshotGroup.enroll(s, gRoot,
-        "bands", bRoot)                                 // group v3
-      graft.sources.SnapshotGroup.transact(s, gRoot) { txn =>
+            postings.filter($"doc_id" % 3 =!= 0), GramKeys, "pt"): Unit
+        },                                                     // group v2
+        SnapshotStore.init(s, bRoot, bands.filter($"doc_id" % 3 === 1), "pt"))
+      SnapshotGroup.enroll(s, gRoot, "bands", bRoot)           // group v3
+      SnapshotGroup.transact(s, gRoot) { txn =>
         txn.compact("bands",
           bands.filter($"doc_id" % 3 =!= 0),
           Seq("band", "doc_id"), "pt"): Unit
-      }                                                 // group v4
-      graft.sources.SnapshotGroup.registerGroupViews(s, gRoot,
-        prefix = "snap_txnsql_")
+      }                                                        // group v4
+      SnapshotGroup.registerGroupViews(s, gRoot, prefix = "snap_txnsql_")
       s.sql("""
         SELECT p.band AS band,
                count(*) AS n_postings,
@@ -1618,44 +1420,28 @@ object DedupQueries {
     // integration by StreamCompactLoopSpec.
     "q_index_snapshot_policy" -> ((s, dir) => {
       import s.implicits._
-      val postings = gramPostings(s, dir).localCheckpoint()
-      val root = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"),
-        "gram_idx_snappolicy_q").toString
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // re-runnable
-      graft.sources.SnapshotStore.init(s, root,
-        postings.filter($"doc_id" % 3 === 0)
-          .select($"g", $"doc_id", $"pt"), "pt")
-      graft.sources.SnapshotStore.compact(s, root,
-        postings.filter($"doc_id" % 3 === 1)
-          .select($"g", $"doc_id", $"pt"),
-        Seq("g", "doc_id"), "pt")
-      graft.sources.SnapshotStore.compact(s, root,
-        postings.filter($"doc_id" % 3 === 2)
-          .select($"g", $"doc_id", $"pt"),
-        Seq("g", "doc_id"), "pt")
+      val postings = gramPostings(s, dir)
+      val root = freshRoot(s, "gram_idx_snappolicy_q")
+      SnapshotStore.init(s, root, postings.filter($"doc_id" % 3 === 0), "pt")
+      SnapshotStore.compact(s, root,
+        postings.filter($"doc_id" % 3 === 1), GramKeys, "pt")
+      SnapshotStore.compact(s, root,
+        postings.filter($"doc_id" % 3 === 2), GramKeys, "pt")
       val total = math.max(1L,
-        graft.sources.SnapshotStore.current(s, root)
-          .stats.values.map(_.rows).sum)
+        SnapshotStore.current(s, root).stats.values.map(_.rows).sum)
       val target = math.max(1L, total / 64L)
-      val plan = graft.sources.SnapshotStore.maintenancePlan(s, root,
+      val plan = SnapshotStore.maintenancePlan(s, root,
         minFilesToPack = 2, targetRowsPerFile = target)
       if (!plan.isEmpty)
-        graft.sources.SnapshotStore.binPack(s, root,
+        SnapshotStore.binPack(s, root,
           minFilesToPack = 2, targetRowsPerFile = target,
           dirs = plan.dirs)
-      val replan = graft.sources.SnapshotStore.maintenancePlan(s, root,
+      val replan = SnapshotStore.maintenancePlan(s, root,
         minFilesToPack = 2, targetRowsPerFile = target)
       require(replan.isEmpty,
         s"policy not idempotent after its own pack: " +
           s"${replan.fragmented} / ${replan.hot}")
-      graft.sources.SnapshotStore.read(s, root)
-        .groupBy($"g")
-        .agg(min($"doc_id").as("owner_id"),
-          count(lit(1)).as("n_docs"))
-        .orderBy("g")
+      ownerView(SnapshotStore.read(s, root))
     }),
 
     // STAT-PRUNED range scan behind a hard oracle — the manifest's
@@ -1670,33 +1456,18 @@ object DedupQueries {
     // not any file was skipped — correctness never rides on stats).
     "q_index_snapshot_statprune" -> ((s, dir) => {
       import s.implicits._
-      val postings = gramPostings(s, dir).localCheckpoint()
-      val root = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"),
-        "gram_idx_snapstat_q").toString
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // re-runnable
+      val postings = gramPostings(s, dir)
+      val root = freshRoot(s, "gram_idx_snapstat_q")
       // empty-corpus guard: max() is NULL on zero rows (EmptyInputSpec)
       val maxId = Option(postings.agg(max($"doc_id")).collect()(0).get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
       val (q1, q2) = (maxId / 4, maxId / 2)
-      graft.sources.SnapshotStore.init(s, root,
-        postings.filter($"doc_id" < q1)
-          .select($"g", $"doc_id", $"pt"), "pt")
-      graft.sources.SnapshotStore.compact(s, root,
-        postings.filter($"doc_id" >= q1 && $"doc_id" < q2)
-          .select($"g", $"doc_id", $"pt"),
-        Seq("g", "doc_id"), "pt")
-      graft.sources.SnapshotStore.compact(s, root,
-        postings.filter($"doc_id" >= q2)
-          .select($"g", $"doc_id", $"pt"),
-        Seq("g", "doc_id"), "pt")
-      graft.sources.SnapshotStore.readRange(s, root, "doc_id", q1, q2 - 1)
-        .groupBy($"g")
-        .agg(min($"doc_id").as("owner_id"),
-          count(lit(1)).as("n_docs"))
-        .orderBy("g")
+      SnapshotStore.init(s, root, postings.filter($"doc_id" < q1), "pt")
+      SnapshotStore.compact(s, root,
+        postings.filter($"doc_id" >= q1 && $"doc_id" < q2), GramKeys, "pt")
+      SnapshotStore.compact(s, root,
+        postings.filter($"doc_id" >= q2), GramKeys, "pt")
+      ownerView(SnapshotStore.readRange(s, root, "doc_id", q1, q2 - 1))
     }),
 
     // Corpus version diff — the "what changed in this drop" report an
@@ -2718,6 +2489,23 @@ object DedupQueries {
       |           - length(list_intersect(a.grams, b.grams)))
       |        * 10000 + 0.5) / 10000 >= 0.2""".stripMargin
 
+  /** [[gramPostings]] replayed in DuckDB SQL — the shared CTE prefix
+    * (docs → starts → postings) of every q_index_* postings oracle. */
+  private val postingsCte =
+    """WITH docs AS (
+      |  SELECT doc_id,
+      |    string_split_regex(regexp_replace(lower(trim(text)),
+      |      '\s+', ' ', 'g'), ' ') AS t
+      |  FROM documents WHERE length(trim(text)) > 0),
+      |starts AS (
+      |  SELECT doc_id, t,
+      |    unnest(range(1, greatest(length(t) - 4, 0) + 1)) AS s
+      |  FROM docs),
+      |postings AS (
+      |  SELECT DISTINCT doc_id,
+      |    md5(array_to_string(t[s:s+4], ' ')) AS g
+      |  FROM starts)""".stripMargin
+
   def oracleSql: Map[String, String] = Map(
     "q_dedup_simhash_sql" -> simhashSqlOracle,
 
@@ -2884,157 +2672,66 @@ object DedupQueries {
     // every SURVIVING doc, grouped to the first-occurrence owner view —
     // re-election is implicit at the postings grain (min over
     // survivors), and a gram whose every holder died simply vanishes
-    "q_index_retract" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(regexp_replace(lower(trim(text)),
-        |      '\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |starts AS (
-        |  SELECT doc_id, t,
-        |    unnest(range(1, greatest(length(t) - 4, 0) + 1)) AS s
-        |  FROM docs),
-        |postings AS (
-        |  SELECT DISTINCT doc_id,
-        |    md5(array_to_string(t[s:s+4], ' ')) AS g
-        |  FROM starts)
+    "q_index_retract" -> (postingsCte + """
         |SELECT g, min(doc_id) AS owner_id,
         |  CAST(count(*) AS BIGINT) AS n_docs
         |FROM postings WHERE doc_id % 5 <> 0
-        |GROUP BY g ORDER BY g""".stripMargin,
+        |GROUP BY g ORDER BY g""".stripMargin),
 
     // time travel: version 1's owner view = the base slice, exactly —
     // later commits may not leak a row into the pinned version
-    "q_index_snapshot_timetravel" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(regexp_replace(lower(trim(text)),
-        |      '\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |starts AS (
-        |  SELECT doc_id, t,
-        |    unnest(range(1, greatest(length(t) - 4, 0) + 1)) AS s
-        |  FROM docs),
-        |postings AS (
-        |  SELECT DISTINCT doc_id,
-        |    md5(array_to_string(t[s:s+4], ' ')) AS g
-        |  FROM starts)
+    "q_index_snapshot_timetravel" -> (postingsCte + """
         |SELECT g, min(doc_id) AS owner_id,
         |  CAST(count(*) AS BIGINT) AS n_docs
         |FROM postings WHERE doc_id % 3 = 1
-        |GROUP BY g ORDER BY g""".stripMargin,
+        |GROUP BY g ORDER BY g""".stripMargin),
 
     // bin-packing is a physical reorganization: the owner view over
     // the packed store equals the FULL postings set algebra — not one
     // row may change
-    "q_index_snapshot_binpack" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(regexp_replace(lower(trim(text)),
-        |      '\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |starts AS (
-        |  SELECT doc_id, t,
-        |    unnest(range(1, greatest(length(t) - 4, 0) + 1)) AS s
-        |  FROM docs),
-        |postings AS (
-        |  SELECT DISTINCT doc_id,
-        |    md5(array_to_string(t[s:s+4], ' ')) AS g
-        |  FROM starts)
+    "q_index_snapshot_binpack" -> (postingsCte + """
         |SELECT g, min(doc_id) AS owner_id,
         |  CAST(count(*) AS BIGINT) AS n_docs
         |FROM postings
-        |GROUP BY g ORDER BY g""".stripMargin,
+        |GROUP BY g ORDER BY g""".stripMargin),
 
     // the change feed replayed as slice set algebra: added = the admit
     // slice that is neither base nor takedown, removed = the base rows
     // the takedown hit
-    "q_index_snapshot_diff" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(regexp_replace(lower(trim(text)),
-        |      '\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |starts AS (
-        |  SELECT doc_id, t,
-        |    unnest(range(1, greatest(length(t) - 4, 0) + 1)) AS s
-        |  FROM docs),
-        |postings AS (
-        |  SELECT DISTINCT doc_id,
-        |    md5(array_to_string(t[s:s+4], ' ')) AS g
-        |  FROM starts)
+    "q_index_snapshot_diff" -> (postingsCte + """
         |SELECT g, doc_id, 'added' AS change_type FROM postings
         |WHERE doc_id % 3 = 2 AND doc_id % 5 <> 0
         |UNION ALL
         |SELECT g, doc_id, 'removed' AS change_type FROM postings
         |WHERE doc_id % 3 = 1 AND doc_id % 5 = 0
-        |ORDER BY change_type, g, doc_id""".stripMargin,
+        |ORDER BY change_type, g, doc_id""".stripMargin),
 
     // schema evolution's owner view: every member counts, only the
     // post-evolution admits (the %3==2 slice — keep-first drops the
     // re-admitted base keys) carry weights; all-base groups sum to NULL
-    "q_index_snapshot_evolve" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(regexp_replace(lower(trim(text)),
-        |      '\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |starts AS (
-        |  SELECT doc_id, t,
-        |    unnest(range(1, greatest(length(t) - 4, 0) + 1)) AS s
-        |  FROM docs),
-        |postings AS (
-        |  SELECT DISTINCT doc_id,
-        |    md5(array_to_string(t[s:s+4], ' ')) AS g
-        |  FROM starts)
+    "q_index_snapshot_evolve" -> (postingsCte + """
         |SELECT g, min(doc_id) AS owner_id,
         |  CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(CASE WHEN doc_id % 3 = 2 THEN doc_id % 7 END)
         |    AS BIGINT) AS wt_sum
         |FROM postings WHERE doc_id % 3 <> 0
-        |GROUP BY g ORDER BY g""".stripMargin,
+        |GROUP BY g ORDER BY g""".stripMargin),
 
     // the SQL front door may not change a row of the pinned version —
     // the timetravel oracle VERBATIM
-    "q_index_snapshot_sql" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(regexp_replace(lower(trim(text)),
-        |      '\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |starts AS (
-        |  SELECT doc_id, t,
-        |    unnest(range(1, greatest(length(t) - 4, 0) + 1)) AS s
-        |  FROM docs),
-        |postings AS (
-        |  SELECT DISTINCT doc_id,
-        |    md5(array_to_string(t[s:s+4], ' ')) AS g
-        |  FROM starts)
+    "q_index_snapshot_sql" -> (postingsCte + """
         |SELECT g, min(doc_id) AS owner_id,
         |  CAST(count(*) AS BIGINT) AS n_docs
         |FROM postings WHERE doc_id % 3 = 1
-        |GROUP BY g ORDER BY g""".stripMargin,
+        |GROUP BY g ORDER BY g""".stripMargin),
 
     // the snapshot MOR view carries the retract oracle VERBATIM —
     // staged deletes applied at read must equal the physical fold
-    "q_index_snapshot_mor" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(regexp_replace(lower(trim(text)),
-        |      '\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |starts AS (
-        |  SELECT doc_id, t,
-        |    unnest(range(1, greatest(length(t) - 4, 0) + 1)) AS s
-        |  FROM docs),
-        |postings AS (
-        |  SELECT DISTINCT doc_id,
-        |    md5(array_to_string(t[s:s+4], ' ')) AS g
-        |  FROM starts)
+    "q_index_snapshot_mor" -> (postingsCte + """
         |SELECT g, min(doc_id) AS owner_id,
         |  CAST(count(*) AS BIGINT) AS n_docs
         |FROM postings WHERE doc_id % 5 <> 0
-        |GROUP BY g ORDER BY g""".stripMargin,
+        |GROUP BY g ORDER BY g""".stripMargin),
 
     // the value-grain feed replayed as slice algebra over the g-keyed
     // owner views: base owners from the %3==1 slice, re-admit owners
@@ -3042,20 +2739,7 @@ object DedupQueries {
     // odd-owner groups absent from the admit slice, changed =
     // odd-owner groups re-admitted with a different owner (the
     // non-key compare, value for value)
-    "q_index_snapshot_diff_values" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(regexp_replace(lower(trim(text)),
-        |      '\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |starts AS (
-        |  SELECT doc_id, t,
-        |    unnest(range(1, greatest(length(t) - 4, 0) + 1)) AS s
-        |  FROM docs),
-        |postings AS (
-        |  SELECT DISTINCT doc_id,
-        |    md5(array_to_string(t[s:s+4], ' ')) AS g
-        |  FROM starts),
+    "q_index_snapshot_diff_values" -> (postingsCte + """,
         |base AS (
         |  SELECT g, min(doc_id) AS owner_id FROM postings
         |  WHERE doc_id % 3 = 1 GROUP BY g),
@@ -3074,168 +2758,77 @@ object DedupQueries {
         |SELECT adm.g, adm.owner_id, 'changed' AS change_type
         |FROM base JOIN adm ON base.g = adm.g
         |WHERE base.owner_id % 2 = 1 AND adm.owner_id <> base.owner_id
-        |ORDER BY change_type, g""".stripMargin,
+        |ORDER BY change_type, g""".stripMargin),
 
     // the transactional pair replayed as slice algebra: the semi-join
     // against the band store is an IDENTITY exactly when both stores
     // advanced together, so the oracle is the %3≠0 slice's band stats
     // — one version behind on either store breaks the hash
-    "q_index_snapshot_txn" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(regexp_replace(lower(trim(text)),
-        |      '\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |starts AS (
-        |  SELECT doc_id, t,
-        |    unnest(range(1, greatest(length(t) - 4, 0) + 1)) AS s
-        |  FROM docs),
-        |postings AS (
-        |  SELECT DISTINCT doc_id,
-        |    md5(array_to_string(t[s:s+4], ' ')) AS g
-        |  FROM starts)
+    "q_index_snapshot_txn" -> (postingsCte + """
         |SELECT substring(g, 1, 4) AS band,
         |  CAST(count(*) AS BIGINT) AS n_postings,
         |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
         |FROM postings WHERE doc_id % 3 <> 0
-        |GROUP BY 1 ORDER BY band""".stripMargin,
+        |GROUP BY 1 ORDER BY band""".stripMargin),
 
     // the policy pack may not change a row: the oracle is the FULL
     // postings owner view (all three ingest slices), packed or not
-    "q_index_snapshot_policy" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(regexp_replace(lower(trim(text)),
-        |      '\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |starts AS (
-        |  SELECT doc_id, t,
-        |    unnest(range(1, greatest(length(t) - 4, 0) + 1)) AS s
-        |  FROM docs),
-        |postings AS (
-        |  SELECT DISTINCT doc_id,
-        |    md5(array_to_string(t[s:s+4], ' ')) AS g
-        |  FROM starts)
+    "q_index_snapshot_policy" -> (postingsCte + """
         |SELECT g, min(doc_id) AS owner_id,
         |  CAST(count(*) AS BIGINT) AS n_docs
-        |FROM postings GROUP BY g ORDER BY g""".stripMargin,
+        |FROM postings GROUP BY g ORDER BY g""".stripMargin),
 
     // the SQL front door + mid-history enrollment carry the SAME
     // transactional witness — the oracle is verbatim the txn oracle
-    "q_index_snapshot_txn_sql" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(regexp_replace(lower(trim(text)),
-        |      '\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |starts AS (
-        |  SELECT doc_id, t,
-        |    unnest(range(1, greatest(length(t) - 4, 0) + 1)) AS s
-        |  FROM docs),
-        |postings AS (
-        |  SELECT DISTINCT doc_id,
-        |    md5(array_to_string(t[s:s+4], ' ')) AS g
-        |  FROM starts)
+    "q_index_snapshot_txn_sql" -> (postingsCte + """
         |SELECT substring(g, 1, 4) AS band,
         |  CAST(count(*) AS BIGINT) AS n_postings,
         |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
         |FROM postings WHERE doc_id % 3 <> 0
-        |GROUP BY 1 ORDER BY band""".stripMargin,
+        |GROUP BY 1 ORDER BY band""".stripMargin),
 
     // the mid-cycle re-spec may not change a row of the owner view —
     // the lifecycle oracle VERBATIM
-    "q_index_snapshot_respec" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(regexp_replace(lower(trim(text)),
-        |      '\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |starts AS (
-        |  SELECT doc_id, t,
-        |    unnest(range(1, greatest(length(t) - 4, 0) + 1)) AS s
-        |  FROM docs),
-        |postings AS (
-        |  SELECT DISTINCT doc_id,
-        |    md5(array_to_string(t[s:s+4], ' ')) AS g
-        |  FROM starts)
+    "q_index_snapshot_respec" -> (postingsCte + """
         |SELECT g, min(doc_id) AS owner_id,
         |  CAST(count(*) AS BIGINT) AS n_docs
         |FROM postings
         |WHERE doc_id % 3 <> 0 AND doc_id % 5 <> 0
-        |GROUP BY g ORDER BY g""".stripMargin,
+        |GROUP BY g ORDER BY g""".stripMargin),
 
     // the stat-pruned range scan's VALUE oracle: the range-filtered
     // owner view — identical whether or not any file was skipped
     // (correctness never rides on the stats; the pruning itself is
     // SnapshotStatsSpec's inputFiles pin)
-    "q_index_snapshot_statprune" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(regexp_replace(lower(trim(text)),
-        |      '\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |starts AS (
-        |  SELECT doc_id, t,
-        |    unnest(range(1, greatest(length(t) - 4, 0) + 1)) AS s
-        |  FROM docs),
-        |postings AS (
-        |  SELECT DISTINCT doc_id,
-        |    md5(array_to_string(t[s:s+4], ' ')) AS g
-        |  FROM starts),
+    "q_index_snapshot_statprune" -> (postingsCte + """,
         |b AS (SELECT max(doc_id) // 4 AS q1, max(doc_id) // 2 AS q2
         |      FROM postings)
         |SELECT g, min(doc_id) AS owner_id,
         |  CAST(count(*) AS BIGINT) AS n_docs
         |FROM postings, b
         |WHERE doc_id >= b.q1 AND doc_id <= b.q2 - 1
-        |GROUP BY g ORDER BY g""".stripMargin,
+        |GROUP BY g ORDER BY g""".stripMargin),
 
     // the lifecycle replayed as set algebra over the same gram
     // derivation: base ∪ admits (identity-distinct) minus the
     // takedown docs' postings, grouped to the owner view
-    "q_index_lifecycle" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(regexp_replace(lower(trim(text)),
-        |      '\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |starts AS (
-        |  SELECT doc_id, t,
-        |    unnest(range(1, greatest(length(t) - 4, 0) + 1)) AS s
-        |  FROM docs),
-        |postings AS (
-        |  SELECT DISTINCT doc_id,
-        |    md5(array_to_string(t[s:s+4], ' ')) AS g
-        |  FROM starts)
+    "q_index_lifecycle" -> (postingsCte + """
         |SELECT g, min(doc_id) AS owner_id,
         |  CAST(count(*) AS BIGINT) AS n_docs
         |FROM postings
         |WHERE doc_id % 3 <> 0 AND doc_id % 5 <> 0
-        |GROUP BY g ORDER BY g""".stripMargin,
+        |GROUP BY g ORDER BY g""".stripMargin),
 
     // the snapshot-store lifecycle carries the IDENTICAL oracle — the
     // commit protocol must not change a single output row (hash-match
     // = equivalence, the r15 verdict's done-criterion for the
     // versioned-commit item)
-    "q_index_snapshot_lifecycle" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    string_split_regex(regexp_replace(lower(trim(text)),
-        |      '\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |starts AS (
-        |  SELECT doc_id, t,
-        |    unnest(range(1, greatest(length(t) - 4, 0) + 1)) AS s
-        |  FROM docs),
-        |postings AS (
-        |  SELECT DISTINCT doc_id,
-        |    md5(array_to_string(t[s:s+4], ' ')) AS g
-        |  FROM starts)
+    "q_index_snapshot_lifecycle" -> (postingsCte + """
         |SELECT g, min(doc_id) AS owner_id,
         |  CAST(count(*) AS BIGINT) AS n_docs
         |FROM postings
         |WHERE doc_id % 3 <> 0 AND doc_id % 5 <> 0
-        |GROUP BY g ORDER BY g""".stripMargin,
+        |GROUP BY g ORDER BY g""".stripMargin),
 
     "q_corpus_diff" ->
       """WITH v1 AS (

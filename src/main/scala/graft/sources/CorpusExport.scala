@@ -68,7 +68,7 @@ object CorpusExport {
       .orderBy("shard")
 
   /** Right-to-be-forgotten on the EXPORTED corpus — the
-    * [[graft.operators.IndexRetract]] fold specialized to the training
+    * [[SnapshotStore.retract]] fold specialized to the training
     * files themselves: remove `deadIds` from a [[writeSharded]] layout
     * rewriting ONLY their shards. The shuffle key is deterministic in
     * doc_id, so the delete-list NAMES its shard directories (the

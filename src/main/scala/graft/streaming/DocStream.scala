@@ -145,61 +145,25 @@ object DocStream extends Serializable {
     historyFps.select(col("fp")).cache()
 
   /** The CLOSED ingest-maintenance loop — [[incrementalDedup]] plus
-    * [[graft.operators.IndexCompact]], live: per micro-batch, arrivals
-    * reduce to keep-first (fp, owner) rows and COMPACT into the
-    * bucketed history table inside foreachBatch (a batch context, so
-    * the anti-join reads the table as of the previous batch's end — a
+    * [[graft.sources.SnapshotStore.compact]], live: per micro-batch,
+    * arrivals reduce to keep-first (fp, owner) rows and compact into
+    * the history store inside foreachBatch (a batch context, so the
+    * anti-join reads the store as of the previous batch's commit — a
     * duplicate arriving ten batches after its original is rejected by
-    * the LOOP, not by operator state). This is the production shape
-    * for "the stream maintains its own index": zero streaming state
-    * (the history lives in the table), restart-safe against
-    * re-admission (compact is keep-first idempotent, so a replayed
-    * micro-batch appends nothing), per-batch cost = the increment's
-    * one exchange + bucket-aligned append (IndexCompact's contract).
-    * StreamCompactLoopSpec pins the loop with a staged replay.
-    *
-    * SINGLE-WRITER CONTRACT: each micro-batch's compact runs under the
-    * table's exclusive [[graft.operators.WriterLock]] — the loop plus a
-    * second concurrent compactor/retractor on the same table was
-    * previously UNDEFINED (keep-first idempotence protects replays of
-    * one writer, not interleaved writers); now the interloper — or
-    * this batch, if an out-of-band maintenance job holds the lock — is
-    * refused loudly instead of interleaving (StreamCompactLoopSpec's
-    * lock test).
-    *
-    * @param onBatch  callback with each batch's appended-row count
-    *                 (observability; tests record the per-batch admits)
-    * @return a writer — caller adds trigger/checkpoint and starts */
-  def ingestCompactLoop(spark: SparkSession, docs: DataFrame,
-                        table: String, onBatch: Long => Unit = _ => ())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val admits = batch
-          .withColumn("fp",
-            coalesce(graft.Clean.fingerprint(col("text")), lit("")))
-          .groupBy(col("fp")).agg(min(col("doc_id")).as("owner_id"))
-        onBatch(graft.operators.WriterLock.withLock(spark, table) {
-          graft.operators.IndexCompact.compact(
-            spark, table, admits, Seq("fp"))
-        })
-        ()
-      }
-
-  /** The ingest-compact loop on the ATOMIC SNAPSHOT store — the
-    * [[ingestCompactLoop]] contract with the consistency upgrade the
-    * r15 verdict prescribed as the better arm of the single-writer
-    * item: each micro-batch's keep-first admits land through
-    * [[graft.sources.SnapshotStore.compact]], so every batch is ONE
-    * atomic manifest publish. Concurrent readers resolve complete
-    * versions mid-ingest (never a half-appended listing — the refresh
-    * dance the table-backed loop needed does not exist here), and a
-    * concurrent writer racing this loop's batch is REFUSED by the
-    * store's optimistic version check (ConcurrentCommitException fails
-    * the batch loudly) — serialized or refused, enforced by the commit
-    * protocol instead of a lock file. An interloper committing BETWEEN
-    * batches is tolerated by construction: each batch re-reads the
-    * current version (StreamCompactLoopSpec's snapshot test).
+    * the LOOP, not by operator state). Zero streaming state (the
+    * history lives in the store), restart-safe against re-admission
+    * (compact is keep-first idempotent, so a replayed micro-batch
+    * appends nothing), per-batch cost = the increment's one anti-join
+    * + increment-sized write, and every batch is ONE atomic manifest
+    * publish. Concurrent readers resolve complete versions mid-ingest
+    * (never a half-appended listing), and a concurrent writer racing
+    * this loop's batch is REFUSED by the store's optimistic version
+    * check (ConcurrentCommitException fails the batch loudly) —
+    * serialized or refused, enforced by the commit protocol instead
+    * of a lock file. An interloper committing BETWEEN batches is
+    * tolerated by construction: each batch re-reads the current
+    * version (StreamCompactLoopSpec pins the loop, its replay, the
+    * interloper and the consumer contract).
     *
     * The caller [[graft.sources.SnapshotStore.init]]s the store with
     * the history `(fp, owner_id, pt)` frame first; `pt` routes on a

@@ -6,12 +6,13 @@ import graft.SparkTestBase
 import graft.sources.SnapshotStore.ConcurrentCommitException
 
 /** The atomic-snapshot store's contract — the claims are about what a
-  * READER can ever observe, which is what the table-backed fold could
-  * not guarantee:
+  * READER can ever observe, which a catalog-table fold (dynamic
+  * overwrite, then directory drops) cannot guarantee:
   *
-  *  (a) correctness: init/compact/retract produce exactly the set
-  *      algebra the table-backed ops produce (the lifecycle query's
-  *      hash-match seals this against the DuckDB oracle);
+  *  (a) correctness: init/compact/retract produce exactly the
+  *      keep-first / anti-join set algebra (the lifecycle queries'
+  *      hash-match seals this against the DuckDB oracle), for
+  *      composite identities and escaped string routing values too;
   *  (b) ISOLATION: a reader that resolved a snapshot before a
   *      maintenance cycle reads exactly that version's rows after the
   *      cycle committed — pre-state or post-state, never a mix — and
@@ -38,8 +39,8 @@ class SnapshotStoreSpec extends SparkTestBase {
   private def freshRoot(): String =
     Files.createTempDirectory("snapstore").resolve("store").toString
 
-  /** (g, doc_id, pt) fixture — the IndexRetractSpec shape: victim 99
-    * spans pt 0/1/2; pt 2 is victim-only (all-dead); pt 3..7 untouched. */
+  /** (g, doc_id, pt) fixture: victim 99 spans pt 0/1/2; pt 2 is
+    * victim-only (all-dead); pt 3..7 untouched. */
   private def baseRows = {
     val rows =
       Seq(("g000", 99L), ("g000", 500L), ("g008", 99L), ("g008", 501L),
@@ -351,6 +352,68 @@ class SnapshotStoreSpec extends SparkTestBase {
     assert(r2 === 1 && n2 === 1L)
     assert(rowSet(SnapshotStore.read(spark, root))
       === rowSet(rows.filter($"doc_id" =!= 99L && $"doc_id" =!= 501L)))
+  }
+
+  test("composite-identity retraction (the media band-index shape), " +
+      "through retract and through the staged-delete fold") {
+    // band rows: identity = (band_idx, band_val, hist_id), routed on
+    // band_val — every band_val is shared by ~14 history items, so only
+    // the full composite key names a victim
+    val keys = Seq("band_idx", "band_val", "hist_id")
+    val rows = (0 until 100).flatMap(i => (0 until 4).map(b =>
+        (b, (i % 7).toLong * 16 + b, i.toLong)))
+      .toDF("band_idx", "band_val", "hist_id")
+      .withColumn("pt", ($"band_val" % 8).cast("int"))
+    // takedown of history item 7: its 4 band rows, across 4 partitions
+    val dead = rows.filter($"hist_id" === 7L)
+    def bands(df: org.apache.spark.sql.DataFrame) =
+      df.select(keys.map(col): _*).as[(Int, Long, Long)].collect().toSet
+    val want = bands(rows.filter($"hist_id" =!= 7L))
+
+    val direct = freshRoot()
+    SnapshotStore.init(spark, direct, rows, "pt")
+    val (rewritten, removed, _) =
+      SnapshotStore.retract(spark, direct, dead, keys, "pt")
+    assert(rewritten === 4 && removed === 4L)
+    assert(bands(SnapshotStore.read(spark, direct)) === want)
+
+    val staged = freshRoot()
+    SnapshotStore.init(spark, staged, rows, "pt")
+    SnapshotStore.stageDeletes(spark, staged, dead, keys)
+    assert(bands(SnapshotStore.readMor(spark, staged, keys)) === want)
+    val (foldRewritten, foldRemoved, _) =
+      SnapshotStore.foldStagedDeletes(spark, staged, keys, "pt")
+    assert(foldRewritten === 4 && foldRemoved === 4L)
+    assert(bands(SnapshotStore.read(spark, staged)) === want)
+  }
+
+  test("all-victims partition with a string routing value needing path " +
+      "escaping leaves the manifest, through retract and through the " +
+      "staged-delete fold") {
+    // 'k:1' needs Spark's partition-path escaping (dir pt=k%3A1): a raw
+    // s"$partCol=$v" prefix would match no file, keeping the
+    // 'forgotten' rows in the store
+    val rows = Seq(("g-x", 7L, "k:1"), ("g-y", 8L, "plain"))
+      .toDF("g", "doc_id", "pt")
+    val dead = rows.filter($"doc_id" === 7L)
+    val escaped = "pt=k%3A1/"
+    def check(root: String, op: String => (Int, Long, SnapshotStore.Snapshot)) = {
+      val v1 = SnapshotStore.init(spark, root, rows, "pt")
+      assert(v1.files.exists(_.startsWith(escaped)),
+        s"fixture degenerate: no $escaped file in ${v1.files}")
+      val (rewritten, removed, snap) = op(root)
+      assert(rewritten === 1 && removed === 1L)
+      assert(!snap.files.exists(_.startsWith(escaped)),
+        s"the all-victims partition kept its files: ${snap.files}")
+      assert(rowSet(SnapshotStore.read(spark, root)) === Set(("g-y", 8L)),
+        "rows of the escaped-path all-victims partition resurfaced")
+    }
+    check(freshRoot(), root =>
+      SnapshotStore.retract(spark, root, dead, Seq("g", "doc_id"), "pt"))
+    check(freshRoot(), { root =>
+      SnapshotStore.stageDeletes(spark, root, dead, Seq("g", "doc_id"))
+      SnapshotStore.foldStagedDeletes(spark, root, Seq("g", "doc_id"), "pt")
+    })
   }
 
   test("schema evolution: add-column commits widen the pin per-version; " +

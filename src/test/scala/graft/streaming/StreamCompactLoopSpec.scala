@@ -8,75 +8,19 @@ import graft.{SparkTestBase, Tables}
 import graft.streaming.StageFiles.stageFile
 
 /** The closed ingest-maintenance loop's contract
-  * ([[DocStream.ingestCompactLoop]]): each micro-batch's admits enter
-  * the bucketed history BEFORE the next batch runs, so
+  * ([[DocStream.ingestCompactLoopSnapshot]]): each micro-batch's admits
+  * commit to the history store BEFORE the next batch runs, so
   *
-  *  - batch 2's REPLAY of batch 1's documents admits zero of them
+  *  - a REPLAY of an earlier batch's documents admits zero of them
   *    (cross-batch dedup by the loop, with no streaming state), while
-  *    its genuinely new documents all land;
-  *  - the final table equals keep-first over history ∪ all arrivals;
-  *  - per-batch admit counts surface through the observability hook. */
+  *    genuinely new documents all land;
+  *  - the final store equals keep-first over history ∪ all arrivals,
+  *    including a writer that commits between batches;
+  *  - per-batch admit counts surface through the observability hook;
+  *  - a reader pinned at a version is unaffected by later commits, and
+  *    scheduled packing bounds the per-batch file accretion. */
 class StreamCompactLoopSpec extends SparkTestBase {
   import spark.implicits._
-
-  test("a replayed micro-batch admits zero; new arrivals all land") {
-    val Hist = "loop_hist_spec"
-    try {
-      val docs = Tables.table(spark, sf0001, "documents")
-        .select($"doc_id", $"text", $"lang", $"source", $"n_chars")
-      def fps(slice: Int) = docs.filter($"doc_id" % 3 === slice)
-        .select($"doc_id",
-          coalesce(graft.Clean.fingerprint($"text"), lit("")).as("fp"))
-        .groupBy($"fp").agg(min($"doc_id").as("owner_id"))
-      graft.sources.Layout.writeBucketed(fps(0), Hist, "fp")
-      val histRows = spark.table(Hist).count()
-
-      val dir = Files.createTempDirectory("compact_loop")
-      // batch 1: slice 1; batch 2: slice 1 REPLAYED + slice 2
-      stageFile(docs.filter($"doc_id" % 3 === 1), dir, "b0.parquet",
-        1700000000000L)
-      stageFile(docs.filter($"doc_id" % 3 =!= 0), dir, "b1.parquet",
-        1700000100000L)
-
-      val admits = collection.mutable.ArrayBuffer.empty[Long]
-      val q = DocStream.ingestCompactLoop(spark,
-          DocStream.readDocs(spark, dir.toString), Hist,
-          n => admits.synchronized { admits += n })
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation",
-          Files.createTempDirectory("compact_loop_ckpt").toString)
-        .start()
-      q.awaitTermination()
-
-      // batch 2's keep-first grain is the WHOLE micro-batch (replayed
-      // slice 1 + slice 2 together), so shared fps — the empty-text
-      // fingerprint — take their min across both slices
-      val b2fps = docs.filter($"doc_id" % 3 =!= 0)
-        .select($"doc_id",
-          coalesce(graft.Clean.fingerprint($"text"), lit("")).as("fp"))
-        .groupBy($"fp").agg(min($"doc_id").as("owner_id"))
-      val afterB1 = fps(0)
-        .unionByName(fps(1).join(fps(0), Seq("fp"), "left_anti"))
-      val want1 = fps(1).join(fps(0), Seq("fp"), "left_anti").count()
-      val want2 = b2fps.join(afterB1, Seq("fp"), "left_anti").count()
-      assert(admits.toSeq === Seq(want1, want2),
-        s"per-batch admits ${admits.toSeq} != Seq($want1, $want2) — " +
-          "the replayed slice must contribute ZERO in batch 2")
-      assert(want1 > 0 && want2 > 0, "fixture degenerate")
-
-      // final table: keep-first over history, then batch 1, then batch 2
-      val expectAll = afterB1.unionByName(
-          b2fps.join(afterB1, Seq("fp"), "left_anti"))
-        .as[(String, Long)].collect().toSet
-      val gotSet = spark.table(Hist).as[(String, Long)].collect().toSet
-      assert((gotSet diff expectAll).size + (expectAll diff gotSet).size == 0,
-        s"extra=${(gotSet diff expectAll).take(5)} missing=${(expectAll diff gotSet).take(5)} " +
-          s"sizes got=${gotSet.size} want=${expectAll.size}")
-      assert(spark.table(Hist).count() === histRows + want1 + want2)
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $Hist")
-    }
-  }
 
   test("the snapshot-backed loop: per-batch atomic commits, keep-first " +
       "across batches, interloper commits between batches tolerated") {
@@ -270,46 +214,5 @@ class StreamCompactLoopSpec extends SparkTestBase {
     val maxFiles = byDir.values.map(_.size).max
     assert(maxFiles <= 2,
       s"scheduled packing never engaged: $byDir")
-  }
-
-  test("a concurrent writer holding the table's maintenance lock makes " +
-      "the loop's batch fail loudly instead of interleaving") {
-    val Hist = "loop_lock_spec"
-    try {
-      graft.sources.Layout.writeBucketed(
-        Seq(("fp-base", 1L)).toDF("fp", "owner_id"), Hist, "fp")
-      val dir = Files.createTempDirectory("compact_loop_lock")
-      stageFile(Seq((100L, "fresh text", "en", "web", 10L))
-          .toDF("doc_id", "text", "lang", "source", "n_chars"),
-        dir, "b0.parquet", 1700000000000L)
-
-      // the out-of-band maintenance job (a second compactor) holds the
-      // lock across the whole micro-batch
-      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        graft.operators.WriterLock.withLock(spark, Hist) {
-          val q = DocStream.ingestCompactLoop(spark,
-              DocStream.readDocs(spark, dir.toString), Hist)
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation",
-              Files.createTempDirectory("compact_loop_lock_ckpt").toString)
-            .start()
-          q.awaitTermination()
-        }
-      }
-      def causes(t: Throwable): Seq[Throwable] =
-        if (t == null) Nil else t +: causes(t.getCause)
-      assert(causes(ex).exists(
-        _.isInstanceOf[graft.operators.WriterLock.LockHeldException]),
-        s"expected a LockHeldException in the cause chain, got $ex")
-      // nothing interleaved: the table still holds only the base row
-      assert(spark.table(Hist).count() === 1L)
-
-      // the holder's exit released the lock (the exception propagated
-      // through the outer withLock's finally) — a new writer proceeds
-      graft.operators.WriterLock.withLock(spark, Hist) { () }
-    } finally {
-      graft.operators.WriterLock.break(spark, Hist)
-      spark.sql(s"DROP TABLE IF EXISTS $Hist")
-    }
   }
 }

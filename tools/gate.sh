@@ -1,9 +1,13 @@
 #!/usr/bin/env bash
 # Full local replica of the driver's per-round gate:
-#   compile -> scalatest -> Verify@sf0.01 -> DuckDB oracle compare -> Bench@sf0.1
+#   hrbench unit tests -> compile -> scalatest -> Verify@sf0.01
+#   -> DuckDB oracle compare -> Bench@sf0.1
 # Usage: tools/gate.sh [--quick]   (--quick skips the bench)
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+# the benchmark's pure-part unit tests (generators, stats, report)
+python3 -B -m unittest discover -s hrbench/tests 2>&1 | tail -1
 
 sbt -batch test 2>&1 | grep -aE "Tests:|TESTS FAILED" | tail -2
 
