@@ -105,15 +105,7 @@ object HrLoadDemo {
     // aligned tables the JDBC load ships
     HrPipeline.writeCsv(out, s"$outDir/processed")
     jdbcUrl.foreach { url =>
-      Seq("dim_departments" -> out.dimDepartments,
-        "dim_employees" -> out.dimEmployees,
-        "fact_performance_reviews" -> out.factReviews,
-        "fact_project_assignments" -> out.factAssignments,
-        "summary_dept_metrics" -> out.summaryDeptMetrics,
-        "summary_emp_performance" -> out.summaryEmpPerformance)
-        .foreach { case (name, df) =>
-          HrPipeline.writeJdbcTable(df, name, url, jdbcOptions)
-        }
+      HrPipeline.writeJdbc(out, url, jdbcOptions, None)
       HrPipeline.createIndexes(url, jdbcOptions)
     }
   }

@@ -4,9 +4,15 @@ import java.sql.Date
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
+import graft.InParallel
+
 /** End-to-end orchestration of the reference pipeline
   * (reference main.py:184-222): extract -> transform -> validate -> load ->
-  * report, as one lazy DAG with actions only at sinks and check counts.
+  * report. [[build]] computes every output table ONCE and hands back the
+  * stored results, so the 18 sink writes and the report's collects read
+  * materialized rows instead of each re-running the whole lineage from the
+  * staged CSVs; independent tables are computed, validated and written
+  * concurrently through [[graft.InParallel]].
   *
   * Sinks mirror the reference's (SURVEY.md §2.1): CSV with yyyy-MM-dd
   * dates (S4), parquet for the harness, and a truncate-mode JDBC writer
@@ -48,50 +54,57 @@ object HrPipeline {
     // use — java.io.File would be always-false on an HDFS/S3/abfs raw dir,
     // silently staging nothing instead of staging the files there
     val hadoopConf = spark.sparkContext.hadoopConfiguration
-    HrSchemas.all.keys.toSeq.sorted.filter { t =>
+    val present = HrSchemas.all.keys.toSeq.sorted.filter { t =>
       val p = new org.apache.hadoop.fs.Path(s"$rawDir/$t.csv")
-      val present = p.getFileSystem(hadoopConf).exists(p)
-      if (present)
-        readCsv(spark, rawDir, t).write.mode(SaveMode.Overwrite)
-          .option("header", "true")
-          .option("dateFormat", "yyyy-MM-dd")
-          .csv(s"$stagingDir/$t.csv")
-      present
+      p.getFileSystem(hadoopConf).exists(p)
     }
+    InParallel.map(present) { t =>
+      readCsv(spark, rawDir, t).write.mode(SaveMode.Overwrite)
+        .option("header", "true")
+        .option("dateFormat", "yyyy-MM-dd")
+        .csv(s"$stagingDir/$t.csv")
+    }
+    present
   }
 
-  /** Transform + validate (reference main.py:59-148), pure lineage.
+  /** Transform + validate (reference main.py:59-148), computed once.
     *
-    * @param singlePassDq false (default) keeps the reference's eager
-    *        one-action-per-check validation; true folds each table's
-    *        checks into a single action ([[HrValidate.validateAllSinglePass]],
-    *        4 jobs instead of ~13 — the right setting when the inputs are
-    *        big enough that each extra pass is a real scan) */
+    * Every table is materialized with an eager `localCheckpoint()`: the
+    * five cleaned tables first, concurrently, then the three marts over
+    * those checkpoints, concurrently with the DQ suite
+    * ([[HrValidate.validateAllSinglePass]], one action per validated
+    * table). Each returned DataFrame is a scan of stored rows, so every
+    * later consumer — the sinks, the report, the check rows — reads the
+    * result instead of recomputing its lineage.
+    *
+    * Why a local checkpoint and not `persist`: [[Outputs]] has no close,
+    * and the checkpoint blocks belong to the checkpointed RDD, which
+    * Spark's ContextCleaner frees once the [[Outputs]] holding it is
+    * unreachable — a `persist` would stay pinned in the CacheManager and
+    * accumulate across builds. Losing an executor loses its blocks; a
+    * later read of them then fails the query loudly instead of
+    * returning a wrong answer. */
   def build(spark: SparkSession, employees: DataFrame, departments: DataFrame,
             reviews: DataFrame, projects: DataFrame, assignments: DataFrame,
-            asOf: Date, singlePassDq: Boolean = false): Outputs = {
-    val dimDepartments = HrTransform.normalizeDepartments(departments)
-    val dimEmployees = HrTransform.cleanEmployees(employees, asOf)
-    val factReviews = HrTransform.cleanReviews(reviews)
-    val cleanProjects = HrTransform.cleanProjects(projects, asOf)
-    val factAssignments = HrTransform.cleanAssignments(assignments)
+            asOf: Date): Outputs = {
+    val Seq(dimDepartments, dimEmployees, factReviews, cleanProjects,
+        factAssignments) = InParallel.map(Seq(
+      HrTransform.normalizeDepartments(departments),
+      HrTransform.cleanEmployees(employees, asOf),
+      HrTransform.cleanReviews(reviews),
+      HrTransform.cleanProjects(projects, asOf),
+      HrTransform.cleanAssignments(assignments)))(_.localCheckpoint())
 
-    val summaryDept = HrAggregates.deptSummary(
-      dimDepartments, dimEmployees, cleanProjects, asOf)
-    val summaryEmp = HrAggregates.empPerformance(
-      dimEmployees, factReviews, dimDepartments)
-    val workload = HrAggregates.projectWorkload(cleanProjects, factAssignments)
-
-    val checks =
-      if (singlePassDq)
-        HrValidate.validateAllSinglePass(spark, dimEmployees, dimDepartments,
-          factReviews, cleanProjects, factAssignments)
-      else
-        HrValidate.validateEmployees(spark, dimEmployees, dimDepartments)
-          .union(HrValidate.validateReviews(spark, factReviews, dimEmployees))
-          .union(HrValidate.validateAssignments(spark, factAssignments,
-            cleanProjects, dimEmployees))
-          .union(HrValidate.validateProjects(spark, cleanProjects))
+    val (marts, checks) = InParallel(
+      InParallel.map(Seq(
+        HrAggregates.deptSummary(
+          dimDepartments, dimEmployees, cleanProjects, asOf),
+        HrAggregates.empPerformance(dimEmployees, factReviews, dimDepartments),
+        HrAggregates.projectWorkload(cleanProjects, factAssignments)
+      ))(_.localCheckpoint()),
+      HrValidate.validateAllSinglePass(spark, dimEmployees, dimDepartments,
+        factReviews, cleanProjects, factAssignments))
+    val Seq(summaryDept, summaryEmp, workload) = marts
 
     Outputs(dimDepartments, dimEmployees, factReviews, factAssignments,
       summaryDept, summaryEmp, workload, checks)
@@ -107,7 +120,7 @@ object HrPipeline {
 
   /** CSV sink (reference load.py:67-82): header + yyyy-MM-dd dates. */
   def writeCsv(out: Outputs, dir: String): Unit =
-    tables(out).foreach { case (name, df) =>
+    InParallel.map(tables(out)) { case (name, df) =>
       df.write.mode(SaveMode.Overwrite)
         .option("header", "true")
         .option("dateFormat", "yyyy-MM-dd")
@@ -119,7 +132,7 @@ object HrPipeline {
     * job itself accumulates — readable via [[graft.operators.Metrics]]
     * with no second scan. */
   def writeParquet(out: Outputs, dir: String): Unit =
-    tables(out).foreach { case (name, df) =>
+    InParallel.map(tables(out)) { case (name, df) =>
       graft.operators.Metrics.observeVolume(df, s"sink_$name")
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/$name")
     }
@@ -141,14 +154,21 @@ object HrPipeline {
     w.mode(SaveMode.Overwrite).save()
   }
 
-  /** Load the whole star schema over JDBC (reference main.py:162-166). */
+  /** Load the whole star schema over JDBC (reference main.py:162-166),
+    * one concurrent truncate-load per table; `options` carries the
+    * connection properties (user, password, driver-specific keys). */
+  def writeJdbc(out: Outputs, url: String, options: Map[String, String],
+                sessionInit: Option[String]): Unit =
+    InParallel.map(tables(out)) { case (name, df) =>
+      writeJdbcTable(df, name, url, options, sessionInit)
+    }
+
+  /** [[writeJdbc]] with user/password credentials. */
   def writeJdbc(out: Outputs, url: String, user: String, password: String,
                 sessionInit: Option[String] = Some("SET FOREIGN_KEY_CHECKS=0"))
       : Unit =
-    tables(out).foreach { case (name, df) =>
-      writeJdbcTable(df, name, url,
-        Map("user" -> user, "password" -> password), sessionInit)
-    }
+    writeJdbc(out, url, Map("user" -> user, "password" -> password),
+      sessionInit)
 
   /** The reference's post-load index set (load.py:63-72,175-180): FK
     * columns of the fact/dim tables. */

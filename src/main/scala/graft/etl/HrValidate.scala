@@ -11,13 +11,19 @@ import org.apache.spark.sql.functions._
   */
 object HrValidate {
 
-  /** One check result: (table, check, detail, violations). */
-  private def result(spark: SparkSession, table: String, check: String,
-                     detail: String, violations: Long): DataFrame = {
+  /** Check rows: (table, check, detail, violations). */
+  private type Check = (String, String, String, Long)
+
+  /** Check rows as one local relation. */
+  private def checkRows(spark: SparkSession, rows: Seq[Check]): DataFrame = {
     import spark.implicits._
-    Seq((table, check, detail, violations))
-      .toDF("table_name", "check_name", "detail", "violations")
+    rows.toDF("table_name", "check_name", "detail", "violations")
   }
+
+  /** One check result. */
+  private def result(spark: SparkSession, table: String, check: String,
+                     detail: String, violations: Long): DataFrame =
+    checkRows(spark, Seq((table, check, detail, violations)))
 
   /** reference validation.py:7-26 (check_completeness): null PK, duplicate
     * PK, per-required-column nulls, missing columns. */
@@ -73,72 +79,26 @@ object HrValidate {
     result(spark, table, "accuracy", label, bad)
   }
 
-  /** reference validation.py:63-88 (validate_employees). */
-  def validateEmployees(spark: SparkSession, employees: DataFrame,
-                        departments: DataFrame): DataFrame =
-    checkCompleteness(spark, employees, "employees", "employee_id",
-      Seq("name", "salary", "hire_date"))
-      .union(checkConsistency(spark, employees, "department_id",
-        departments, "department_id", "employees"))
-      // pandas `~status.isin(...)` counts a NaN status as invalid
-      // (validation.py:74-78) — so no isNull escape here.
-      .union(checkAccuracy(spark, employees, "employees",
-        col("status").isin("active", "inactive", "terminated", "leave"),
-        "status_enum"))
-      // positive-mask check (validation.py:85-87): `(status=='active') &
-      // (salary<=0)` is False for NaN in pandas, so nulls are NOT
-      // violations — coalesce the bad-mask before negating.
-      .union(checkAccuracy(spark, employees, "employees",
-        !coalesce(col("status") === "active" && col("salary") <= 0, lit(false)),
-        "active_salary_positive"))
-
-  /** reference validation.py:90-105 (validate_reviews). */
-  def validateReviews(spark: SparkSession, reviews: DataFrame,
-                      employees: DataFrame): DataFrame =
-    checkCompleteness(spark, reviews, "performance_reviews", "review_id",
-      Seq("employee_id", "rating", "review_date"))
-      .union(checkConsistency(spark, reviews, "employee_id",
-        employees, "employee_id", "performance_reviews"))
-      .union(checkAccuracy(spark, reviews, "performance_reviews",
-        col("rating").between(1.0, 5.0), "rating_range"))
-
-  /** reference validation.py:107-120 (validate_assignments). */
-  def validateAssignments(spark: SparkSession, assignments: DataFrame,
-                          projects: DataFrame, employees: DataFrame): DataFrame =
-    checkConsistency(spark, assignments, "project_id",
-      projects, "project_id", "project_assignments")
-      .union(checkConsistency(spark, assignments, "employee_id",
-        employees, "employee_id", "project_assignments"))
-      .union(checkAccuracy(spark, assignments, "project_assignments",
-        col("allocation_percentage").between(0, 100), "allocation_range"))
-
-  /** reference validation.py:122-135 (validate_projects). */
-  def validateProjects(spark: SparkSession, projects: DataFrame): DataFrame =
-    checkCompleteness(spark, projects, "projects", "project_id",
-      Seq("project_name", "start_date"))
-      .union(checkAccuracy(spark, projects, "projects",
-        col("budget").isNull || col("budget") > 0, "budget_null_or_positive"))
-
-  /** Single-pass variant of one table's whole check set: the eager API
-    * above mirrors the reference's one-action-per-check shape (~13 jobs
-    * over 5 tables during a build); this computes every check for a table
-    * in ONE action — all completeness and accuracy aggregates ride a
-    * single `agg`, and each FK check folds in as a left join against the
-    * parent's DISTINCT keys (distinct, so child rows never multiply;
-    * violations = countDistinct of unmatched keys, exactly the anti-join
-    * count). Emits the same (table, check, detail, violations) rows as
-    * the eager per-check calls, in the same order.
+  /** One table's whole check set in ONE action: the per-check API above
+    * mirrors the reference's one-action-per-check shape; this folds every
+    * completeness and accuracy aggregate into a single `agg`, and each FK
+    * check in as a left join against the parent's DISTINCT keys
+    * (distinct, so child rows never multiply; violations = countDistinct
+    * of unmatched keys, exactly the anti-join count). Emits the same
+    * (table, check, detail, violations) rows as [[checkCompleteness]],
+    * [[checkConsistency]] and [[checkAccuracy]] called in turn, in the
+    * same order (HrEtlSpec pins it), as plain values.
     *
     * @param pk       None = no completeness block (e.g. assignments)
     * @param fks      (childFk, parentTable, parentPk) triples
     * @param accuracy (validCond, label) pairs — checkAccuracy semantics
     *                 (a null-valued condition IS a violation)
     */
-  def singlePassChecks(spark: SparkSession, df: DataFrame, table: String,
-                       pk: Option[String], required: Seq[String],
-                       fks: Seq[(String, DataFrame, String)],
-                       accuracy: Seq[(org.apache.spark.sql.Column, String)])
-      : DataFrame = {
+  private def singlePassChecks(df: DataFrame, table: String,
+                               pk: Option[String], required: Seq[String],
+                               fks: Seq[(String, DataFrame, String)],
+                               accuracy: Seq[(org.apache.spark.sql.Column,
+                                 String)]): Seq[Check] = {
     val pkPresent = pk.filter(df.columns.contains)
     val missing = (pk.toSeq ++ required).filterNot(df.columns.contains)
     val presentReq = required.filter(df.columns.contains)
@@ -164,49 +124,59 @@ object HrValidate {
       else joined.agg(aggs.head, aggs.tail: _*).collect()(0)
     val completeness = (pkPresent match {
       case Some(p) =>
-        result(spark, table, "null_pk", p, row.getAs[Long]("null_pk")) +:
-          result(spark, table, "duplicate_pk", p, row.getAs[Long]("dup_pk")) +:
-          presentReq.map(c => result(spark, table, "null_required", c,
-            row.getAs[Long](s"null_$c")))
+        (table, "null_pk", p, row.getAs[Long]("null_pk")) +:
+          (table, "duplicate_pk", p, row.getAs[Long]("dup_pk")) +:
+          presentReq.map(c =>
+            (table, "null_required", c, row.getAs[Long](s"null_$c")))
       case None => Nil
-    }) ++ missing.map(c => result(spark, table, "missing_column", c, 1L))
+    }) ++ missing.map(c => (table, "missing_column", c, 1L))
     val fkRows = fks.zipWithIndex.map { case ((fk, _, ppk), i) =>
       val v = if (validFks.exists(_._2 == i)) row.getAs[Long](s"fk_$i") else 0L
-      result(spark, table, "fk_consistency", s"$fk->$ppk", v) }
+      (table, "fk_consistency", s"$fk->$ppk", v) }
     val accRows = accuracy.zipWithIndex.map { case ((_, label), i) =>
-      result(spark, table, "accuracy", label, row.getAs[Long](s"acc_$i")) }
-    (completeness ++ fkRows ++ accRows).reduce(_ union _)
+      (table, "accuracy", label, row.getAs[Long](s"acc_$i")) }
+    completeness ++ fkRows ++ accRows
   }
 
-  /** The whole build-time DQ suite (validateEmployees/Reviews/Assignments/
-    * Projects) in four actions total — one per validated table — with
-    * check rows identical to the eager path. */
+  /** The whole build-time DQ suite (reference validation.py:63-135:
+    * validate_employees, _reviews, _assignments, _projects) in four
+    * actions total — one per validated table, run concurrently — with
+    * check rows in the reference's table and check order, returned as
+    * one local relation (reading them runs no job). */
   def validateAllSinglePass(spark: SparkSession, employees: DataFrame,
                             departments: DataFrame, reviews: DataFrame,
                             projects: DataFrame, assignments: DataFrame)
-      : DataFrame =
-    singlePassChecks(spark, employees, "employees", Some("employee_id"),
-      Seq("name", "salary", "hire_date"),
-      Seq(("department_id", departments, "department_id")),
-      Seq(
-        (col("status").isin("active", "inactive", "terminated", "leave"),
-          "status_enum"),
-        (!coalesce(col("status") === "active" && col("salary") <= 0,
-          lit(false)), "active_salary_positive")))
-      .union(singlePassChecks(spark, reviews, "performance_reviews",
+      : DataFrame = checkRows(spark,
+    graft.InParallel.map(Seq[() => Seq[Check]](
+      // pandas `~status.isin(...)` counts a NaN status as invalid
+      // (validation.py:74-78) — so no isNull escape on status_enum;
+      // active_salary_positive is a positive-mask check
+      // (validation.py:85-87): `(status=='active') & (salary<=0)` is
+      // False for NaN in pandas, so nulls are NOT violations — the
+      // bad-mask is coalesced before negating
+      () => singlePassChecks(employees, "employees",
+        Some("employee_id"), Seq("name", "salary", "hire_date"),
+        Seq(("department_id", departments, "department_id")),
+        Seq(
+          (col("status").isin("active", "inactive", "terminated", "leave"),
+            "status_enum"),
+          (!coalesce(col("status") === "active" && col("salary") <= 0,
+            lit(false)), "active_salary_positive"))),
+      () => singlePassChecks(reviews, "performance_reviews",
         Some("review_id"), Seq("employee_id", "rating", "review_date"),
         Seq(("employee_id", employees, "employee_id")),
-        Seq((col("rating").between(1.0, 5.0), "rating_range"))))
-      .union(singlePassChecks(spark, assignments, "project_assignments",
+        Seq((col("rating").between(1.0, 5.0), "rating_range"))),
+      () => singlePassChecks(assignments, "project_assignments",
         None, Nil,
         Seq(("project_id", projects, "project_id"),
           ("employee_id", employees, "employee_id")),
         Seq((col("allocation_percentage").between(0, 100),
-          "allocation_range"))))
-      .union(singlePassChecks(spark, projects, "projects",
+          "allocation_range"))),
+      () => singlePassChecks(projects, "projects",
         Some("project_id"), Seq("project_name", "start_date"), Nil,
         Seq((col("budget").isNull || col("budget") > 0,
-          "budget_null_or_positive"))))
+          "budget_null_or_positive")))
+    ))(_()).flatten)
 
   /** reference main.py:135-140: aggregate pass/fail stats over a unioned
     * check DataFrame. */

@@ -1,6 +1,16 @@
 package graft.operators
 
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration._
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution,
+  SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Batch maintenance for the incremental-dedup history indexes — the
   * production op the r18 verdict named as the missing piece: every
@@ -67,23 +77,67 @@ object IndexCompact {
     // blocks) purely so the count would see exactly the written rows —
     // observe() reports exactly the rows that flowed into the write,
     // by construction, with zero extra passes (IndexCompactSpec pins
-    // the value against a read-back count)
-    val obs = new org.apache.spark.sql.Observation()
+    // the value against a read-back count). The write's own
+    // QueryExecution is captured so a missing metric can be told apart
+    // from a plan AQE proved empty ([[observedRows]]).
+    val name = s"index_compact_${java.util.UUID.randomUUID()}"
     val fresh = admits
-      .select(target.columns.map(org.apache.spark.sql.functions.col): _*)
+      .select(target.columns.map(col): _*)
       .join(target, keys, "left_anti")
-      .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("rows"))
-    fresh.write
-      .mode(SaveMode.Append)
-      .bucketBy(buckets, bcols.head, bcols.tail: _*)
-      .sortBy(bcols.head, bcols.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
+      .observe(name, count(lit(1)).as("rows"))
+    val written = Promise[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (qe.logical.exists {
+              case c: CollectMetrics => c.name == name
+              case _ => false
+            }) written.trySuccess(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val qe =
+      try {
+        fresh.write
+          .mode(SaveMode.Append)
+          .bucketBy(buckets, bcols.head, bcols.tail: _*)
+          .sortBy(bcols.head, bcols.tail: _*)
+          .format("parquet")
+          .saveAsTable(table)
+        // listener events are delivered asynchronously, in order
+        Await.result(written.future, 5.minutes)
+      } finally spark.listenerManager.unregister(listener)
     // ...and THIS append must be visible to the session's next reader
     // (the next round, the caller's read-back) even where the relation
     // cache kept the pre-append listing
     spark.catalog.refreshTable(table)
-    obs.get.getOrElse("rows", 0L).asInstanceOf[Long]
+    observedRows(qe, name)
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** The `rows` metric the CollectMetrics node `name` observed during
+    * `qe`. An absent metric is 0 ONLY when the executed plan shows AQE
+    * removed that node — its input plan carried it, its final plan does
+    * not, which happens when a stage below it materialized empty and
+    * the subtree was replaced by an empty relation. Any other absence
+    * (a write path or Spark version that stops delivering the metric)
+    * throws instead of passing for "nothing appended". */
+  private[graft] def observedRows(qe: QueryExecution, name: String): Long =
+    qe.observedMetrics.get(name) match {
+      case Some(row) => row.getAs[Long]("rows")
+      case None if aqeRemoved(qe.executedPlan, name) => 0L
+      case None => throw new IllegalStateException(
+        s"observed metric $name was not delivered, and AQE did not " +
+          "remove its CollectMetrics node:\n" + qe.executedPlan)
+    }
+
+  private def aqeRemoved(plan: SparkPlan, name: String): Boolean = {
+    def observes(p: SparkPlan) = Plans.find(p) {
+      case c: CollectMetricsExec => c.name == name
+      case _ => false
+    }.isDefined
+    Plans.collect(plan) { case a: AdaptiveSparkPlanExec => a }
+      .exists(a => observes(a.inputPlan) && !observes(a.executedPlan))
   }
 }

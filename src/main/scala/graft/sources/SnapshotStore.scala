@@ -981,10 +981,21 @@ object SnapshotStore {
     }
   }
 
+  /** The staging writes run FileOutputCommitter v2, which moves each
+    * task attempt's output into the staging dir inside the task: two
+    * speculative attempts of one task would both move theirs, and the
+    * commit would publish that task's rows twice. Checked before the
+    * write, so a refused op leaves nothing behind. */
+  private def requireNoSpeculation(spark: SparkSession): Unit =
+    require(!spark.sparkContext.getConf.getBoolean("spark.speculation", false),
+      "SnapshotStore writes need spark.speculation=false: the v2 task " +
+        "commit of speculative attempts would duplicate data files")
+
   private def writeData(spark: SparkSession, root: String, df: DataFrame,
                         partCol: String, binCol: Option[String] = None,
                         maxRecordsPerFile: Long = 0L)
       : (Seq[String], Map[String, FileStat]) = {
+    requireNoSpeculation(spark)
     val (fs, rootP) = fsOf(spark, root)
     val tag = java.util.UUID.randomUUID().toString.take(12)
     val staging = new Path(rootP, s"_staging/$tag")
@@ -1448,6 +1459,7 @@ object SnapshotStore {
     * have none). */
   def stageDeletes(spark: SparkSession, root: String, dead: DataFrame,
                    keys: Seq[String]): Snapshot = {
+    requireNoSpeculation(spark)
     val base = current(spark, root)
     val (fs, rootP) = fsOf(spark, root)
     val tag = java.util.UUID.randomUUID().toString.take(12)

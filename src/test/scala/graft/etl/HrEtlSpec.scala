@@ -3,7 +3,6 @@ package graft.etl
 import java.sql.Date
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
 import graft.SparkTestBase
 
@@ -201,11 +200,43 @@ class HrEtlSpec extends SparkTestBase {
 
   test("single-pass DQ: identical check rows, one action per validated table") {
     val cleanProjects = HrTransform.cleanProjects(projects, asOf)
-    def key(r: Row) = (r.getString(0), r.getString(1), r.getString(2))
-    // force the eager path (and all its ~13 per-check actions) BEFORE
-    // registering the counting listener
-    val eager = out.dqChecks.collect().map(r => key(r) ->
-      r.getAs[Long]("violations")).toMap
+    def rows(df: DataFrame) = df.collect().toSeq.map(r =>
+      (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
+    // the reference's one-action-per-check suite (validation.py:63-135),
+    // composed from the public per-check API, in the reference's order
+    import HrValidate.{checkAccuracy, checkCompleteness, checkConsistency}
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    val emp = out.dimEmployees
+    val perCheck = Seq(
+      checkCompleteness(spark, emp, "employees", "employee_id",
+        Seq("name", "salary", "hire_date")),
+      checkConsistency(spark, emp, "department_id", out.dimDepartments,
+        "department_id", "employees"),
+      checkAccuracy(spark, emp, "employees",
+        col("status").isin("active", "inactive", "terminated", "leave"),
+        "status_enum"),
+      checkAccuracy(spark, emp, "employees",
+        !coalesce(col("status") === "active" && col("salary") <= 0, lit(false)),
+        "active_salary_positive"),
+      checkCompleteness(spark, out.factReviews, "performance_reviews",
+        "review_id", Seq("employee_id", "rating", "review_date")),
+      checkConsistency(spark, out.factReviews, "employee_id", emp,
+        "employee_id", "performance_reviews"),
+      checkAccuracy(spark, out.factReviews, "performance_reviews",
+        col("rating").between(1.0, 5.0), "rating_range"),
+      checkConsistency(spark, out.factAssignments, "project_id",
+        cleanProjects, "project_id", "project_assignments"),
+      checkConsistency(spark, out.factAssignments, "employee_id", emp,
+        "employee_id", "project_assignments"),
+      checkAccuracy(spark, out.factAssignments, "project_assignments",
+        col("allocation_percentage").between(0, 100), "allocation_range"),
+      checkCompleteness(spark, cleanProjects, "projects", "project_id",
+        Seq("project_name", "start_date")),
+      checkAccuracy(spark, cleanProjects, "projects",
+        col("budget").isNull || col("budget") > 0, "budget_null_or_positive")
+    ).reduce(_ union _)
+    // build's check rows equal the per-check suite's, row for row
+    assert(rows(out.dqChecks) === rows(perCheck))
 
     val actions = new java.util.concurrent.atomic.AtomicInteger()
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -227,9 +258,29 @@ class HrEtlSpec extends SparkTestBase {
     Thread.sleep(250)
     spark.listenerManager.unregister(l)
     assert(actions.get === 4)
+    assert(rows(sp) === rows(perCheck))
+  }
 
-    val got = sp.collect().map(r => key(r) -> r.getAs[Long]("violations")).toMap
-    assert(got === eager)
+  test("build materializes every output: no plan reads the inputs again") {
+    def read(t: String) = HrPipeline.readCsv(spark, rawCsvDir, t)
+    val built = HrPipeline.build(spark, read("employees"),
+      read("departments"), read("performance_reviews"), read("projects"),
+      read("project_assignments"), asOf)
+    val tables = Seq(built.dimDepartments, built.dimEmployees,
+      built.factReviews, built.factAssignments, built.summaryDeptMetrics,
+      built.summaryEmpPerformance, built.projectWorkload)
+    object Plans extends org.apache.spark.sql.execution.adaptive
+      .AdaptiveSparkPlanHelper
+    tables.foreach { df =>
+      val leaves = Plans.collectLeaves(df.queryExecution.executedPlan)
+      assert(leaves.nonEmpty && leaves.forall(
+        _.isInstanceOf[org.apache.spark.sql.execution.RDDScanExec]),
+        s"an output still scans its lineage:\n${df.queryExecution.executedPlan}")
+    }
+    // the check rows are literal values, computed during build
+    assert(Plans.collectLeaves(built.dqChecks.queryExecution.executedPlan)
+      .forall(_.isInstanceOf[
+        org.apache.spark.sql.execution.LocalTableScanExec]))
   }
 
   /** The three fixture tables written as raw CSVs for the CLI entries. */

@@ -30,4 +30,38 @@ class JdbcSinkSpec extends SparkTestBase {
     assert(second.agg(sum($"c_acctbal")).collect()(0).getDouble(0)
       === sample.agg(sum($"c_acctbal")).collect()(0).getDouble(0))
   }
+
+  test("the star-schema load fans its six truncate-loads out concurrently " +
+      "and stays idempotent") {
+    val dbDir = Files.createTempDirectory("derby_star").toString
+    val url = s"jdbc:derby:$dbDir/hrdb;create=true"
+    def t(name: String, cols: String*) =
+      Tables.table(spark, sf0001, name).select(cols.map(col): _*)
+    val out = HrPipeline.Outputs(
+      dimDepartments = t("region", "r_regionkey", "r_name"),
+      dimEmployees = t("nation", "n_nationkey", "n_name"),
+      factReviews = t("customer", "c_custkey", "c_acctbal"),
+      factAssignments = t("orders", "o_orderkey", "o_totalprice"),
+      summaryDeptMetrics = t("supplier", "s_suppkey", "s_acctbal"),
+      summaryEmpPerformance = t("part", "p_partkey", "p_retailprice"),
+      projectWorkload = t("region", "r_regionkey"),
+      dqChecks = t("region", "r_regionkey"))
+    val tables = Seq("dim_departments" -> out.dimDepartments,
+      "dim_employees" -> out.dimEmployees,
+      "fact_performance_reviews" -> out.factReviews,
+      "fact_project_assignments" -> out.factAssignments,
+      "summary_dept_metrics" -> out.summaryDeptMetrics,
+      "summary_emp_performance" -> out.summaryEmpPerformance)
+    val want = tables.map { case (n, df) => n -> df.count() }.toMap
+    def loaded() = tables.map { case (n, _) =>
+      n -> spark.read.format("jdbc").option("url", url)
+        .option("dbtable", n).load().count() }.toMap
+    // first run creates the six tables, the second truncates and
+    // re-inserts them — both through the one concurrent loop
+    HrPipeline.writeJdbc(out, url, "app", "app", None)
+    assert(loaded() === want)
+    HrPipeline.writeJdbc(out, url, "app", "app", None)
+    assert(loaded() === want)
+  }
 }
+

@@ -109,4 +109,28 @@ class IndexCompactSpec extends SparkTestBase {
       spark.sql("DROP TABLE IF EXISTS band_idx_spec")
     }
   }
+
+  test("a missing observed metric throws unless AQE removed its node") {
+    // AQE removes the node: the stage under the repartition runs empty
+    // (rand() < -1 cannot be folded away at plan time), so the aggregate
+    // over it becomes an empty relation and the CollectMetrics node
+    // inside that stage is gone from the final plan
+    val removed = spark.range(0, 1000, 1, 4).filter(rand(7) < -1.0)
+      .observe("spec_rows_removed", count(lit(1)).as("rows"))
+      .repartition(4, $"id").groupBy($"id").count()
+    assert(removed.collect().isEmpty)
+    val qe = removed.queryExecution
+    assert(!qe.observedMetrics.contains("spec_rows_removed"),
+      s"fixture degenerate: the metric was delivered\n${qe.executedPlan}")
+    assert(IndexCompact.observedRows(qe, "spec_rows_removed") === 0L)
+
+    // nothing removed it and nothing delivered it: fail loudly, never 0
+    val plain = spark.range(10).toDF()
+    plain.collect()
+    val e = intercept[IllegalStateException] {
+      IndexCompact.observedRows(plain.queryExecution, "spec_rows_missing")
+    }
+    assert(e.getMessage.contains("spec_rows_missing"))
+  }
 }
+

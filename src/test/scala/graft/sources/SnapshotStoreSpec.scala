@@ -138,6 +138,42 @@ class SnapshotStoreSpec extends SparkTestBase {
     assert(SnapshotStore.current(spark, root).version === 2L)
   }
 
+  test("a session with speculation on is refused before either v2 " +
+      "staging write lands a file") {
+    val root = freshRoot()
+    SnapshotStore.init(spark, root, baseRows, "pt")
+    def files(): Set[String] = {
+      val it = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try { import scala.jdk.CollectionConverters._
+        it.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(_.toString).toSet }
+      finally it.close()
+    }
+    val before = files()
+    // spark.speculation is a context conf the session API refuses to
+    // set; flip the live context conf (the one the scheduler reads) for
+    // the length of this case only
+    val conf = classOf[org.apache.spark.SparkContext].getMethod("conf")
+      .invoke(spark.sparkContext).asInstanceOf[org.apache.spark.SparkConf]
+    conf.set("spark.speculation", "true")
+    try {
+      val admits = Seq(("g003", 900L)).toDF("g", "doc_id")
+        .withColumn("pt", lit(3))
+      val viaCompact = intercept[IllegalArgumentException] {
+        SnapshotStore.compact(spark, root, admits, Seq("g", "doc_id"), "pt")
+      }
+      val viaStage = intercept[IllegalArgumentException] {
+        SnapshotStore.stageDeletes(spark, root,
+          baseRows.filter($"doc_id" === 99L).select($"g", $"doc_id"),
+          Seq("g", "doc_id"))
+      }
+      Seq(viaCompact, viaStage).foreach(e =>
+        assert(e.getMessage.contains("spark.speculation=false")))
+    } finally conf.remove("spark.speculation")
+    assert(files() === before, "a refused op left files behind")
+    assert(SnapshotStore.current(spark, root).version === 1L)
+  }
+
   test("mistyped routing column coerces through the semi-join instead " +
       "of missing every partition") {
     val root = freshRoot()

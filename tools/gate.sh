@@ -1,13 +1,21 @@
 #!/usr/bin/env bash
 # Full local replica of the driver's per-round gate:
-#   hrbench unit tests -> compile -> scalatest -> Verify@sf0.01
-#   -> DuckDB oracle compare -> Bench@sf0.1
+#   hrbench unit tests -> one checked hr_etl run -> compile -> scalatest
+#   -> Verify@sf0.01 -> DuckDB oracle compare -> Bench@sf0.1
 # Usage: tools/gate.sh [--quick]   (--quick skips the bench)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 # the benchmark's pure-part unit tests (generators, stats, report)
 python3 -B -m unittest discover -s hrbench/tests 2>&1 | tail -1
+
+# one checked hr_etl pass: the concurrent sinks' answers (DQ rows,
+# parquet counts = JDBC counts, report lines) must come out correct
+python3 hrbench/run.py --workload hr_etl --seed 1 --seconds 0 --trace 0 \
+  | python3 -c 'import json, sys
+r = json.loads([l for l in sys.stdin if l.startswith("{")][-1])
+print("hr_etl correct:", r["correct"], "failed:", r["failed"])
+sys.exit(0 if r["correct"] else 1)'
 
 sbt -batch test 2>&1 | grep -aE "Tests:|TESTS FAILED" | tail -2
 
