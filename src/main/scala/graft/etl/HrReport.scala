@@ -45,21 +45,26 @@ object HrReport {
       bround(avg(col("project_duration_days")), 1).as("avg_project_duration_days"))
 
   /** Assemble the text report (reporting.py:5-123) from the marts. The
-    * insight queries each collect at most k rows. */
+    * insight queries each collect at most k rows, all five concurrently
+    * through [[graft.InParallel.map]]. */
   def summaryReport(spark: SparkSession, deptSummary: DataFrame,
                     empPerformance: DataFrame,
                     projectWorkload: DataFrame): String = {
-    def one(df: DataFrame): Option[org.apache.spark.sql.Row] =
-      df.collect().headOption
-    val topSalary = one(highestAvgSalaryDept(deptSummary))
+    // the five insights read independent stored marts: one concurrent
+    // round of collects, results in input order
+    val Seq(salary, rated, active, tenure, duration) = graft.InParallel.map(
+      Seq(highestAvgSalaryDept(deptSummary), topRatedEmployees(empPerformance),
+        mostActiveProjectsDept(deptSummary), longestTenure(empPerformance),
+        avgProjectDuration(projectWorkload)))(_.collect())
+    val topSalary = salary.headOption
       .map(r => f"${r.getString(0)} ($$${r.getDouble(1)}%,.2f)").getOrElse("n/a")
-    val topRated = topRatedEmployees(empPerformance).collect()
+    val topRated = rated
       .map(r => s"${r.getString(0)} (${r.getDouble(1)})").mkString(", ")
-    val mostActive = one(mostActiveProjectsDept(deptSummary))
+    val mostActive = active.headOption
       .map(r => s"${r.getString(0)} (${r.getLong(1)} active)").getOrElse("n/a")
-    val longest = one(longestTenure(empPerformance))
+    val longest = tenure.headOption
       .map(r => s"${r.getString(0)} (${r.getDouble(1)} years)").getOrElse("n/a")
-    val avgDur = one(avgProjectDuration(projectWorkload))
+    val avgDur = duration.headOption
       .map(r => s"${r.getDouble(0)} days").getOrElse("n/a")
     s"""HR ANALYTICS SUMMARY
        |====================

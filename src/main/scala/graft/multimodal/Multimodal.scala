@@ -199,8 +199,8 @@ object Multimodal {
   /** The same documents→media wrap over an arbitrary (possibly
     * STREAMING) documents-shaped frame — the ingest seam
     * [[graft.streaming.DocStream.mediaDedup]] shares with the batch
-    * queries, so live and nightly payload bytes are identical by
-    * construction. */
+    * queries under the phash and audio codecs, so live and nightly
+    * payload bytes are identical by construction. */
   def asMedia(docs: DataFrame): Dataset[MediaItem] = {
     import docs.sparkSession.implicits._
     docs
@@ -224,7 +224,19 @@ object Multimodal {
     * would accept it — so everything downstream must survive an actual
     * container parse, not just byte arithmetic. Runs partition-local
     * like every codec-seam stage. */
-  def asWavMedia(docs: DataFrame): Dataset[MediaItem] = {
+  def asWavMedia(docs: DataFrame): Dataset[MediaItem] =
+    wrapDocs(docs, "audio/wav")(bytes =>
+      pcmAudio(bytes, WavCodec.encodePcm16(pcm16Of(bytes), WavSampleRate)))
+
+  /** The shared skeleton of the document→container wraps: every
+    * non-empty doc's UTF-8 bytes go through `encode` partition-locally
+    * (one call per item inside `mapPartitions`, like every codec-seam
+    * stage) and come out as a [[MediaItem]] of the given `mime`.
+    * `encode` returns the payload with its (width, height, durationMs)
+    * geometry. */
+  private def wrapDocs(docs: DataFrame, mime: String)(
+      encode: Array[Byte] => (Array[Byte], Int, Int, Long))
+      : Dataset[MediaItem] = {
     import docs.sparkSession.implicits._
     docs
       .filter($"text".isNotNull && length($"text") > 0)
@@ -232,17 +244,27 @@ object Multimodal {
       .as[(Long, String, String)]
       .mapPartitions(_.map { case (id, text, source) =>
         val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val samples = new Array[Int](bytes.length)
-        var i = 0
-        while (i < bytes.length) {
-          samples(i) = ((bytes(i) & 0xFF) - 128) * 256
-          i += 1
-        }
-        val payload = WavCodec.encodePcm16(samples, WavSampleRate)
-        MediaItem(id, payload, "audio/wav", source, 0, 0,
-          samples.length * 1000L / WavSampleRate)
+        val (payload, width, height, durationMs) = encode(bytes)
+        MediaItem(id, payload, mime, source, width, height, durationMs)
       })
   }
+
+  /** The doc bytes as byte-centered PCM16 samples: (byte − 128) · 256. */
+  private def pcm16Of(bytes: Array[Byte]): Array[Int] = {
+    val samples = new Array[Int](bytes.length)
+    var i = 0
+    while (i < bytes.length) {
+      samples(i) = ((bytes(i) & 0xFF) - 128) * 256
+      i += 1
+    }
+    samples
+  }
+
+  /** An audio payload's geometry: no frame, the samples' duration at
+    * [[WavSampleRate]] (one sample per doc byte). */
+  private def pcmAudio(bytes: Array[Byte], payload: Array[Byte])
+      : (Array[Byte], Int, Int, Long) =
+    (payload, 0, 0, bytes.length * 1000L / WavSampleRate)
 
   /** Wrap the documents table as REAL COMPRESSED audio: the same PCM16
     * samples as [[asWavMedia]], companded through the genuine G.711
@@ -252,25 +274,9 @@ object Multimodal {
     * one decisive difference: µ-law quantization is stateless integer
     * arithmetic, so unlike JPEG the whole lossy round trip replays in
     * SQL and the family keeps hard oracles. */
-  def asUlawMedia(docs: DataFrame): Dataset[MediaItem] = {
-    import docs.sparkSession.implicits._
-    docs
-      .filter($"text".isNotNull && length($"text") > 0)
-      .select($"doc_id", $"text", $"source")
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, text, source) =>
-        val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val samples = new Array[Int](bytes.length)
-        var i = 0
-        while (i < bytes.length) {
-          samples(i) = ((bytes(i) & 0xFF) - 128) * 256
-          i += 1
-        }
-        val payload = WavCodec.encodeUlaw(samples, WavSampleRate)
-        MediaItem(id, payload, "audio/mulaw", source, 0, 0,
-          samples.length * 1000L / WavSampleRate)
-      })
-  }
+  def asUlawMedia(docs: DataFrame): Dataset[MediaItem] =
+    wrapDocs(docs, "audio/mulaw")(bytes =>
+      pcmAudio(bytes, WavCodec.encodeUlaw(pcm16Of(bytes), WavSampleRate)))
 
   /** Per-item features THROUGH THE REAL DECODER: [[WavCodec.decode]]
     * runs the genuine RIFF chunk scan + PCM16LE extraction inside the
@@ -312,19 +318,16 @@ object Multimodal {
     * genuine bottom-up 24-bpp BMP container ([[BmpCodec.encodeGray24]])
     * — an image viewer would open the payloads. [[asWavMedia]]'s image
     * sibling. */
-  def asBmpMedia(docs: DataFrame): Dataset[MediaItem] = {
-    import docs.sparkSession.implicits._
-    docs
-      .filter($"text".isNotNull && length($"text") > 0)
-      .select($"doc_id", $"text", $"source")
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, text, source) =>
-        val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val payload = BmpCodec.encodeGray24(bytes, BmpWidth)
-        val h = math.max(1, (bytes.length + BmpWidth - 1) / BmpWidth)
-        MediaItem(id, payload, "image/bmp", source, BmpWidth, h, 0L)
-      })
-  }
+  def asBmpMedia(docs: DataFrame): Dataset[MediaItem] =
+    wrapDocs(docs, "image/bmp")(gridImage(BmpCodec.encodeGray24))
+
+  /** An image wrap's encode: the doc bytes as gray pixels on the
+    * [[BmpWidth]]-wide grid (as many rows as they fill, at least one)
+    * through the container encoder `enc`. */
+  private def gridImage(enc: (Array[Byte], Int) => Array[Byte])
+      : Array[Byte] => (Array[Byte], Int, Int, Long) = bytes =>
+    (enc(bytes, BmpWidth), BmpWidth,
+      math.max(1, (bytes.length + BmpWidth - 1) / BmpWidth), 0L)
 
   /** Per-item features THROUGH THE REAL IMAGE DECODER: [[BmpCodec
     * .decode]] runs the genuine header parse + bottom-up padded-row
@@ -354,36 +357,14 @@ object Multimodal {
     * decoded luma — through a REAL inflate + unfilter — equals the BMP
     * family's plane bit-exactly and the whole PNG query family rides
     * the same hard DuckDB oracle CTEs. */
-  def asPngMedia(docs: DataFrame): Dataset[MediaItem] = {
-    import docs.sparkSession.implicits._
-    docs
-      .filter($"text".isNotNull && length($"text") > 0)
-      .select($"doc_id", $"text", $"source")
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, text, source) =>
-        val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val payload = ImageIoCodec.encodeGrayPng(bytes, BmpWidth)
-        val h = math.max(1, (bytes.length + BmpWidth - 1) / BmpWidth)
-        MediaItem(id, payload, "image/png", source, BmpWidth, h, 0L)
-      })
-  }
+  def asPngMedia(docs: DataFrame): Dataset[MediaItem] =
+    wrapDocs(docs, "image/png")(gridImage(ImageIoCodec.encodeGrayPng))
 
   /** Wrap the documents table as REAL JPEG images — the same grid
     * through the real LOSSY pipeline ([[ImageIoCodec.encodeGrayJpeg]]
     * at quality 1.0, the ≤1-luma-error certification point). */
-  def asJpegMedia(docs: DataFrame): Dataset[MediaItem] = {
-    import docs.sparkSession.implicits._
-    docs
-      .filter($"text".isNotNull && length($"text") > 0)
-      .select($"doc_id", $"text", $"source")
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, text, source) =>
-        val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val payload = ImageIoCodec.encodeGrayJpeg(bytes, BmpWidth)
-        val h = math.max(1, (bytes.length + BmpWidth - 1) / BmpWidth)
-        MediaItem(id, payload, "image/jpeg", source, BmpWidth, h, 0L)
-      })
-  }
+  def asJpegMedia(docs: DataFrame): Dataset[MediaItem] =
+    wrapDocs(docs, "image/jpeg")(gridImage(ImageIoCodec.encodeGrayJpeg(_, _)))
 
   /** Per-item features THROUGH THE REAL PNG DECODER — a genuine
     * inflate + unfilter ([[ImageIoCodec.decodeGray]]) inside the
@@ -468,21 +449,18 @@ object Multimodal {
     * container ([[AviCodec.encodeGray24]]) — a video player would
     * accept the payloads. The third modality's ingest wrap, next to
     * [[asWavMedia]] and [[asBmpMedia]]. */
-  def asAviMedia(docs: DataFrame): Dataset[MediaItem] = {
-    import docs.sparkSession.implicits._
-    docs
-      .filter($"text".isNotNull && length($"text") > 0)
-      .select($"doc_id", $"text", $"source")
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, text, source) =>
-        val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val payload =
-          AviCodec.encodeGray24(bytes, AviFrameWidth, AviFrameRows)
-        val frameLen = AviFrameWidth * AviFrameRows
-        val nf = math.max(1, (bytes.length + frameLen - 1) / frameLen)
-        MediaItem(id, payload, "video/avi", source,
-          AviFrameWidth, AviFrameRows, nf * 100L) // 10 fps nominal
-      })
+  def asAviMedia(docs: DataFrame): Dataset[MediaItem] =
+    wrapDocs(docs, "video/avi")(gridVideo(AviCodec.encodeGray24))
+
+  /** A video wrap's encode: the doc bytes as [[AviFrameWidth]]×
+    * [[AviFrameRows]] gray frames (at least one) through the container
+    * encoder `enc`, at a nominal 10 fps. */
+  private def gridVideo(enc: (Array[Byte], Int, Int) => Array[Byte])
+      : Array[Byte] => (Array[Byte], Int, Int, Long) = { bytes =>
+    val frameLen = AviFrameWidth * AviFrameRows
+    val nf = math.max(1, (bytes.length + frameLen - 1) / frameLen)
+    (enc(bytes, AviFrameWidth, AviFrameRows), AviFrameWidth, AviFrameRows,
+      nf * 100L)
   }
 
   /** Wrap the documents table as REAL COMPRESSED video: the same
@@ -494,22 +472,9 @@ object Multimodal {
     * wrap is the design point: [[asAviMedia]] is the LOSSLESS twin
     * whose hash-matched queries anchor this family's rows-only faces,
     * the exact PNG↔JPEG relationship one modality over. */
-  def asMjpegAviMedia(docs: DataFrame): Dataset[MediaItem] = {
-    import docs.sparkSession.implicits._
-    docs
-      .filter($"text".isNotNull && length($"text") > 0)
-      .select($"doc_id", $"text", $"source")
-      .as[(Long, String, String)]
-      .mapPartitions(_.map { case (id, text, source) =>
-        val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val payload =
-          AviCodec.encodeMjpeg(bytes, AviFrameWidth, AviFrameRows)
-        val frameLen = AviFrameWidth * AviFrameRows
-        val nf = math.max(1, (bytes.length + frameLen - 1) / frameLen)
-        MediaItem(id, payload, "video/x-motion-jpeg", source,
-          AviFrameWidth, AviFrameRows, nf * 100L) // 10 fps nominal
-      })
-  }
+  def asMjpegAviMedia(docs: DataFrame): Dataset[MediaItem] =
+    wrapDocs(docs, "video/x-motion-jpeg")(
+      gridVideo(AviCodec.encodeMjpeg(_, _, _)))
 
   /** The MJPEG decode CERTIFICATION row — [[jpegCertify]] at the video
     * grain: encode the doc's frame grids through the real MJPEG writer,

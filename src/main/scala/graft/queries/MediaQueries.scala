@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.multimodal.Multimodal
@@ -189,23 +189,89 @@ object MediaQueries {
     * boundary in both engines. */
   private[graft] val UlawMaxHamming = WavMaxHamming
 
+  /** One banded media codec, declared once for its batch and live
+    * faces: the container `wrap` over a documents-shaped frame, the
+    * `sigs` kernel over the wrapped media (item_id, bands), the verdict
+    * ring, and the capPerKey tags of the pair buckets (`pairTag`) and
+    * of the history index (`histTag`). The tags name the
+    * `hot_buckets_<tag>` observed metrics that specs and the scale
+    * probes read, so they never change. */
+  case class BandCodec(wrap: DataFrame => Dataset[Multimodal.MediaItem],
+      sigs: DataFrame => DataFrame, maxHamming: Int,
+      pairTag: String, histTag: String)
+
+  /** One frame-signature (video) codec: the container `wrap`, the
+    * capPerKey tags, and the fan-out's within-group matched count
+    * (`withinMatched`, over the `len` column the md5 collapse carries).
+    * Every frame codec signs its decoded frames through
+    * [[Multimodal.aviFrameSigs]]. */
+  case class FrameCodec(wrap: DataFrame => Dataset[Multimodal.MediaItem],
+      pairTag: String, histTag: String, withinMatched: Column, len: Column)
+
+  /** The media codec table. Phash and Audio are the byte-grid stand-ins
+    * over the raw document bytes; the rest wrap real containers and
+    * decode through real parsers. PNG rides the BMP ring (lossless over
+    * the same grid). Audio has no batch incremental, so its `histTag`
+    * names only a live index. */
+  val Phash = BandCodec(Multimodal.asMedia, sigsOf, PhashMaxHamming,
+    "media_phash", "media_hist")
+  val Audio = BandCodec(Multimodal.asMedia, audioSigsOf, AudioMaxHamming,
+    "media_audio", "media_audio_hist")
+  val Wav = BandCodec(Multimodal.asWavMedia, wavSigsOf, WavMaxHamming,
+    "media_wav", "media_wav_hist")
+  val Bmp = BandCodec(Multimodal.asBmpMedia, bmpSigsOf, BmpMaxHamming,
+    "media_bmp", "media_bmp_hist")
+  val Png = BandCodec(Multimodal.asPngMedia, pngSigsOf, BmpMaxHamming,
+    "media_png", "media_png_hist")
+  val Jpeg = BandCodec(Multimodal.asJpegMedia, jpegSigsOf, JpegMaxHamming,
+    "media_jpeg", "media_jpeg_hist")
+  val Ulaw = BandCodec(Multimodal.asUlawMedia, wavSigsOf, UlawMaxHamming,
+    "media_ulaw", "media_ulaw_hist")
+  // within-group matched recovers the sampled-frame count from the
+  // container's nominal timing (durationMs = frames · 100 at 10 fps)
+  private val aviWithin =
+    expr(s"((len div 100) + ${VideoEveryNth - 1}) div $VideoEveryNth")
+  val Avi = FrameCodec(Multimodal.asAviMedia, "media_avi", "media_avi_hist",
+    aviWithin, col("durationMs"))
+  val Mjpeg = FrameCodec(Multimodal.asMjpegAviMedia, "media_avi_mjpeg",
+    "media_avi_mjpeg_hist", aviWithin, col("durationMs"))
+
+  /** The capped band-bucket history index (band_idx, band_val, h_bands,
+    * hist_id) over a signature frame — [[bandIncremental]]'s history
+    * side and, cached, the live [[graft.streaming.DocStream
+    * .prepareMediaIndex]]. */
+  private[graft] def bandIndex(sigs: DataFrame, capTag: String): DataFrame =
+    DedupQueries.capPerKey(bandRows(sigs), capTag,
+        col("band_idx"), col("band_val"))
+      .select(col("band_idx"), col("band_val"), col("bands").as("h_bands"),
+        col("doc_id").as("hist_id"))
+
+  /** The capped (frame_idx, sig) history index (frame_idx, sig,
+    * hist_id) over a frame-signature frame — [[frameIncremental]]'s
+    * history side and, cached, the live [[graft.streaming.DocStream
+    * .prepareFrameIndex]]. */
+  private[graft] def frameIndex(frames: DataFrame, capTag: String): DataFrame =
+    DedupQueries.capPerKey(
+        frames.select(col("item_id").as("doc_id"), col("frame_idx"),
+          col("sig")),
+        capTag, col("frame_idx"), col("sig"))
+      .select(col("frame_idx"), col("sig"), col("doc_id").as("hist_id"))
+
   /** The shared banded near-dup device, signature-agnostic: collapse
     * byte-identical payloads to md5 representatives (identical bytes =>
     * identical signature — one representative carries the group),
-    * fingerprint the representatives through `sigsFn`, pair via shared
-    * 16-bit band buckets (capPerKey-bounded, never all-pairs), verify
-    * candidates by exact Hamming distance over the full signature
-    * carried through the bucket structs, and fan verdicts back out to
-    * members. q_media_phash_dedup and q_media_audio_dedup are this one
-    * lineage under two codec kernels — the multimodal claim ("swap the
-    * decoder, keep the pipeline") as shared code instead of prose. */
+    * fingerprint the representatives through the codec's `sigs`, pair
+    * via shared 16-bit band buckets (capPerKey-bounded under the
+    * codec's `pairTag`, never all-pairs), verify candidates by exact
+    * Hamming distance over the full signature carried through the
+    * bucket structs, and fan verdicts back out to members. Every banded
+    * dedup query is this one lineage under its codec — the multimodal
+    * claim ("swap the decoder, keep the pipeline") as shared code
+    * instead of prose. */
   private def bandNearDup(s: SparkSession, dir: String,
-      sigsFn: DataFrame => DataFrame, capTag: String,
-      maxHamming: Int,
-      mediaOf: (SparkSession, String) => DataFrame =
-        (s, dir) => Multimodal.documentsAsMedia(s, dir).toDF()): DataFrame = {
+      c: BandCodec): DataFrame = {
     import s.implicits._
-    val media = mediaOf(s, dir)
+    val media = c.wrap(Tables.table(s, dir, "documents")).toDF()
       .filter(length($"payload") > 0)
     val grouped = DedupQueries.capPerKey(
         media.select($"item_id".as("doc_id"), md5($"payload").as("fp")),
@@ -214,9 +280,9 @@ object MediaQueries {
       .agg(min($"doc_id").as("rep_id"), collect_list($"doc_id").as("ids"))
     val reps = media
       .join(grouped.select($"rep_id".as("item_id")), Seq("item_id"))
-    val banded = bandRows(sigsFn(reps))
+    val banded = bandRows(c.sigs(reps))
     val repPairs = DedupQueries.capPerKey(
-        banded, capTag, $"band_idx", $"band_val")
+        banded, c.pairTag, $"band_idx", $"band_val")
       .groupBy($"band_idx", $"band_val")
       .agg(collect_list(struct($"doc_id", $"bands")).as("xs"))
       .filter(size($"xs") > 1)
@@ -226,7 +292,7 @@ object MediaQueries {
       .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"),
         hammingCol($"a.bands", $"b.bands").as("hamming"))
       .distinct()
-      .filter($"hamming" <= maxHamming)
+      .filter($"hamming" <= c.maxHamming)
     DedupQueries.fanOut(repPairs, grouped, "hamming", lit(0L))
       .select($"doc_a".as("item_a"), $"doc_b".as("item_b"), $"hamming")
       .orderBy("item_a", "item_b")
@@ -234,29 +300,23 @@ object MediaQueries {
 
   /** The shared ingest-time near-dup device, signature-agnostic (the
     * [[bandNearDup]] discipline one shape over): history = items with
-    * item_id % 10 ≠ 0, banded and capPerKey-bounded under `capTag`;
-    * each arrival (item_id % 10 = 0) is judged INDEPENDENTLY against
-    * the history index — its 4 band rows equi-join the buckets, exact
-    * Hamming verifies, and a distinct-collapse + anti-join emits the
-    * admitted set. q_media_phash_incremental and
-    * q_media_wav_incremental are this one lineage under two codec
-    * kernels. */
+    * item_id % 10 ≠ 0, the codec's [[bandIndex]]; each arrival
+    * (item_id % 10 = 0) is judged INDEPENDENTLY against the history
+    * index — its 4 band rows equi-join the buckets, exact Hamming
+    * verifies, and a distinct-collapse + anti-join emits the admitted
+    * set. Every banded incremental query is this one lineage under its
+    * codec. */
   private def bandIncremental(s: SparkSession, dir: String,
-      sigsFn: DataFrame => DataFrame, capTag: String, maxHamming: Int,
-      mediaOf: (SparkSession, String) => DataFrame =
-        (s, dir) => Multimodal.documentsAsMedia(s, dir).toDF()): DataFrame = {
+      c: BandCodec): DataFrame = {
     import s.implicits._
-    val media = mediaOf(s, dir).filter(length($"payload") > 0)
-    val sigs = sigsFn(media)
-    val hist = DedupQueries.capPerKey(
-        bandRows(sigs.filter($"item_id" % 10 =!= 0)),
-        capTag, $"band_idx", $"band_val")
-      .select($"band_idx", $"band_val", $"bands".as("h_bands"),
-        $"doc_id".as("hist_id"))
+    val media = c.wrap(Tables.table(s, dir, "documents")).toDF()
+      .filter(length($"payload") > 0)
+    val sigs = c.sigs(media)
+    val hist = bandIndex(sigs.filter($"item_id" % 10 =!= 0), c.histTag)
     val inc = sigs.filter($"item_id" % 10 === 0)
     val flagged = bandRows(inc)
       .join(hist, Seq("band_idx", "band_val"))
-      .filter(hammingCol($"bands", $"h_bands") <= maxHamming)
+      .filter(hammingCol($"bands", $"h_bands") <= c.maxHamming)
       .select($"doc_id".as("item_id")).distinct()
     inc.select($"item_id")
       .join(flagged, Seq("item_id"), "left_anti")
@@ -273,17 +333,13 @@ object MediaQueries {
     * ≥ [[VideoMinMatched]] matches, and fan verdicts back out with
     * within-group matched = the group's own sampled-frame count
     * (`withinMatched`, computed over the carried `len` column).
-    * q_media_video_dedup (synthetic byte blocks) and q_media_avi_dedup
-    * (real AVI decode) are this one lineage under two codecs. */
-  private def frameSigNearDup(s: SparkSession, dir: String,
-      mediaOf: (SparkSession, String) => DataFrame,
-      framesOf: DataFrame => DataFrame,
-      capTag: String,
-      withinMatched: org.apache.spark.sql.Column,
-      lenCol: org.apache.spark.sql.Column = null): DataFrame = {
-    import s.implicits._
-    val media = mediaOf(s, dir)
-    val len = Option(lenCol).getOrElse(length($"payload"))
+    * q_media_video_dedup (synthetic byte blocks) and the frame codecs'
+    * dedup queries ([[frameSigNearDup]], real AVI decode) are this one
+    * lineage. */
+  private def framePairs(media: DataFrame,
+      framesOf: DataFrame => DataFrame, capTag: String,
+      withinMatched: Column, len: Column): DataFrame = {
+    import media.sparkSession.implicits._
     val grouped = DedupQueries.capPerKey(
         media.select($"item_id".as("doc_id"), md5($"payload").as("fp"),
           len.as("len")),
@@ -334,28 +390,33 @@ object MediaQueries {
       .orderBy("item_a", "item_b")
   }
 
-  /** The frame-grain incremental admit, codec-agnostic — the named
-    * queries fix (mediaOf, capTag); admission = no single history item
+  /** A frame codec's dedup: [[framePairs]] over its wrapped containers,
+    * frames signed by [[Multimodal.aviFrameSigs]]. */
+  private def frameSigNearDup(s: SparkSession, dir: String,
+      c: FrameCodec): DataFrame = {
+    import s.implicits._
+    framePairs(c.wrap(Tables.table(s, dir, "documents")).toDF(),
+      media => Multimodal.aviFrameSigs(
+        media.as[Multimodal.MediaItem], VideoEveryNth).toDF(),
+      c.pairTag, c.withinMatched, c.len)
+  }
+
+  /** The frame-grain incremental admit under a frame codec: history =
+    * the codec's [[frameIndex]]; admission = no single history item
     * shares >= [[VideoMinMatched]] temporally-aligned EXACT frame-sig
     * collisions (what a capped (frame_idx, sig) index answers with
     * bucket-bounded per-arrival work). */
   private def frameIncremental(s: SparkSession, dir: String,
-      mediaOf: DataFrame => org.apache.spark.sql.Dataset[
-        Multimodal.MediaItem],
-      capTag: String): DataFrame = {
+      c: FrameCodec): DataFrame = {
     import s.implicits._
     // localCheckpoint (r19): same three-consumer decode-fan-out as
-    // [[frameSigNearDup]] — history slice, increment slice, and the
+    // [[framePairs]] — history slice, increment slice, and the
     // admit join would each re-run the frame decode without it
     val frames = Multimodal.aviFrameSigs(
-        mediaOf(Tables.table(s, dir, "documents")),
+        c.wrap(Tables.table(s, dir, "documents")),
         VideoEveryNth).toDF()
       .localCheckpoint()
-    val hist = DedupQueries.capPerKey(
-        frames.filter($"item_id" % 10 =!= 0)
-          .select($"item_id".as("doc_id"), $"frame_idx", $"sig"),
-        capTag, $"frame_idx", $"sig")
-      .select($"frame_idx", $"sig", $"doc_id".as("hist_id"))
+    val hist = frameIndex(frames.filter($"item_id" % 10 =!= 0), c.histTag)
     val inc = frames.filter($"item_id" % 10 === 0)
     val flagged = inc
       .join(hist, Seq("frame_idx", "sig"))
@@ -389,8 +450,7 @@ object MediaQueries {
     // arithmetic, so the DuckDB oracle replays decode, signature,
     // banding, pairing, AND verification bit-for-bit — a HARD
     // hash-match, not a rows-only concession.
-    "q_media_phash_dedup" -> ((s, dir) =>
-      bandNearDup(s, dir, sigsOf, "media_phash", PhashMaxHamming)),
+    "q_media_phash_dedup" -> ((s, dir) => bandNearDup(s, dir, Phash)),
 
     // Audio near-dup over the MEDIA column: the Haitsma-Kalker frame-
     // energy fingerprint (bit f = energy of frame f+1 > energy of frame
@@ -401,8 +461,7 @@ object MediaQueries {
     // the signature is exact integer arithmetic (ord² frame energies),
     // so DuckDB replays decode, fingerprint, banding, pairing, and
     // Hamming verification bit-for-bit.
-    "q_media_audio_dedup" -> ((s, dir) =>
-      bandNearDup(s, dir, audioSigsOf, "media_audio", AudioMaxHamming)),
+    "q_media_audio_dedup" -> ((s, dir) => bandNearDup(s, dir, Audio)),
 
     // The REAL-DECODER honesty check (the r17 verdict's "What's missing
     // #1"): documents are wrapped into genuine canonical RIFF/WAVE
@@ -465,10 +524,7 @@ object MediaQueries {
     // capPerKey-bounded candidates (tag media_bmp), exact Hamming
     // verify, fan-out. Hard oracle: bmpBandCtes + the verbatim serve
     // fragment.
-    "q_media_bmp_dedup" -> ((s, dir) =>
-      bandNearDup(s, dir, bmpSigsOf, "media_bmp", BmpMaxHamming,
-        (s, d) => Multimodal.asBmpMedia(Tables.table(s, d, "documents"))
-          .toDF())),
+    "q_media_bmp_dedup" -> ((s, dir) => bandNearDup(s, dir, Bmp)),
 
     // Near-dup detection THROUGH the real decoder: the identical
     // collapse/band/cap/verify/fan-out device as the image and audio
@@ -479,10 +535,7 @@ object MediaQueries {
     // than the synthetic stand-in. The md5 collapse runs over the REAL
     // container bytes. Hard oracle end to end: decode replay + the
     // shared pairing SQL fragment.
-    "q_media_wav_dedup" -> ((s, dir) =>
-      bandNearDup(s, dir, wavSigsOf, "media_wav", WavMaxHamming,
-        (s, d) => Multimodal.asWavMedia(Tables.table(s, d, "documents"))
-          .toDF())),
+    "q_media_wav_dedup" -> ((s, dir) => bandNearDup(s, dir, Wav)),
 
     // Video near-dup via frame-signature matching: sample every 2nd
     // decoded frame (FakeCodec.sampleFrames — the r8–r14 stub made
@@ -500,23 +553,20 @@ object MediaQueries {
     // buckets are capped; the verify joins back to the per-item frame
     // sigs keyed by doc — two hash joins on the capped pair set, never
     // all-pairs. The whole lineage is integer arithmetic — hard oracle.
-    "q_media_video_dedup" -> ((s, dir) => frameSigNearDup(s, dir,
-      (s, d) => {
-        import s.implicits._
-        Multimodal.documentsAsMedia(s, d).toDF()
-          .filter(length($"payload") > 0)
-      },
-      media => {
-        import media.sparkSession.implicits._
-        Multimodal.videoFrameSigs(
-          media.as[Multimodal.MediaItem], VideoEveryNth).toDF()
-      },
-      "media_video",
-      // within-group matched = the group's own sampled-frame count:
-      // ceil(ceil(len/64)/2) aligned frames, each at Hamming 0
-      expr(s"(((len + ${Multimodal.FakeCodec.VideoFrameBytes - 1}) div " +
-        s"${Multimodal.FakeCodec.VideoFrameBytes}) + " +
-        s"${VideoEveryNth - 1}) div $VideoEveryNth"))),
+    "q_media_video_dedup" -> ((s, dir) => {
+      import s.implicits._
+      framePairs(Multimodal.documentsAsMedia(s, dir).toDF()
+          .filter(length($"payload") > 0),
+        media => Multimodal.videoFrameSigs(
+          media.as[Multimodal.MediaItem], VideoEveryNth).toDF(),
+        "media_video",
+        // within-group matched = the group's own sampled-frame count:
+        // ceil(ceil(len/64)/2) aligned frames, each at Hamming 0
+        expr(s"(((len + ${Multimodal.FakeCodec.VideoFrameBytes - 1}) div " +
+          s"${Multimodal.FakeCodec.VideoFrameBytes}) + " +
+          s"${VideoEveryNth - 1}) div $VideoEveryNth"),
+        length($"payload"))
+    }),
 
     // The REAL-DECODE video near-dup — the third modality completes:
     // documents wrapped into genuine uncompressed 24-bpp RIFF/AVI
@@ -534,17 +584,7 @@ object MediaQueries {
     // nominal timing (durationMs = frames · 100 at the encoder's
     // 10 fps). Hard oracle end to end: a chunk-scan, row-order, or
     // channel bug in the real parser is a hash mismatch.
-    "q_media_avi_dedup" -> ((s, dir) => frameSigNearDup(s, dir,
-      (s, d) => Multimodal.asAviMedia(Tables.table(s, d, "documents"))
-        .toDF(),
-      media => {
-        import media.sparkSession.implicits._
-        Multimodal.aviFrameSigs(
-          media.as[Multimodal.MediaItem], VideoEveryNth).toDF()
-      },
-      "media_avi",
-      expr(s"((len div 100) + ${VideoEveryNth - 1}) div $VideoEveryNth"),
-      col("durationMs"))),
+    "q_media_avi_dedup" -> ((s, dir) => frameSigNearDup(s, dir, Avi)),
 
     // COMPRESSED-frame video near-dup — the sixth signature under the
     // one pairing device, and the codec shape real crawl video ships:
@@ -567,17 +607,7 @@ object MediaQueries {
     // ±43 luma error (per-frame Hamming 3-4), so recovery there needs
     // coarser frames, not a wider ring. Twin-verdict agreement on the
     // planted corpus completes the anchors.
-    "q_media_avi_mjpeg_dedup" -> ((s, dir) => frameSigNearDup(s, dir,
-      (s, d) => Multimodal.asMjpegAviMedia(Tables.table(s, d, "documents"))
-        .toDF(),
-      media => {
-        import media.sparkSession.implicits._
-        Multimodal.aviFrameSigs(
-          media.as[Multimodal.MediaItem], VideoEveryNth).toDF()
-      },
-      "media_avi_mjpeg",
-      expr(s"((len div 100) + ${VideoEveryNth - 1}) div $VideoEveryNth"),
-      col("durationMs"))),
+    "q_media_avi_mjpeg_dedup" -> ((s, dir) => frameSigNearDup(s, dir, Mjpeg)),
 
     // The MJPEG decode CERTIFICATION — the lossy-codec honesty device
     // at the video grain (q_media_jpeg_decode's container sibling):
@@ -604,7 +634,7 @@ object MediaQueries {
     // the documents family's increment convention) is ADMITTED iff no
     // history item shares a band bucket within Hamming <= 12. Each
     // arrival is judged independently (no within-increment pairing), so
-    // the plan is the same stream-static shape DocStream.mediaDedup
+    // the plan is the same stream-static shape DocStream.mediaDedup(…, Phash)
     // runs live (MediaStreamSpec pins them equal on a replayed split).
     //
     // Scale shape: the history band index is capPerKey-bounded (tag
@@ -616,20 +646,16 @@ object MediaQueries {
     // arithmetic — the oracle replays decode, banding, candidate
     // generation, Hamming verification, and the NOT-EXISTS admit rule
     // bit-for-bit (uncapped, the standard cap contract).
-    "q_media_phash_incremental" -> ((s, dir) =>
-      bandIncremental(s, dir, sigsOf, "media_hist", PhashMaxHamming)),
+    "q_media_phash_incremental" -> ((s, dir) => bandIncremental(s, dir, Phash)),
 
     // The ingest-time face THROUGH the real decoder — the incremental
     // device under wav signatures: an arriving real WAV container is
     // admitted iff no history item shares a band bucket within
     // [[WavMaxHamming]]. Same banded-history scale shape as the phash
     // face (tag media_wav_hist), same hard-oracle argument with the
-    // wav decode chain; DocStream.mediaDedupWav is the live twin
+    // wav decode chain; DocStream.mediaDedup(…, Wav) is the live twin
     // (MediaStreamSpec pins them equal on a replayed split).
-    "q_media_wav_incremental" -> ((s, dir) =>
-      bandIncremental(s, dir, wavSigsOf, "media_wav_hist", WavMaxHamming,
-        (s, d) => Multimodal.asWavMedia(Tables.table(s, d, "documents"))
-          .toDF())),
+    "q_media_wav_incremental" -> ((s, dir) => bandIncremental(s, dir, Wav)),
 
     // The VIDEO decode-honesty check — q_media_wav_decode /
     // q_media_bmp_decode's sibling for the third modality: per sampled
@@ -656,14 +682,12 @@ object MediaQueries {
     // with bucket-bounded work per arrival — the capPerKey tag
     // media_avi_hist bounds a viral clip's re-uploads exactly like the
     // band indexes — while Hamming tolerance remains the batch dedup's
-    // offline semantics. DocStream.mediaDedupAvi is the live twin
+    // offline semantics. DocStream.frameDedup(…, Avi) is the live twin
     // (MediaStreamSpec pins the admitted sets equal on a replayed
     // split, zero state rows). Oracle replays decode, padded-grid
     // signatures, aligned collision counting, and the NOT-EXISTS admit
     // rule (uncapped, the standard cap contract).
-    "q_media_avi_incremental" -> ((s, dir) =>
-      frameIncremental(s, dir,
-        d => Multimodal.asAviMedia(d), "media_avi_hist")),
+    "q_media_avi_incremental" -> ((s, dir) => frameIncremental(s, dir, Avi)),
 
     // The COMPRESSED-video ingest face — the frame-signature admit
     // rule through the real MJPEG decode chain (tag
@@ -672,12 +696,11 @@ object MediaQueries {
     // dedup face (no SQL replay of per-frame DCT exists), same anchor
     // set: q_media_avi_incremental is the hash-matched lossless twin
     // of the identical admit pipeline, the certification pins the
-    // decode, and DocStream.mediaDedupMjpeg is the live twin
+    // decode, and DocStream.frameDedup(…, Mjpeg) is the live twin
     // (MediaStreamSpec pins the admitted sets equal on a replayed
     // split, zero state rows).
-    "q_media_avi_mjpeg_incremental" -> ((s, dir) =>
-      frameIncremental(s, dir,
-        d => Multimodal.asMjpegAviMedia(d), "media_avi_mjpeg_hist")),
+    "q_media_avi_mjpeg_incremental" ->
+      ((s, dir) => frameIncremental(s, dir, Mjpeg)),
 
     // The image-side ingest face, closing the media symmetry (every
     // real decoder now has batch dedup + incremental admit + live
@@ -685,12 +708,9 @@ object MediaQueries {
     // item shares a band bucket within [[BmpMaxHamming]] on the
     // padded-grid decoded-luma aHash. Same banded-history scale shape
     // (tag media_bmp_hist), same hard-oracle argument with the bmp
-    // decode chain; DocStream.mediaDedupBmp is the live twin
+    // decode chain; DocStream.mediaDedup(…, Bmp) is the live twin
     // (MediaStreamSpec pins them equal on a replayed split).
-    "q_media_bmp_incremental" -> ((s, dir) =>
-      bandIncremental(s, dir, bmpSigsOf, "media_bmp_hist", BmpMaxHamming,
-        (s, d) => Multimodal.asBmpMedia(Tables.table(s, d, "documents"))
-          .toDF())),
+    "q_media_bmp_incremental" -> ((s, dir) => bandIncremental(s, dir, Bmp)),
 
     // The COMPRESSED-image real-decoder honesty check: documents wrapped
     // as genuine PNG containers (Multimodal.asPngMedia — the JDK's real
@@ -723,20 +743,14 @@ object MediaQueries {
     // collapse groups by TEXT on the oracle side, which is valid
     // because the PNG encoder is deterministic and injective in the
     // text bytes — same argument as the WAV/BMP collapses.
-    "q_media_png_dedup" -> ((s, dir) =>
-      bandNearDup(s, dir, pngSigsOf, "media_png", BmpMaxHamming,
-        (s, d) => Multimodal.asPngMedia(Tables.table(s, d, "documents"))
-          .toDF())),
+    "q_media_png_dedup" -> ((s, dir) => bandNearDup(s, dir, Png)),
 
     // The compressed-image ingest face — the incremental admit rule
     // through the real PNG decode chain (tag media_png_hist), same
     // banded-history scale shape and hard-oracle argument as the BMP
-    // face; DocStream.mediaDedupPng is the live twin (MediaStreamSpec
+    // face; DocStream.mediaDedup(…, Png) is the live twin (MediaStreamSpec
     // pins them equal on a replayed split).
-    "q_media_png_incremental" -> ((s, dir) =>
-      bandIncremental(s, dir, pngSigsOf, "media_png_hist", BmpMaxHamming,
-        (s, d) => Multimodal.asPngMedia(Tables.table(s, d, "documents"))
-          .toDF())),
+    "q_media_png_incremental" -> ((s, dir) => bandIncremental(s, dir, Png)),
 
     // The COMPRESSED-audio real-decoder honesty check: documents
     // companded through the genuine G.711 µ-law encoder into format-7
@@ -782,10 +796,7 @@ object MediaQueries {
     // BY SEMANTICS. The linear-output face for such corpora is
     // q_media_ulaw_sig_dedup below — it, not this, carries the hostile
     // probe row.
-    "q_media_ulaw_dedup" -> ((s, dir) =>
-      bandNearDup(s, dir, wavSigsOf, "media_ulaw", UlawMaxHamming,
-        (s, d) => Multimodal.asUlawMedia(Tables.table(s, d, "documents"))
-          .toDF())),
+    "q_media_ulaw_dedup" -> ((s, dir) => bandNearDup(s, dir, Ulaw)),
 
     // The LINEAR-OUTPUT compressed-audio dedup — exact dedup at the
     // QUANTIZED-SIGNATURE grain: group items by full 4-band signature
@@ -815,12 +826,8 @@ object MediaQueries {
 
     // The compressed-audio ingest face (tag media_ulaw_hist), same
     // banded-history scale shape, hard oracle;
-    // DocStream.mediaDedupUlaw is the live twin.
-    "q_media_ulaw_incremental" -> ((s, dir) =>
-      bandIncremental(s, dir, wavSigsOf, "media_ulaw_hist",
-        UlawMaxHamming,
-        (s, d) => Multimodal.asUlawMedia(Tables.table(s, d, "documents"))
-          .toDF())),
+    // DocStream.mediaDedup(…, Ulaw) is the live twin.
+    "q_media_ulaw_incremental" -> ((s, dir) => bandIncremental(s, dir, Ulaw)),
 
     // The LOSSY-codec decode certification — the honesty device for a
     // codec no SQL engine can replay (JPEG's DCT+quantization): each doc
@@ -850,19 +857,12 @@ object MediaQueries {
     // planted re-encode-variant fixture at its measured band distance —
     // the case a JPEG dedup exists for (the same image re-saved at a
     // different quality) — plus batch/stream agreement via
-    // DocStream.mediaDedupJpeg (MediaStreamSpec).
-    "q_media_jpeg_dedup" -> ((s, dir) =>
-      bandNearDup(s, dir, jpegSigsOf, "media_jpeg", JpegMaxHamming,
-        (s, d) => Multimodal.asJpegMedia(Tables.table(s, d, "documents"))
-          .toDF())),
+    // DocStream.mediaDedup(…, Jpeg) (MediaStreamSpec).
+    "q_media_jpeg_dedup" -> ((s, dir) => bandNearDup(s, dir, Jpeg)),
 
     // The JPEG ingest face — rows-only like the dedup (same anchors);
-    // the live twin is DocStream.mediaDedupJpeg.
-    "q_media_jpeg_incremental" -> ((s, dir) =>
-      bandIncremental(s, dir, jpegSigsOf, "media_jpeg_hist",
-        JpegMaxHamming,
-        (s, d) => Multimodal.asJpegMedia(Tables.table(s, d, "documents"))
-          .toDF())),
+    // the live twin is DocStream.mediaDedup(…, Jpeg).
+    "q_media_jpeg_incremental" -> ((s, dir) => bandIncremental(s, dir, Jpeg)),
 
     // Per-item binary metadata: byte size + content digest over the
     // opaque payload column — the manifest row a media lake keeps per

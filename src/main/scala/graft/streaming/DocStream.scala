@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, GroupState, OutputMode}
 import org.apache.spark.sql.types._
-import graft.queries.CurationQueries
+import graft.queries.{CurationQueries, MediaQueries}
 
 /** Structured Streaming faces of the corpus-curation operators: the
   * ingestion-time twin of [[graft.queries.CurationQueries]]'s batch
@@ -1044,265 +1044,40 @@ object DocStream extends Serializable {
   case class MediaAdmit(item_id: Long, admitted: Boolean,
                         dup_of: Option[Long], hamming: Option[Long])
 
-  /** Build + cache the banded perceptual-hash history index
-    * `(band_idx, band_val, h_bands, hist_id)` ONCE for any number of
-    * [[mediaDedup]] stream setups — the q_media_phash_incremental
-    * history side verbatim (same capPerKey tag media_hist, so a viral
-    * image's thousand re-uploads cap at the bucket bound). At 100 TB:
-    * a band-bucketed materialized table, (band_idx, band_val) the
-    * partition key. */
-  def prepareMediaIndex(historyDocs: DataFrame): DataFrame =
-    prepareMediaIndexOf(historyDocs,
-      d => graft.multimodal.Multimodal.asMedia(d).toDF(),
-      graft.queries.MediaQueries.sigsOf, "media_hist")
-
-  /** The index builder signature-agnostic (the bandNearDup discipline):
-    * wrap the history as media via `mediaOf`, fingerprint via `sigsFn`,
-    * band + cap under `capTag`. The REAL-decoder face
-    * ([[prepareWavMediaIndex]]) is this under the wav codec. */
-  def prepareMediaIndexOf(historyDocs: DataFrame,
-      mediaOf: DataFrame => DataFrame,
-      sigsFn: DataFrame => DataFrame, capTag: String): DataFrame = {
-    import graft.queries.{DedupQueries, MediaQueries}
-    DedupQueries.capPerKey(
-        MediaQueries.bandRows(sigsFn(
-          mediaOf(historyDocs).filter(length(col("payload")) > 0))),
-        capTag, col("band_idx"), col("band_val"))
-      .select(col("band_idx"), col("band_val"),
-        col("bands").as("h_bands"), col("doc_id").as("hist_id"))
+  /** Build + cache a banded codec's history index `(band_idx, band_val,
+    * h_bands, hist_id)` ONCE for any number of [[mediaDedup]] stream
+    * setups — the codec's batch incremental history side verbatim
+    * ([[MediaQueries.bandIndex]] under the codec's history cap tag, so
+    * a viral item's thousand re-uploads cap at the bucket bound). At
+    * 100 TB: a band-bucketed materialized table, (band_idx, band_val)
+    * the partition key. */
+  def prepareMediaIndex(historyDocs: DataFrame,
+                        codec: MediaQueries.BandCodec): DataFrame =
+    MediaQueries.bandIndex(codec.sigs(codec.wrap(historyDocs).toDF()
+        .filter(length(col("payload")) > 0)), codec.histTag)
       .cache()
-  }
 
-  /** The wav history index: REAL containers, REAL parse, the batch
-    * q_media_wav_incremental's history side verbatim (tag
-    * media_wav_hist). */
-  def prepareWavMediaIndex(historyDocs: DataFrame): DataFrame =
-    prepareMediaIndexOf(historyDocs,
-      d => graft.multimodal.Multimodal.asWavMedia(d).toDF(),
-      graft.queries.MediaQueries.wavSigsOf, "media_wav_hist")
-
-  /** Ingest-time perceptual media dedup, live — the stream twin of
-    * q_media_phash_incremental (MediaStreamSpec pins the admitted sets
-    * equal on a replayed split): each arriving payload decodes to its
-    * aHash signature through the SAME codec seam as the batch
-    * ([[graft.multimodal.Multimodal.asMedia]] → `perceptualSigs` inside
-    * a stateless mapPartitions — where a real image codec runs), its 4
-    * band rows equi-join the static banded history, Hamming verifies
-    * the full signature, and the verdict emits as flatMapGroupsWithState
-    * that NEVER writes state (an arrival's band rows all live in its
-    * own micro-batch, so the group fires once: state_rows stays 0 — the
-    * [[annSearch]] device). Rejections carry blame: the nearest history
-    * item (min Hamming, ties to the smallest id). */
+  /** Ingest-time perceptual media dedup, live — the stream twin of the
+    * codec's batch incremental (q_media_phash_incremental under
+    * [[MediaQueries.Phash]]; MediaStreamSpec pins the admitted sets
+    * equal on a replayed split for every codec): each arriving payload
+    * wraps into the codec's container and decodes to its signature
+    * through the SAME codec seam as the batch (a stateless
+    * mapPartitions — where a real codec runs), its 4 band rows
+    * equi-join the static banded history, Hamming verifies the full
+    * signature against the codec's ring, and the verdict emits as
+    * flatMapGroupsWithState that NEVER writes state (an arrival's band
+    * rows all live in its own micro-batch, so the group fires once:
+    * state_rows stays 0 — the [[annSearch]] device). Rejections carry
+    * blame: the nearest history item (min Hamming, ties to the
+    * smallest id). */
   def mediaDedup(spark: SparkSession, newDocs: DataFrame,
-                 histIndex: DataFrame): Dataset[MediaAdmit] =
-    mediaDedupOf(spark, newDocs, histIndex,
-      d => graft.multimodal.Multimodal.asMedia(d).toDF(),
-      graft.queries.MediaQueries.sigsOf,
-      graft.queries.MediaQueries.PhashMaxHamming)
-
-  /** The live face THROUGH the real WAV decoder: arrivals wrap into
-    * genuine RIFF containers and [[graft.multimodal.WavCodec.decode]]
-    * parses them inside the stateless decode pass — the stream twin of
-    * q_media_wav_incremental (MediaStreamSpec pins the admitted sets
-    * equal on a replayed split, zero state rows). */
-  def mediaDedupWav(spark: SparkSession, newDocs: DataFrame,
-                    histIndex: DataFrame): Dataset[MediaAdmit] =
-    mediaDedupOf(spark, newDocs, histIndex,
-      d => graft.multimodal.Multimodal.asWavMedia(d).toDF(),
-      graft.queries.MediaQueries.wavSigsOf,
-      graft.queries.MediaQueries.WavMaxHamming)
-
-  /** The bmp history index: real 24-bpp containers, real parse — the
-    * batch q_media_bmp_incremental's history side verbatim (tag
-    * media_bmp_hist). */
-  def prepareBmpMediaIndex(historyDocs: DataFrame): DataFrame =
-    prepareMediaIndexOf(historyDocs,
-      d => graft.multimodal.Multimodal.asBmpMedia(d).toDF(),
-      graft.queries.MediaQueries.bmpSigsOf, "media_bmp_hist")
-
-  /** The live face THROUGH the real BMP decoder — the image side of
-    * the media symmetry, the stream twin of q_media_bmp_incremental
-    * (MediaStreamSpec pins the admitted sets equal on a replayed
-    * split, zero state rows). */
-  def mediaDedupBmp(spark: SparkSession, newDocs: DataFrame,
-                    histIndex: DataFrame): Dataset[MediaAdmit] =
-    mediaDedupOf(spark, newDocs, histIndex,
-      d => graft.multimodal.Multimodal.asBmpMedia(d).toDF(),
-      graft.queries.MediaQueries.bmpSigsOf,
-      graft.queries.MediaQueries.BmpMaxHamming)
-
-  /** The µ-law history index: real COMPRESSED audio containers, real
-    * G.711 expansion — the batch q_media_ulaw_incremental's history
-    * side verbatim (tag media_ulaw_hist). */
-  def prepareUlawMediaIndex(historyDocs: DataFrame): DataFrame =
-    prepareMediaIndexOf(historyDocs,
-      d => graft.multimodal.Multimodal.asUlawMedia(d).toDF(),
-      graft.queries.MediaQueries.wavSigsOf, "media_ulaw_hist")
-
-  /** The live face THROUGH the real compressed-audio decoder — the
-    * stream twin of q_media_ulaw_incremental (MediaStreamSpec pins
-    * them equal on a replayed split, zero state rows). */
-  def mediaDedupUlaw(spark: SparkSession, newDocs: DataFrame,
-                     histIndex: DataFrame): Dataset[MediaAdmit] =
-    mediaDedupOf(spark, newDocs, histIndex,
-      d => graft.multimodal.Multimodal.asUlawMedia(d).toDF(),
-      graft.queries.MediaQueries.wavSigsOf,
-      graft.queries.MediaQueries.UlawMaxHamming)
-
-  /** The png history index: real compressed containers, real inflate —
-    * the batch q_media_png_incremental's history side verbatim (tag
-    * media_png_hist). */
-  def preparePngMediaIndex(historyDocs: DataFrame): DataFrame =
-    prepareMediaIndexOf(historyDocs,
-      d => graft.multimodal.Multimodal.asPngMedia(d).toDF(),
-      graft.queries.MediaQueries.pngSigsOf, "media_png_hist")
-
-  /** The live face THROUGH the real PNG decoder — the compressed-image
-    * side of the media symmetry, the stream twin of
-    * q_media_png_incremental (MediaStreamSpec pins the admitted sets
-    * equal on a replayed split, zero state rows). */
-  def mediaDedupPng(spark: SparkSession, newDocs: DataFrame,
-                    histIndex: DataFrame): Dataset[MediaAdmit] =
-    mediaDedupOf(spark, newDocs, histIndex,
-      d => graft.multimodal.Multimodal.asPngMedia(d).toDF(),
-      graft.queries.MediaQueries.pngSigsOf,
-      graft.queries.MediaQueries.BmpMaxHamming)
-
-  /** The jpeg history index — the LOSSY codec's ingest-time memory
-    * (tag media_jpeg_hist). */
-  def prepareJpegMediaIndex(historyDocs: DataFrame): DataFrame =
-    prepareMediaIndexOf(historyDocs,
-      d => graft.multimodal.Multimodal.asJpegMedia(d).toDF(),
-      graft.queries.MediaQueries.jpegSigsOf, "media_jpeg_hist")
-
-  /** The live face THROUGH the real JPEG decoder — the stream twin of
-    * q_media_jpeg_incremental at the [[graft.queries.MediaQueries
-    * .JpegMaxHamming]] ring (rows-only batch face; the stream/batch
-    * agreement pin in MediaStreamSpec is one of its anchors). */
-  def mediaDedupJpeg(spark: SparkSession, newDocs: DataFrame,
-                     histIndex: DataFrame): Dataset[MediaAdmit] =
-    mediaDedupOf(spark, newDocs, histIndex,
-      d => graft.multimodal.Multimodal.asJpegMedia(d).toDF(),
-      graft.queries.MediaQueries.jpegSigsOf,
-      graft.queries.MediaQueries.JpegMaxHamming)
-
-  /** One judged video arrival from [[mediaDedupAvi]] — rejections
-    * carry the blamed history item and its aligned-collision count. */
-  case class AviAdmit(item_id: Long, admitted: Boolean,
-                      dup_of: Option[Long], matched: Option[Long])
-
-  /** The avi history FRAME index: real containers, real parse — the
-    * batch q_media_avi_incremental's history side verbatim
-    * ((frame_idx, sig) buckets capPerKey-bounded under media_avi_hist,
-    * so a viral clip's re-uploads cap at the bucket bound). At 100 TB:
-    * a (frame_idx, sig)-bucketed materialized table. */
-  def prepareAviMediaIndex(historyDocs: DataFrame): DataFrame =
-    frameIndexOf(historyDocs,
-      d => graft.multimodal.Multimodal.asAviMedia(d),
-      "media_avi_hist")
-
-  /** The frame-grain history index, codec-agnostic — the named faces
-    * fix (mediaOf, capTag); both run the REAL container parse inside
-    * the stateless decode pass. */
-  private def frameIndexOf(historyDocs: DataFrame,
-      mediaOf: DataFrame => org.apache.spark.sql.Dataset[
-        graft.multimodal.Multimodal.MediaItem],
-      capTag: String): DataFrame = {
-    import graft.queries.{DedupQueries, MediaQueries}
-    DedupQueries.capPerKey(
-        graft.multimodal.Multimodal.aviFrameSigs(
-            mediaOf(historyDocs),
-            MediaQueries.VideoEveryNth).toDF()
-          .select(col("item_id").as("doc_id"), col("frame_idx"),
-            col("sig")),
-        capTag, col("frame_idx"), col("sig"))
-      .select(col("frame_idx"), col("sig"), col("doc_id").as("hist_id"))
-      .cache()
-  }
-
-  /** The live video ingest face — the stream twin of
-    * q_media_avi_incremental at the same INDEXABLE grain: each
-    * arriving AVI container decodes to its sampled frame signatures
-    * through the real parser (stateless mapPartitions), the frames
-    * equi-join the static (frame_idx, sig) history index — exact
-    * aligned collisions, bucket-bounded per arrival — and the judge
-    * admits unless some single history item collected
-    * >= [[graft.queries.MediaQueries.VideoMinMatched]] collisions,
-    * blaming the most-matched (ties to the smallest id). Fires once
-    * per arrival inside its own micro-batch: zero state rows. */
-  def mediaDedupAvi(spark: SparkSession, newDocs: DataFrame,
-                    histIndex: DataFrame): Dataset[AviAdmit] =
-    frameDedupOf(spark, newDocs, histIndex,
-      d => graft.multimodal.Multimodal.asAviMedia(d))
-
-  /** The MJPEG history frame index: real COMPRESSED containers, every
-    * frame through the real entropy-decode + IDCT — the batch
-    * q_media_avi_mjpeg_incremental's history side verbatim (tag
-    * media_avi_mjpeg_hist). */
-  def prepareMjpegMediaIndex(historyDocs: DataFrame): DataFrame =
-    frameIndexOf(historyDocs,
-      d => graft.multimodal.Multimodal.asMjpegAviMedia(d),
-      "media_avi_mjpeg_hist")
-
-  /** The live COMPRESSED-video ingest face — the stream twin of
-    * q_media_avi_mjpeg_incremental at the same indexable grain; the
-    * frame decode is the real JPEG pipeline per '00dc' chunk
-    * (MediaStreamSpec pins the admitted sets equal to the batch face
-    * on a replayed split, zero state rows — one of the rows-only
-    * family's anchors). */
-  def mediaDedupMjpeg(spark: SparkSession, newDocs: DataFrame,
-                      histIndex: DataFrame): Dataset[AviAdmit] =
-    frameDedupOf(spark, newDocs, histIndex,
-      d => graft.multimodal.Multimodal.asMjpegAviMedia(d))
-
-  /** The frame-grain verdict face, codec-agnostic (the [[mediaDedupOf]]
-    * discipline at the (frame_idx, sig) grain): exact aligned
-    * collisions against the static index, judged per arrival in its
-    * own micro-batch — zero state rows. */
-  private def frameDedupOf(spark: SparkSession, newDocs: DataFrame,
-      histIndex: DataFrame,
-      mediaOf: DataFrame => org.apache.spark.sql.Dataset[
-        graft.multimodal.Multimodal.MediaItem]): Dataset[AviAdmit] = {
+                 histIndex: DataFrame,
+                 codec: MediaQueries.BandCodec): Dataset[MediaAdmit] = {
     import spark.implicits._
-    import graft.queries.MediaQueries
-    val scored = graft.multimodal.Multimodal.aviFrameSigs(
-        mediaOf(newDocs),
-        MediaQueries.VideoEveryNth).toDF()
-      .join(histIndex, Seq("frame_idx", "sig"), "left_outer")
-      .select($"item_id", $"hist_id")
-      .as[(Long, Option[Long])]
-    def judge(id: Long, rows: Iterator[(Long, Option[Long])],
-              state: GroupState[Long]): Iterator[AviAdmit] = {
-      val counts = scala.collection.mutable.Map.empty[Long, Long]
-        .withDefaultValue(0L)
-      rows.foreach {
-        case (_, Some(h)) => counts(h) += 1
-        case _ => ()
-      }
-      val best = counts.toSeq
-        .filter(_._2 >= MediaQueries.VideoMinMatched)
-        .sortBy { case (h, m) => (-m, h) }.headOption
-      Iterator.single(best match {
-        case Some((h, m)) => AviAdmit(id, admitted = false, Some(h), Some(m))
-        case None => AviAdmit(id, admitted = true, None, None)
-      })
-    }
-    scored.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(judge)
-  }
-
-  /** The verdict face signature-agnostic — one judged arrival per item
-    * under ANY codec kernel; the named faces above fix (mediaOf,
-    * sigsFn, threshold) triples. */
-  def mediaDedupOf(spark: SparkSession, newDocs: DataFrame,
-                   histIndex: DataFrame, mediaOf: DataFrame => DataFrame,
-                   sigsFn: DataFrame => DataFrame,
-                   maxHam: Int): Dataset[MediaAdmit] = {
-    import spark.implicits._
-    import graft.queries.MediaQueries
-    val scored = MediaQueries.bandRows(sigsFn(
-        mediaOf(newDocs).filter(length(col("payload")) > 0)))
+    val maxHam = codec.maxHamming
+    val scored = MediaQueries.bandRows(codec.sigs(
+        codec.wrap(newDocs).toDF().filter(length(col("payload")) > 0)))
       .join(histIndex, Seq("band_idx", "band_val"), "left_outer")
       .select(col("doc_id").as("item_id"), col("hist_id"),
         when(col("hist_id").isNotNull,
@@ -1323,6 +1098,66 @@ object DocStream extends Serializable {
         case Some((ham, h)) => MediaAdmit(id, admitted = false,
           Some(h), Some(ham))
         case None => MediaAdmit(id, admitted = true, None, None)
+      })
+    }
+    scored.groupByKey(_._1)
+      .flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.NoTimeout)(judge)
+  }
+
+  /** One judged video arrival from [[frameDedup]] — rejections carry
+    * the blamed history item and its aligned-collision count. */
+  case class AviAdmit(item_id: Long, admitted: Boolean,
+                      dup_of: Option[Long], matched: Option[Long])
+
+  /** Build + cache a frame codec's history FRAME index `(frame_idx,
+    * sig, hist_id)`: real containers, real parse — the codec's batch
+    * incremental history side verbatim ([[MediaQueries.frameIndex]]
+    * under the codec's history cap tag, so a viral clip's re-uploads
+    * cap at the bucket bound). At 100 TB: a (frame_idx, sig)-bucketed
+    * materialized table. */
+  def prepareFrameIndex(historyDocs: DataFrame,
+                        codec: MediaQueries.FrameCodec): DataFrame =
+    MediaQueries.frameIndex(
+        graft.multimodal.Multimodal.aviFrameSigs(codec.wrap(historyDocs),
+          MediaQueries.VideoEveryNth).toDF(),
+        codec.histTag)
+      .cache()
+
+  /** The live video ingest face — the stream twin of the codec's batch
+    * incremental (q_media_avi_incremental, q_media_avi_mjpeg_incremental)
+    * at the same INDEXABLE grain: each arriving container decodes to
+    * its sampled frame signatures through the real parser (stateless
+    * mapPartitions), the frames equi-join the static (frame_idx, sig)
+    * history index — exact aligned collisions, bucket-bounded per
+    * arrival — and the judge admits unless some single history item
+    * collected >= [[MediaQueries.VideoMinMatched]] collisions, blaming
+    * the most-matched (ties to the smallest id). Fires once per arrival
+    * inside its own micro-batch: zero state rows. */
+  def frameDedup(spark: SparkSession, newDocs: DataFrame,
+                 histIndex: DataFrame,
+                 codec: MediaQueries.FrameCodec): Dataset[AviAdmit] = {
+    import spark.implicits._
+    val scored = graft.multimodal.Multimodal.aviFrameSigs(
+        codec.wrap(newDocs),
+        MediaQueries.VideoEveryNth).toDF()
+      .join(histIndex, Seq("frame_idx", "sig"), "left_outer")
+      .select($"item_id", $"hist_id")
+      .as[(Long, Option[Long])]
+    def judge(id: Long, rows: Iterator[(Long, Option[Long])],
+              state: GroupState[Long]): Iterator[AviAdmit] = {
+      val counts = scala.collection.mutable.Map.empty[Long, Long]
+        .withDefaultValue(0L)
+      rows.foreach {
+        case (_, Some(h)) => counts(h) += 1
+        case _ => ()
+      }
+      val best = counts.toSeq
+        .filter(_._2 >= MediaQueries.VideoMinMatched)
+        .sortBy { case (h, m) => (-m, h) }.headOption
+      Iterator.single(best match {
+        case Some((h, m)) => AviAdmit(id, admitted = false, Some(h), Some(m))
+        case None => AviAdmit(id, admitted = true, None, None)
       })
     }
     scored.groupByKey(_._1)

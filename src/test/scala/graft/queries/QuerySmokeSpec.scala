@@ -55,9 +55,9 @@ class QuerySmokeSpec extends SparkTestBase {
       "q_media_avi_mjpeg_dedup",
       // the ingest face rides the same adjudication: the lossless
       // q_media_avi_incremental is the hash-matched twin of the
-      // identical admit pipeline, and DocStream.mediaDedupMjpeg is the
-      // live twin (MediaStreamSpec pins stream == batch on a replayed
-      // split)
+      // identical admit pipeline, and DocStream.frameDedup under the
+      // Mjpeg codec is the live twin (MediaStreamSpec pins stream ==
+      // batch on a replayed split)
       "q_media_avi_mjpeg_incremental"
     )
     val unanchored = SparkEntry.queries.keySet

@@ -2,22 +2,102 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.{SparkTestBase, Tables}
 import graft.streaming.StageFiles.stageFile
 
-/** The streaming perceptual media dedup face ([[DocStream.mediaDedup]])
-  * must agree with its batch twin (q_media_phash_incremental, which the
-  * DuckDB oracle hash-matches) when the stream replays the batch
-  * query's increment: every arriving payload is judged against the
-  * STATIC banded history only, so the admitted sets must be identical
-  * across micro-batch boundaries — with zero state rows. */
+/** Every live media-dedup face ([[DocStream.mediaDedup]] under a banded
+  * codec, [[DocStream.frameDedup]] under a frame codec) must agree with
+  * its batch twin (the codec's q_media_*_incremental) when the stream
+  * replays the batch query's increment: every arriving payload is
+  * judged against the STATIC history index only, so the admitted sets
+  * must be identical across micro-batch boundaries — with zero state
+  * rows. One replay loop runs over the codec table; each test below is
+  * one row of it. */
 class MediaStreamSpec extends SparkTestBase {
   import spark.implicits._
+  import graft.queries.MediaQueries
 
-  test("streamed media dedup equals the batch incremental on the " +
-      "replayed increment, across micro-batches, with zero state") {
+  /** One codec's live face: `index` builds the cached history index
+    * from the history docs, `face` streams the arrivals against it,
+    * `query` names the batch twin, and `extra` runs the row's further
+    * checks on the sink table and the admitted set. */
+  private case class Replay(tag: String, query: String,
+      index: DataFrame => DataFrame,
+      face: (DataFrame, DataFrame) => DataFrame,
+      extra: (DataFrame, Set[Long]) => Unit = (_, _) => ())
+
+  private def band(tag: String, c: MediaQueries.BandCodec, query: String) =
+    Replay(tag, query, DocStream.prepareMediaIndex(_, c),
+      (arrivals, index) =>
+        DocStream.mediaDedup(spark, arrivals, index, c).toDF())
+
+  private def frame(tag: String, c: MediaQueries.FrameCodec, query: String) =
+    Replay(tag, query, DocStream.prepareFrameIndex(_, c),
+      (arrivals, index) =>
+        DocStream.frameDedup(spark, arrivals, index, c).toDF())
+
+  private val replays: Seq[(String, Seq[Replay])] = Seq(
+    // the byte-grid aHash face, whose batch twin the DuckDB oracle
+    // hash-matches: every arrival is also judged exactly once
+    ("streamed media dedup equals the batch incremental on the " +
+      "replayed increment, across micro-batches, with zero state") -> Seq(
+      band("phash", MediaQueries.Phash, "q_media_phash_incremental")
+        .copy(extra = (sink, _) => {
+          val docs = Tables.table(spark, sf0001, "documents")
+          val all = sink.select($"item_id").as[Long].collect()
+          assert(all.length === all.distinct.length)
+          assert(all.length === docs.filter($"doc_id" % 10 === 0 &&
+            $"text".isNotNull && length($"text") > 0).count())
+        })),
+    // every arrival wraps into a genuine RIFF container and WavCodec
+    // parses it inside the stateless decode pass
+    ("the REAL-decoder stream face equals its batch incremental on " +
+      "the replayed increment, across micro-batches, with zero state") ->
+      Seq(band("wav", MediaQueries.Wav, "q_media_wav_incremental")),
+    // the image twin: genuine 24-bpp BMPs through BmpCodec
+    ("the BMP stream face equals its batch incremental on the " +
+      "replayed increment, across micro-batches, with zero state") ->
+      Seq(band("bmp", MediaQueries.Bmp, "q_media_bmp_incremental")),
+    // the compressed-codec twins: genuine PNG/JPEG containers (the
+    // JDK's real inflate / IDCT paths) or format-7 µ-law WAVs (the real
+    // G.711 expansion); the jpeg pin is the rows-only face's
+    // batch/stream agreement anchor
+    ("the compressed-format stream faces (PNG/JPEG/µ-law) equal their " +
+      "batch incrementals on the replayed increment, with zero state") ->
+      Seq(band("png", MediaQueries.Png, "q_media_png_incremental"),
+        band("jpeg", MediaQueries.Jpeg, "q_media_jpeg_incremental"),
+        band("ulaw", MediaQueries.Ulaw, "q_media_ulaw_incremental")),
+    // the video twin at the frame-signature grain: exact aligned
+    // (frame_idx, sig) collisions against the static index decide
+    // admission, and rejections carry blame with at least the admit
+    // threshold
+    ("the AVI stream face equals its batch incremental on the " +
+      "replayed increment, across micro-batches, with zero state") -> Seq(
+      frame("avi", MediaQueries.Avi, "q_media_avi_incremental")
+        .copy(extra = (sink, _) => {
+          val rejected = sink.filter(!$"admitted")
+          assert(rejected.filter($"dup_of".isNull ||
+            $"matched" < MediaQueries.VideoMinMatched).count() === 0L)
+        })),
+    // the compressed-video twin: each '00dc' frame decodes through the
+    // real JPEG pipeline; the lossless twin agrees on this corpus — the
+    // anchor relationship of the rows-only family, checked live
+    ("the MJPEG stream face equals its batch incremental on the " +
+      "replayed increment, with zero state") -> Seq(
+      frame("mjpeg", MediaQueries.Mjpeg, "q_media_avi_mjpeg_incremental")
+        .copy(extra = (_, admitted) => {
+          val lossless = graft.SparkEntry.queries("q_media_avi_incremental")(
+              spark, sf0001)
+            .as[Long].collect().toSet
+          assert(admitted === lossless,
+            "the MJPEG and lossless admit sets diverged on the twin corpus")
+        }))
+  )
+
+  for ((name, codecs) <- replays) test(name) {
     val dir = Files.createTempDirectory("media_stream_inc")
     val docs = Tables.table(spark, sf0001, "documents")
     // the batch query's split: history = doc_id % 10 <> 0; the
@@ -27,141 +107,12 @@ class MediaStreamSpec extends SparkTestBase {
     stageFile(docs.filter($"doc_id" % 10 === 0 && $"doc_id" >= 250),
       dir, "b1.parquet", 1700000100000L)
 
-    val index = DocStream.prepareMediaIndex(
-      docs.filter($"doc_id" % 10 =!= 0))
-    try {
-      val out = DocStream.mediaDedup(spark,
-        DocStream.readDocs(spark, dir.toString), index).toDF()
-      val q = EventStream.runToMemory(out, "media_dedup",
-        OutputMode.Append())
-      q.processAllAvailable()
-      val stateRows = q.recentProgress
-        .flatMap(p => Option(p.stateOperators).toSeq.flatten)
-        .map(_.numRowsTotal).foldLeft(0L)(math.max)
-      q.stop()
-      assert(stateRows === 0L, "the media verdict face must keep no state")
-
-      val admitted = spark.table("media_dedup")
-        .filter($"admitted").select($"item_id").as[Long].collect().toSet
-      val want = graft.SparkEntry.queries("q_media_phash_incremental")(
-          spark, sf0001)
-        .as[Long].collect().toSet
-      assert(admitted === want)
-      // every arrival is judged exactly once
-      val all = spark.table("media_dedup").select($"item_id")
-        .as[Long].collect()
-      assert(all.length === all.distinct.length)
-      assert(all.length === docs.filter($"doc_id" % 10 === 0 &&
-        $"text".isNotNull && length($"text") > 0).count())
-    } finally index.unpersist()
-  }
-
-  test("the REAL-decoder stream face equals its batch incremental on " +
-      "the replayed increment, across micro-batches, with zero state") {
-    // the wav twin of the test above: every arrival wraps into a
-    // genuine RIFF container and WavCodec parses it inside the
-    // stateless decode pass — admitted sets must match
-    // q_media_wav_incremental (hash-matched by the DuckDB oracle)
-    val dir = Files.createTempDirectory("media_stream_wav_inc")
-    val docs = Tables.table(spark, sf0001, "documents")
-    stageFile(docs.filter($"doc_id" % 10 === 0 && $"doc_id" < 250),
-      dir, "b0.parquet", 1700000000000L)
-    stageFile(docs.filter($"doc_id" % 10 === 0 && $"doc_id" >= 250),
-      dir, "b1.parquet", 1700000100000L)
-
-    val index = DocStream.prepareWavMediaIndex(
-      docs.filter($"doc_id" % 10 =!= 0))
-    try {
-      val out = DocStream.mediaDedupWav(spark,
-        DocStream.readDocs(spark, dir.toString), index).toDF()
-      val q = EventStream.runToMemory(out, "media_dedup_wav",
-        OutputMode.Append())
-      q.processAllAvailable()
-      val stateRows = q.recentProgress
-        .flatMap(p => Option(p.stateOperators).toSeq.flatten)
-        .map(_.numRowsTotal).foldLeft(0L)(math.max)
-      q.stop()
-      assert(stateRows === 0L, "the wav verdict face must keep no state")
-
-      val admitted = spark.table("media_dedup_wav")
-        .filter($"admitted").select($"item_id").as[Long].collect().toSet
-      val want = graft.SparkEntry.queries("q_media_wav_incremental")(
-          spark, sf0001)
-        .as[Long].collect().toSet
-      assert(admitted === want)
-    } finally index.unpersist()
-  }
-
-  test("the BMP stream face equals its batch incremental on the " +
-      "replayed increment, across micro-batches, with zero state") {
-    // the image twin: every arrival wraps into a genuine 24-bpp BMP
-    // and BmpCodec parses it inside the stateless decode pass —
-    // admitted sets must match q_media_bmp_incremental (hash-matched
-    // by the DuckDB oracle), closing the media symmetry
-    val dir = Files.createTempDirectory("media_stream_bmp_inc")
-    val docs = Tables.table(spark, sf0001, "documents")
-    stageFile(docs.filter($"doc_id" % 10 === 0 && $"doc_id" < 250),
-      dir, "b0.parquet", 1700000000000L)
-    stageFile(docs.filter($"doc_id" % 10 === 0 && $"doc_id" >= 250),
-      dir, "b1.parquet", 1700000100000L)
-
-    val index = DocStream.prepareBmpMediaIndex(
-      docs.filter($"doc_id" % 10 =!= 0))
-    try {
-      val out = DocStream.mediaDedupBmp(spark,
-        DocStream.readDocs(spark, dir.toString), index).toDF()
-      val q = EventStream.runToMemory(out, "media_dedup_bmp",
-        OutputMode.Append())
-      q.processAllAvailable()
-      val stateRows = q.recentProgress
-        .flatMap(p => Option(p.stateOperators).toSeq.flatten)
-        .map(_.numRowsTotal).foldLeft(0L)(math.max)
-      q.stop()
-      assert(stateRows === 0L, "the bmp verdict face must keep no state")
-
-      val admitted = spark.table("media_dedup_bmp")
-        .filter($"admitted").select($"item_id").as[Long].collect().toSet
-      val want = graft.SparkEntry.queries("q_media_bmp_incremental")(
-          spark, sf0001)
-        .as[Long].collect().toSet
-      assert(admitted === want)
-    } finally index.unpersist()
-  }
-
-  test("the compressed-format stream faces (PNG/JPEG/µ-law) equal their " +
-      "batch incrementals on the replayed increment, with zero state") {
-    // the compressed-codec twins: arrivals wrap into genuine PNG/JPEG
-    // containers (the JDK's real inflate / IDCT paths) or format-7
-    // µ-law WAVs (the real G.711 expansion) inside the stateless
-    // decode pass — admitted sets must match q_media_png_incremental
-    // and q_media_ulaw_incremental (both hash-matched) and
-    // q_media_jpeg_incremental (the rows-only face's batch/stream
-    // agreement anchor)
-    val dir = Files.createTempDirectory("media_stream_img_inc")
-    val docs = Tables.table(spark, sf0001, "documents")
-    stageFile(docs.filter($"doc_id" % 10 === 0 && $"doc_id" < 250),
-      dir, "b0.parquet", 1700000000000L)
-    stageFile(docs.filter($"doc_id" % 10 === 0 && $"doc_id" >= 250),
-      dir, "b1.parquet", 1700000100000L)
-
-    for ((tag, prepare, face, query) <- Seq(
-        ("png",
-          DocStream.preparePngMediaIndex _,
-          DocStream.mediaDedupPng _,
-          "q_media_png_incremental"),
-        ("jpeg",
-          DocStream.prepareJpegMediaIndex _,
-          DocStream.mediaDedupJpeg _,
-          "q_media_jpeg_incremental"),
-        ("ulaw",
-          DocStream.prepareUlawMediaIndex _,
-          DocStream.mediaDedupUlaw _,
-          "q_media_ulaw_incremental"))) {
-      val index = prepare(docs.filter($"doc_id" % 10 =!= 0))
+    for (r <- codecs) {
+      val index = r.index(docs.filter($"doc_id" % 10 =!= 0))
       try {
-        val out = face(spark,
-          DocStream.readDocs(spark, dir.toString), index).toDF()
-        val q = EventStream.runToMemory(out, s"media_dedup_$tag",
+        val sink = s"media_dedup_${r.tag}"
+        val q = EventStream.runToMemory(
+          r.face(DocStream.readDocs(spark, dir.toString), index), sink,
           OutputMode.Append())
         q.processAllAvailable()
         val stateRows = q.recentProgress
@@ -169,104 +120,17 @@ class MediaStreamSpec extends SparkTestBase {
           .map(_.numRowsTotal).foldLeft(0L)(math.max)
         q.stop()
         assert(stateRows === 0L,
-          s"the $tag verdict face must keep no state")
+          s"the ${r.tag} verdict face must keep no state")
 
-        val admitted = spark.table(s"media_dedup_$tag")
+        val admitted = spark.table(sink)
           .filter($"admitted").select($"item_id").as[Long].collect().toSet
-        val want = graft.SparkEntry.queries(query)(spark, sf0001)
+        val want = graft.SparkEntry.queries(r.query)(spark, sf0001)
           .as[Long].collect().toSet
-        assert(admitted === want, s"$tag stream face diverges from $query")
+        assert(admitted === want,
+          s"${r.tag} stream face diverges from ${r.query}")
+        r.extra(spark.table(sink), admitted)
       } finally index.unpersist()
     }
-  }
-
-  test("the AVI stream face equals its batch incremental on the " +
-      "replayed increment, across micro-batches, with zero state") {
-    // the video twin at the frame-signature grain: every arrival wraps
-    // into a genuine AVI container, AviCodec parses it inside the
-    // stateless decode pass, and exact aligned (frame_idx, sig)
-    // collisions against the static index decide admission — admitted
-    // sets must match q_media_avi_incremental (hash-matched by the
-    // DuckDB oracle)
-    val dir = Files.createTempDirectory("media_stream_avi_inc")
-    val docs = Tables.table(spark, sf0001, "documents")
-    stageFile(docs.filter($"doc_id" % 10 === 0 && $"doc_id" < 250),
-      dir, "b0.parquet", 1700000000000L)
-    stageFile(docs.filter($"doc_id" % 10 === 0 && $"doc_id" >= 250),
-      dir, "b1.parquet", 1700000100000L)
-
-    val index = DocStream.prepareAviMediaIndex(
-      docs.filter($"doc_id" % 10 =!= 0))
-    try {
-      val out = DocStream.mediaDedupAvi(spark,
-        DocStream.readDocs(spark, dir.toString), index).toDF()
-      val q = EventStream.runToMemory(out, "media_dedup_avi",
-        OutputMode.Append())
-      q.processAllAvailable()
-      val stateRows = q.recentProgress
-        .flatMap(p => Option(p.stateOperators).toSeq.flatten)
-        .map(_.numRowsTotal).foldLeft(0L)(math.max)
-      q.stop()
-      assert(stateRows === 0L, "the avi verdict face must keep no state")
-
-      val admitted = spark.table("media_dedup_avi")
-        .filter($"admitted").select($"item_id").as[Long].collect().toSet
-      val want = graft.SparkEntry.queries("q_media_avi_incremental")(
-          spark, sf0001)
-        .as[Long].collect().toSet
-      assert(admitted === want)
-      // rejections carry blame with at least the admit threshold
-      val rejected = spark.table("media_dedup_avi").filter(!$"admitted")
-      assert(rejected.filter($"dup_of".isNull ||
-        $"matched" < graft.queries.MediaQueries.VideoMinMatched)
-        .count() === 0L)
-    } finally index.unpersist()
-  }
-
-  test("the MJPEG stream face equals its batch incremental on the " +
-      "replayed increment, with zero state") {
-    // the compressed-video twin at the frame-signature grain: every
-    // arrival wraps into a genuine MJPEG AVI container, each '00dc'
-    // frame decodes through the real JPEG pipeline inside the
-    // stateless decode pass, and exact aligned (frame_idx, sig)
-    // collisions against the static index decide admission — the
-    // admitted sets must match q_media_avi_mjpeg_incremental (this pin
-    // is one of the rows-only family's documented anchors)
-    val dir = Files.createTempDirectory("media_stream_mjpeg_inc")
-    val docs = Tables.table(spark, sf0001, "documents")
-    stageFile(docs.filter($"doc_id" % 10 === 0 && $"doc_id" < 250),
-      dir, "b0.parquet", 1700000000000L)
-    stageFile(docs.filter($"doc_id" % 10 === 0 && $"doc_id" >= 250),
-      dir, "b1.parquet", 1700000100000L)
-
-    val index = DocStream.prepareMjpegMediaIndex(
-      docs.filter($"doc_id" % 10 =!= 0))
-    try {
-      val out = DocStream.mediaDedupMjpeg(spark,
-        DocStream.readDocs(spark, dir.toString), index).toDF()
-      val q = EventStream.runToMemory(out, "media_dedup_mjpeg",
-        OutputMode.Append())
-      q.processAllAvailable()
-      val stateRows = q.recentProgress
-        .flatMap(p => Option(p.stateOperators).toSeq.flatten)
-        .map(_.numRowsTotal).foldLeft(0L)(math.max)
-      q.stop()
-      assert(stateRows === 0L, "the mjpeg verdict face must keep no state")
-
-      val admitted = spark.table("media_dedup_mjpeg")
-        .filter($"admitted").select($"item_id").as[Long].collect().toSet
-      val want = graft.SparkEntry.queries("q_media_avi_mjpeg_incremental")(
-          spark, sf0001)
-        .as[Long].collect().toSet
-      assert(admitted === want)
-      // and the lossless twin agrees on this corpus — the anchor
-      // relationship, checked live
-      val lossless = graft.SparkEntry.queries("q_media_avi_incremental")(
-          spark, sf0001)
-        .as[Long].collect().toSet
-      assert(admitted === lossless,
-        "the MJPEG and lossless admit sets diverged on the twin corpus")
-    } finally index.unpersist()
   }
 
   test("planted fixture: byte-copy and near variant rejected with " +
@@ -283,10 +147,11 @@ class MediaStreamSpec extends SparkTestBase {
     stageFile(docsOf(Seq((10L, base), (13L, near), (14L, far))),
       dir, "b0.parquet", 1700000000000L)
 
-    val index = DocStream.prepareMediaIndex(hist)
+    val index = DocStream.prepareMediaIndex(hist, MediaQueries.Phash)
     try {
       val out = DocStream.mediaDedup(spark,
-        DocStream.readDocs(spark, dir.toString), index).toDF()
+        DocStream.readDocs(spark, dir.toString), index,
+        MediaQueries.Phash).toDF()
       val q = EventStream.runToMemory(out, "media_dedup_fx",
         OutputMode.Append())
       q.processAllAvailable(); q.stop()
