@@ -63,6 +63,9 @@ object DedupQueries {
   /** The postings identity: the keep-first / delete grain. */
   private val GramKeys = Seq("g", "doc_id")
 
+  /** Expected-items sizing of q_dedup_incremental_bloom's history sketch. */
+  private val BloomItems = 100000L
+
   /** The BAND index over the postings (band = the md5 prefix an
     * LSH-style blocker buckets on), routed 32-way on the band. */
   private def gramBands(postings: DataFrame): DataFrame =
@@ -232,6 +235,9 @@ object DedupQueries {
       .drop("__rn")
   }
 
+  /** Salt slices per key in [[capPerKeySalted]]'s phase 1. */
+  private val CapSaltBuckets = 16L
+
   /** Two-phase [[capPerKey]] for hostile-skew buckets (the r11 verdict's
     * q_lsh_tune funnel): on a boilerplate-flooded corpus every band
     * bucket is hot, and the single cap window carries Σb rows per layout
@@ -239,10 +245,10 @@ object DedupQueries {
     * (≤28 for the three layouts — SCALING r14 #8), serializing on a
     * handful of tasks at scale. Phase 1 here ranks per (keys..., salt) —
     * the operators/Skew two-phase device, salt = xxhash64(doc_id) mod
-    * `spark.graft.dedup.capSalt` (default 16) — so one hot bucket's rank
-    * sort spreads across capSalt reducers, each keeping only its salt
-    * slice's doc_id-order top-cap; phase 2 applies the exact global cap
-    * to the ≤ capSalt·cap survivors per key.
+    * [[CapSaltBuckets]] (16) — so one hot bucket's rank sort spreads
+    * across that many reducers, each keeping only its salt slice's
+    * doc_id-order top-cap; phase 2 applies the exact global cap to the
+    * ≤ 16·cap survivors per key.
     *
     * Output is IDENTICAL to single-phase [[capPerKey]] on EVERY input
     * (SaltedCapSpec pins it on a hot corpus): a row in a key's global
@@ -252,17 +258,15 @@ object DedupQueries {
     * (same inequality), so the fail-fast oracle contract holds with the
     * phase-1 tag named. Metrics: phase-1 drops surface as
     * hot_buckets_<tag>_presalt; phase 2 keeps the canonical
-    * hot_buckets_<tag> (its max_bucket is post-phase-1, ≤ capSalt·cap by
+    * hot_buckets_<tag> (its max_bucket is post-phase-1, ≤ 16·cap by
     * construction — total dropped = presalt + canonical). Cost on a sane
     * corpus: one extra exchange + sort of rows already capped to
-    * ≤ capSalt·cap per bucket. */
+    * ≤ 16·cap per bucket. */
   private[queries] def capPerKeySalted(df: DataFrame, tag: String,
       keys: Column*): DataFrame = {
     import df.sparkSession.implicits._
-    val saltBuckets = df.sparkSession.conf
-      .getOption("spark.graft.dedup.capSalt").map(_.toLong).getOrElse(16L)
     val phase1 = capPerKey(df, s"${tag}_presalt",
-      (keys :+ pmod(xxhash64($"doc_id"), lit(saltBuckets))): _*)
+      (keys :+ pmod(xxhash64($"doc_id"), lit(CapSaltBuckets))): _*)
     capPerKey(phase1, tag, keys: _*)
   }
 
@@ -530,7 +534,7 @@ object DedupQueries {
   /** [[bucketPairsTagged]] with the two-phase SALTED cap ([[
     * capPerKeySalted]]) — the hostile-skew variant q_lsh_tune's three
     * band layouts route through, so a boilerplate corpus's hot buckets
-    * spread their cap windows across capSalt tasks instead of
+    * spread their cap windows across the salt slices instead of
     * serializing (r11 verdict weak #1). Same output as the unsalted
     * form on every input (the capPerKeySalted equivalence argument). */
   private[queries] def bucketPairsSaltedTagged(banded: DataFrame,
@@ -924,10 +928,10 @@ object DedupQueries {
     // positives) are resolved by the exact join, so output equals
     // q_dedup_incremental row-for-row — which is why this query can
     // carry the SAME hard DuckDB oracle despite the probabilistic
-    // prefilter. Sketch sizing: `spark.graft.dedup.bloomItems` (default
-    // 1e5 fits the testdata; a deployment sizes it from the history
-    // count — at 1e9 keys / 1% fpp the sketch is ~1.2 GB, the scale at
-    // which one graduates to partition-range blooms). Null fingerprints
+    // prefilter. Sketch sizing: [[BloomItems]] (1e5 fits the testdata;
+    // a deployment sizes it from the history count — at 1e9 keys / 1%
+    // fpp the sketch is ~1.2 GB, the scale at which one graduates to
+    // partition-range blooms). Null fingerprints
     // (degenerate docs) route through the exact join: an anti-join never
     // matches a null key, so they survive — identical to the unfiltered
     // form.
@@ -937,8 +941,6 @@ object DedupQueries {
         .select($"doc_id", fingerprint($"text").as("fp"))
       val history = docs.filter($"doc_id" % 10 =!= 0)
       val incoming = docs.filter($"doc_id" % 10 === 0)
-      val items = s.conf.getOption("spark.graft.dedup.bloomItems")
-        .map(_.toLong).getOrElse(100000L)
       // sentinel row: Spark's bloomFilter aggregate returns a null buffer
       // on EMPTY input (NPE in readFrom — caught by EmptyInputSpec) and
       // would NPE on null fps; the sentinel is not 32 hex chars so it can
@@ -946,7 +948,7 @@ object DedupQueries {
       // isEmpty pre-check would)
       val bloom = history.select($"fp").na.drop()
         .unionByName(Seq("empty-history-sentinel").toDF("fp"))
-        .stat.bloomFilter("fp", items, 0.01)
+        .stat.bloomFilter("fp", BloomItems, 0.01)
       val bc = s.sparkContext.broadcast(bloom)
       val typed = incoming.as[(Long, String)]
       val definitelyNew = typed

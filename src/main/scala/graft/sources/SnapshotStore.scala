@@ -97,23 +97,22 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * root additionally tags each version with its commit OP, so
   * [[diff]]'s version walk can attribute name-set changes: a binPack
   * or evolve step provably changes no rows and is pruned past instead
-  * of forcing a full re-read (legacy flat manifests still parse; every
-  * consumer degrades to "keep/read it" where metadata is absent). The
-  * commit PROTOCOL — immutable files, atomic claim, one publish,
-  * optimistic version check — is unchanged by the layering.
+  * of forcing a full re-read. The commit PROTOCOL — immutable files,
+  * atomic claim, one publish, optimistic version check — is unchanged
+  * by the layering.
+  *
+  * ONE MANIFEST FORMAT, read exactly as written: a root opens with
+  * `#graft2 op=<op>`, then one `@<encDir>\t<segment>` pointer per
+  * partition and the `-`-prefixed staged-delete entries; every segment
+  * row carries `rows:bytes` and the file's bounds. Every data file of
+  * every snapshot therefore has a [[FileStat]], and a manifest missing
+  * any of these parts is refused at parse time, naming the file —
+  * no reader guesses at a form the writer never produces.
   *
   * HONEST 100 TB caveat: the root manifest is still O(partitions) per
-  * commit (fine to ~100k partitions at ~60 bytes/pointer), and stats
-  * are computed by one aggregation over the increment rather than
-  * inside the write task (this seam has no writer hook). Both layouts
-  * now compute them PRE-WRITE from the input frame: the default write
-  * by partition value (file ↔ value is a bijection there), the
-  * salted/binned write by (partition, shuffle-task) cell
-  * ([[collectStatsByCell]] — the task assignment is recomputable, the
-  * task id is in the file name), so no arm re-decodes the increment
-  * after writing it; a full readback survives only as the fallback
-  * for unparseable names or a hash-mapping drift, and the test suite
-  * pins that binned commits never take it.
+  * commit (fine to ~100k partitions at ~60 bytes/pointer). Stats come
+  * from the new files' parquet footers ([[footerStats]]), a driver-side
+  * metadata read per written file rather than a writer hook.
   */
 object SnapshotStore {
 
@@ -128,38 +127,32 @@ object SnapshotStore {
     * device: lower = a prefix of the true min, upper = the truncated
     * true max with its last code point incremented, so both stay valid
     * BOUNDS at bounded manifest size — the Iceberg truncate-bound shape).
-    * `rows = -1` marks a file carried forward from a pre-stats
-    * manifest (unknown; every consumer must treat absence as "keep").
     * Columns with no non-null values (or inexpressible bounds) are
     * simply absent from the maps. `bytes` is the file's exact length,
-    * captured from the staging listing at write time (r19): with it the
-    * read path plans entirely from the manifest — zero listing jobs,
-    * zero per-file FS calls (the Iceberg scan-planning shape); `-1`
-    * (legacy manifests) degrades to a per-dir listing. */
+    * captured from the staging listing at write time: with it the read
+    * path plans entirely from the manifest — zero listing jobs, zero
+    * per-file FS calls (the Iceberg scan-planning shape). Every data
+    * file of every snapshot has one. */
   case class FileStat(rows: Long,
       mins: Map[String, String], maxs: Map[String, String],
-      bytes: Long = -1L)
+      bytes: Long)
 
   /** One resolved version: the manifest's exact file list, relative to
     * `<root>/data/` (staged-delete entries keep their `-` prefix), plus
-    * the version's commit metadata when the manifest is the segmented
-    * v2 form — `op` (which maintenance operation produced it; legacy
-    * manifests read as [[OpData]]), `segments` (partition dir → the
-    * immutable segment file listing that dir, relative to
-    * `_manifests/`), and `stats` (data file → [[FileStat]]). Reduced
-    * copies built positionally (`Snapshot(v, files)`) carry no
-    * metadata — they are read-side views, never commit inputs. */
-  case class Snapshot(version: Long, files: Seq[String],
-      op: String = OpData,
-      segments: Map[String, String] = Map.empty,
-      stats: Map[String, FileStat] = Map.empty)
+    * the version's commit metadata — `op` (which maintenance operation
+    * produced it), `segments` (partition dir → the immutable segment
+    * file listing that dir, relative to `_manifests/`), and `stats`
+    * (data file → [[FileStat]], one per data file). Read-side views
+    * narrow `files` with `copy` and keep the rest. */
+  case class Snapshot(version: Long, files: Seq[String], op: String,
+      segments: Map[String, String], stats: Map[String, FileStat])
 
   /** Commit-op metadata tokens ([[Snapshot.op]]). [[opChangesData]] is
     * the attribution rule [[diff]]'s version walk runs on: `binpack`
     * rewrites file LAYOUT with provably identical per-partition rows,
     * and `evolve` touches no files at all, so neither can change a
-    * diff; every other op (and any unknown/legacy token — conservative
-    * by default) is assumed to change rows. */
+    * diff; every other op (and any unknown token — conservative by
+    * default) is assumed to change rows. */
   val OpData = "data"
   val OpInit = "init"
   val OpCompact = "compact"
@@ -410,75 +403,74 @@ object SnapshotStore {
       try out.write(body.getBytes("UTF-8")) finally out.close()
     }
 
-  /** Segment line: `relpath TAB rows[:bytes] [TAB col TAB min TAB max]*`,
-    * every token URL-encoded so no value can smuggle a separator. The
-    * `:bytes` suffix (r19) rides inside the rows token so pre-r19
-    * segments parse unchanged (`-1` = unknown length). */
-  private def parseSegment(body: String): Seq[(String, FileStat)] =
+  /** The refusal for a manifest file this writer never produces. */
+  private def unreadable(p: Path, why: String) =
+    new IllegalStateException(s"unreadable snapshot manifest $p: $why")
+
+  /** A root manifest's commit op, dir → segment pointers and staged-
+    * delete entries: the `#graft2 op=<op>` header, one
+    * `@<encDir>\t<segment>` pointer per partition, `-` delete lines.
+    * Anything else is refused. */
+  private def parseRoot(p: Path, body: String)
+      : (String, Map[String, String], Seq[String]) = {
+    val lines = body.split("\n").map(_.trim).filter(_.nonEmpty).toSeq
+    if (!lines.headOption.exists(_.startsWith(ManifestHeader)))
+      throw unreadable(p, s"no $ManifestHeader header")
+    val op = lines.head.split("\\s+").drop(1)
+      .collectFirst { case s if s.startsWith("op=") => s.stripPrefix("op=") }
+      .getOrElse(throw unreadable(p, "no op= in the header"))
+    val (ptrs, dels) = lines.tail.partition(_.startsWith("@"))
+    dels.find(!_.startsWith("-"))
+      .foreach(l => throw unreadable(p, s"unknown entry $l"))
+    val pointers = ptrs.map(l => l.stripPrefix("@").split("\t", 2) match {
+      case Array(d, ref) => dec(d) -> ref
+      case _ => throw unreadable(p, s"pointer without a dir: $l")
+    })
+    (op, pointers.toMap, dels)
+  }
+
+  /** Segment line: `relpath TAB rows:bytes [TAB col TAB min TAB max]*`,
+    * every token URL-encoded so no value can smuggle a separator; the
+    * `#dir=` header line is for humans. */
+  private def parseSegment(p: Path, body: String): Seq[(String, FileStat)] =
     body.split("\n").map(_.trim)
       .filter(l => l.nonEmpty && !l.startsWith("#")).toSeq.map { l =>
         val t = l.split("\t", -1)
-        val rel = dec(t(0))
-        val (rows, bytes) = t(1).split(":", 2) match {
-          case Array(r, b) => (r.toLong, b.toLong)
-          case _ => (t(1).toLong, -1L)
+        val (rows, bytes) = t.lift(1).map(_.split(":", 2)) match {
+          case Some(Array(r, b)) => (r.toLong, b.toLong)
+          case _ => throw unreadable(p, s"segment row without rows:bytes: $l")
         }
         val cols = t.drop(2).grouped(3).filter(_.length == 3).toSeq
-        rel -> FileStat(rows,
+        dec(t(0)) -> FileStat(rows,
           cols.map(c => dec(c(0)) -> dec(c(1))).toMap,
           cols.map(c => dec(c(0)) -> dec(c(2))).toMap,
           bytes)
       }
 
   private def renderSegment(dir: String,
-      entries: Seq[(String, Option[FileStat])]): String = {
-    val lines = entries.sortBy(_._1).map { case (rel, st) =>
-      val rowsTok = st.map(s =>
-        if (s.bytes >= 0L) s"${s.rows}:${s.bytes}" else s.rows.toString)
-        .getOrElse("-1")
-      val base = s"${enc(rel)}\t$rowsTok"
-      val colStats = st.toSeq.flatMap(s =>
-        s.mins.keys.toSeq.sorted.flatMap(c =>
-          s.maxs.get(c).map(mx => s"${enc(c)}\t${enc(s.mins(c))}\t${enc(mx)}")))
-      (base +: colStats).mkString("\t")
+      entries: Seq[(String, FileStat)]): String = {
+    val lines = entries.sortBy(_._1).map { case (rel, s) =>
+      val colStats = s.mins.keys.toSeq.sorted.flatMap(c =>
+        s.maxs.get(c).map(mx => s"${enc(c)}\t${enc(s.mins(c))}\t${enc(mx)}"))
+      (s"${enc(rel)}\t${s.rows}:${s.bytes}" +: colStats).mkString("\t")
     }
     (s"#dir=${enc(dir)}" +: lines).mkString("", "\n", "\n")
   }
 
   /** Resolve a specific committed version (time travel — an in-flight
-    * reader's view outlives later commits until vacuum). Reads either
-    * manifest form: the segmented v2 root (`#graft2 op=…` header, one
-    * `@segment` pointer per partition, delete entries inline) or the
-    * legacy flat file list. */
-  def snapshotAt(spark: SparkSession, root: String, v: Long): Snapshot = timed("snapshotAt") {
+    * reader's view outlives later commits until vacuum): the root
+    * ([[parseRoot]]) and every segment it points to. A root or segment
+    * in any other form throws, naming the file. */
+  def snapshotAt(spark: SparkSession, root: String, v: Long): Snapshot = {
     val (fs, rootP) = fsOf(spark, root)
-    val body = readTextFile(fs, manifestPath(rootP, v))
-    val lines = body.split("\n").map(_.trim).filter(_.nonEmpty).toSeq
-    if (lines.headOption.exists(_.startsWith(ManifestHeader))) {
-      val op = lines.head.split("\\s+").drop(1)
-        .collectFirst { case s if s.startsWith("op=") => s.stripPrefix("op=") }
-        .getOrElse(OpData)
-      val segRefs = lines.tail.filter(_.startsWith("@")).map(_.stripPrefix("@"))
-      val delEntries = lines.tail.filter(_.startsWith("-"))
-      val perSeg = segRefs.map { line =>
-        // dir-qualified pointer (`@<encDir>\t<ref>`) — the walk-capable
-        // form; a bare `@<ref>` (pre-r19 roots) takes the dir from the
-        // segment body instead
-        val (rootDir, ref) = line.split("\t", 2) match {
-          case Array(d, r) => (Some(dec(d)), r)
-          case _ => (None, line)
-        }
-        val segBody = readTextFile(fs, new Path(new Path(rootP, "_manifests"), ref))
-        val dir = rootDir.orElse(segBody.split("\n").headOption
-          .filter(_.startsWith("#dir=")).map(h => dec(h.stripPrefix("#dir="))))
-          .getOrElse("")
-        (dir, ref, parseSegment(segBody))
-      }
-      val files = (perSeg.flatMap(_._3.map(_._1)) ++ delEntries).sorted
-      Snapshot(v, files, op,
-        perSeg.map(s => s._1 -> s._2).toMap,
-        perSeg.flatMap(_._3).filter(_._2.rows >= 0L).toMap)
-    } else Snapshot(v, lines)
+    val p = manifestPath(rootP, v)
+    val (op, pointers, delEntries) = parseRoot(p, readTextFile(fs, p))
+    val stats = pointers.values.toSeq.flatMap { ref =>
+      val seg = new Path(new Path(rootP, "_manifests"), ref)
+      parseSegment(seg, readTextFile(fs, seg))
+    }
+    Snapshot(v, (stats.map(_._1) ++ delEntries).sorted, op, pointers,
+      stats.toMap)
   }
 
   private def readSchemaFile(fs: FileSystem, p: Path): StructType = {
@@ -525,28 +517,23 @@ object SnapshotStore {
     if (dataFiles.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         schema)
-    else if (s.stats.isEmpty)
-      // legacy manifests carry no stats — the plain multi-path read
-      spark.read
-        .schema(schema)
-        .option("basePath", s"$root/data")
-        .parquet(dataFiles.map(f => s"$root/data/$f"): _*)
     else {
-      // stat-bearing snapshots read through [[StatPruningFileIndex]]
-      // so MANIFEST bounds skip files on every consumer's pushed
-      // predicates — `read().filter(...)`, SQL over a registered view,
-      // readMor, the diff sides — not only the explicit readRange API.
-      // Same file list, same pinned schema, same column order
-      // (partition column last); an unfiltered read plans exactly the
-      // same files as before. r19: the manifest also carries each
-      // file's exact length, so planning synthesizes the FileStatuses
-      // instead of listing — zero listing jobs, zero per-file FS calls
-      // (the Iceberg scan-planning shape); legacy entries without a
-      // recorded length pay one listStatus per directory.
-      val index = new StatPruningFileIndex(spark,
-        dataFiles.map(f => new Path(s"$root/data/$f")),
+      // every read goes through [[StatPruningFileIndex]] so MANIFEST
+      // bounds skip files on every consumer's pushed predicates —
+      // `read().filter(...)`, SQL over a registered view, readMor, the
+      // diff sides — not only the explicit readRange API. Same file
+      // list, same pinned schema, same column order (partition column
+      // last). The manifest carries each file's exact length, so
+      // planning synthesizes the FileStatuses instead of listing — zero
+      // listing jobs, zero per-file FS calls (block size is nominal,
+      // mtime 0; splitting uses only the length).
+      val paths = dataFiles.map(f => new Path(s"$root/data/$f"))
+      val index = new StatPruningFileIndex(spark, paths,
         Map("basePath" -> s"$root/data"), schema, s.stats,
-        fileStatuses(spark, root, s, dataFiles))
+        dataFiles.zip(paths).map { case (f, path) =>
+          new org.apache.hadoop.fs.FileStatus(s.stats(f).bytes, false, 1,
+            134217728L, 0L, path)
+        })
       val partSchema = index.partitionSpec().partitionColumns
       val dataSchema = StructType(
         schema.fields.filterNot(f => partSchema.fieldNames.contains(f.name)))
@@ -555,34 +542,6 @@ object SnapshotStore {
           new org.apache.spark.sql.execution.datasources.parquet
             .ParquetFileFormat(), Map.empty)(spark)
       spark.baseRelationToDataFrame(relation)
-    }
-  }
-
-  /** The exact [[org.apache.hadoop.fs.FileStatus]] of every data file
-    * in `dataFiles` order: synthesized from the manifest's recorded
-    * lengths when every entry has one (zero FS calls — block size is
-    * nominal, mtime 0; splitting uses only the length), else one
-    * listStatus per directory (legacy manifests). A manifest-listed
-    * file missing from its directory fails loudly here instead of
-    * mid-scan. */
-  private def fileStatuses(spark: SparkSession, root: String,
-      s: Snapshot, dataFiles: Seq[String])
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    val lens = dataFiles.map(f => s.stats.get(f).map(_.bytes).getOrElse(-1L))
-    if (lens.forall(_ >= 0L))
-      dataFiles.zip(lens).map { case (rel, len) =>
-        new org.apache.hadoop.fs.FileStatus(len, false, 1, 134217728L, 0L,
-          new Path(s"$root/data/$rel"))
-      }
-    else {
-      val (fs, rootP) = fsOf(spark, root)
-      val byName: Map[String, org.apache.hadoop.fs.FileStatus] =
-        dataFiles.map(dirOf).distinct.flatMap { dir =>
-          fs.listStatus(new Path(new Path(rootP, "data"), dir))
-            .map(st => s"$dir/${st.getPath.getName}" -> st)
-        }.toMap
-      dataFiles.map(rel => byName.getOrElse(rel,
-        throw new java.io.FileNotFoundException(s"$root/data/$rel")))
     }
   }
 
@@ -600,7 +559,7 @@ object SnapshotStore {
     * opens, zero footer reads, zero tasks). `null` bounds are open
     * ends. Correctness NEVER depends on the stats: the residual
     * `colName BETWEEN lo AND hi` filter is applied to whatever
-    * survives, so absent/legacy stats just mean less skipping
+    * survives, so absent bounds just mean less skipping
     * (SnapshotStatsSpec pins inputFiles ⊆ overlapping files;
     * q_index_snapshot_statprune carries the DuckDB oracle). Physical
     * pre-delete view, the [[read]] contract. */
@@ -613,12 +572,8 @@ object SnapshotStore {
     val dt = schema(colName).dataType
     val loS = Option(lo).map(_.toString)
     val hiS = Option(hi).map(_.toString)
-    val kept = s.files.filterNot(_.startsWith("-")).filter { f =>
-      s.stats.get(f) match {
-        case Some(st) => statOverlapOne(st, colName, dt, loS, hiS)
-        case None => true
-      }
-    }
+    val kept = s.files.filterNot(_.startsWith("-"))
+      .filter(f => statOverlapOne(s.stats(f), colName, dt, loS, hiS))
     val pruned = read(spark, root, s.copy(files = kept))
     val c = col(colName)
     Seq(Option(lo).map(v => c >= org.apache.spark.sql.functions.lit(v)),
@@ -705,7 +660,7 @@ object SnapshotStore {
       rel -> FileStat(rows,
         all.map(b => b._1 -> b._2).toMap,
         all.map(b => b._1 -> b._3).toMap,
-        sizes.getOrElse(rel, -1L))
+        sizes(rel))
     }
     // footer opens are independent ~ms-scale metadata reads; a small
     // pool hides their per-file latency (local fs and object stores
@@ -917,33 +872,6 @@ object SnapshotStore {
   private[graft] val readbackRuns =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Stage `df` as new immutable data files: Spark writes a private
-    * directory, then each part file moves into the shared
-    * `data/pt=<v>/` layout under a commit-unique name, and the new
-    * files' [[FileStat]]s come from their own parquet FOOTERS
-    * ([[footerStats]] — driver-side metadata, zero Spark jobs, zero
-    * data decode) with each file's exact length captured from the
-    * staging listing. Returns the new files' relative paths + stats —
-    * they become visible only when a commit publishes a manifest
-    * listing them. One shuffle, partition-aligned: by default each
-    * touched directory gains ONE file (tasks × partitions slivers
-    * otherwise);
-    * with `binCol` set (the size-targeted [[binPack]] path) the
-    * shuffle keys on (partition, bin) so a hot partition's bins write
-    * in PARALLEL, and `maxRecordsPerFile` hard-bounds every output
-    * file regardless of bin-hash skew. */
-  // temporary round-19 instrumentation (env-guarded, zero cost unset)
-  private val storeTimers = sys.env.contains("SPARK_GRAFT_STORE_TIMERS")
-  private def timed[A](label: String)(body: => A): A =
-    if (!storeTimers) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(
-        f"[store] $label%-22s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    }
-
   /** Reference-counted per-session scope flipping the parquet writer to
     * TIMESTAMP_MICROS (see the call site in [[writeData]]): there is no
     * per-write option for the output timestamp type, only the session
@@ -954,7 +882,10 @@ object SnapshotStore {
     * session silently flips type (observed: downstream event-query
     * dumps went timezone-aware and broke the oracle dtype compare).
     * First entrant saves and sets, last leaver restores; sessions are
-    * weak keys so test suites' sessions can collect. */
+    * weak keys so test suites' sessions can collect. `saved` records
+    * whether the key was SET, not its effective value: `conf.getOption`
+    * reports the INT96 default for a never-set key, and restoring that
+    * would leave the key explicitly set for the rest of the session. */
   private final class TsScope { var depth = 0; var saved: Option[String] = None }
   private val tsScopes = new java.util.WeakHashMap[SparkSession, TsScope]()
   private def withMicrosTimestamps[A](spark: SparkSession)(body: => A): A = {
@@ -966,7 +897,9 @@ object SnapshotStore {
     }
     scope.synchronized {
       if (scope.depth == 0) {
-        scope.saved = spark.conf.getOption(key)
+        scope.saved =
+          if (spark.sessionState.conf.contains(key)) Some(spark.conf.get(key))
+          else None
         spark.conf.set(key, "TIMESTAMP_MICROS")
       }
       scope.depth += 1
@@ -991,6 +924,20 @@ object SnapshotStore {
       "SnapshotStore writes need spark.speculation=false: the v2 task " +
         "commit of speculative attempts would duplicate data files")
 
+  /** Stage `df` as new immutable data files: Spark writes a private
+    * directory, then each part file moves into the shared
+    * `data/pt=<v>/` layout under a commit-unique name, and the new
+    * files' [[FileStat]]s come from their own parquet FOOTERS
+    * ([[footerStats]] — driver-side metadata, zero Spark jobs, zero
+    * data decode) with each file's exact length captured from the
+    * staging listing. Returns the new files' relative paths + stats —
+    * they become visible only when a commit publishes a manifest
+    * listing them. One shuffle, partition-aligned: by default each
+    * touched directory gains ONE file (tasks × partitions slivers
+    * otherwise); with `binCol` set (the size-targeted [[binPack]] path)
+    * the shuffle keys on (partition, bin) so a hot partition's bins
+    * write in PARALLEL, and `maxRecordsPerFile` hard-bounds every
+    * output file regardless of bin-hash skew. */
   private def writeData(spark: SparkSession, root: String, df: DataFrame,
                         partCol: String, binCol: Option[String] = None,
                         maxRecordsPerFile: Long = 0L)
@@ -1024,10 +971,10 @@ object SnapshotStore {
     // Session-conf scoped around this one write via the reference-
     // counted [[withMicrosTimestamps]] — concurrent writers must not
     // race the save/restore.
-    withMicrosTimestamps(spark)(timed("write.parquet")(
+    withMicrosTimestamps(spark)(
       (if (maxRecordsPerFile > 0L)
         writer.option("maxRecordsPerFile", maxRecordsPerFile)
-      else writer).parquet(staging.toString)))
+      else writer).parquet(staging.toString))
     // pooled per-directory move (r20): the mkdirs + per-file renames of
     // different partition directories are independent metadata ops, so
     // they fan out on [[graft.InParallel.map]] instead of one sequential
@@ -1035,28 +982,29 @@ object SnapshotStore {
     // discipline as footerStats (decisive on an object store where
     // every rename is a remote copy+delete; measurable even on local
     // ChecksumFileSystem where each rename moves a .crc sibling too)
-    val sized: Seq[(String, Long)] = timed("rename-loop")(
-      graft.InParallel.map(
-          fs.listStatus(staging).filter(_.isDirectory).toSeq) { d =>
-        val dirName = d.getPath.getName // pt=<escaped-v>
-        val target = new Path(new Path(rootP, "data"), dirName)
-        fs.mkdirs(target)
-        fs.listStatus(d.getPath)
-          .filter(_.getPath.getName.endsWith(".parquet")).map { f =>
-            val name = s"$tag-${f.getPath.getName}"
-            require(fs.rename(f.getPath, new Path(target, name)),
-              s"failed to stage data file ${f.getPath} into $target")
-            (s"$dirName/$name", f.getLen)
-          }.toSeq
-      }.flatten)
+    val sized: Seq[(String, Long)] = graft.InParallel.map(
+        fs.listStatus(staging).filter(_.isDirectory).toSeq) { d =>
+      val dirName = d.getPath.getName // pt=<escaped-v>
+      val target = new Path(new Path(rootP, "data"), dirName)
+      fs.mkdirs(target)
+      fs.listStatus(d.getPath)
+        .filter(_.getPath.getName.endsWith(".parquet")).map { f =>
+          val name = s"$tag-${f.getPath.getName}"
+          require(fs.rename(f.getPath, new Path(target, name)),
+            s"failed to stage data file ${f.getPath} into $target")
+          (s"$dirName/$name", f.getLen)
+        }.toSeq
+    }.flatten
     fs.delete(staging, true)
     val rels = sized.map(_._1)
     val dataSchema = StructType(
       df.schema.fields.filterNot(f => binCol.contains(f.name)))
-    val stats = timed("collect-stats")(
-      footerStats(spark, root, rels, sized.toMap, dataSchema, partCol))
+    val stats =
+      footerStats(spark, root, rels, sized.toMap, dataSchema, partCol)
     (rels, stats)
   }
+
+  private def dirOf(f: String): String = f.takeWhile(_ != '/')
 
   /** Publish `files` as version `base.version + 1`. Protocol: write the
     * manifest body to a temp file, atomically CLAIM the version
@@ -1080,10 +1028,9 @@ object SnapshotStore {
     * later landed as version N). A prePublish failure leaves the claim
     * held and the version unpublished — the same fail-stop crash
     * window as a death between claim and rename, cleared by
-    * [[breakClaim]] (which also removes the version's side records). */
-  private def dirOf(f: String): String = f.takeWhile(_ != '/')
-
-  /** SEGMENTED manifest write (the Iceberg manifest-list shape, closing
+    * [[breakClaim]] (which also removes the version's side records).
+    *
+    * SEGMENTED manifest write (the Iceberg manifest-list shape, closing
     * the r17 verdict's O(live-files)-per-commit caveat): the root
     * manifest holds one `@segment` POINTER per partition plus the
     * staged-delete entries; each segment is an immutable file listing
@@ -1097,31 +1044,31 @@ object SnapshotStore {
     * identical rows. Segments are written BEFORE the claim (invisible
     * until the root references them) and rolled back on a lost claim;
     * a crashed writer's orphans are reclaimed by [[vacuum]] under the
-    * same grace window as staged data files. */
+    * same grace window as staged data files. Every listed data file
+    * needs a [[FileStat]] (from `newStats`, else `base`); one without is
+    * refused before anything is written or claimed. */
   private[graft] def commit(spark: SparkSession, root: String,
-                            files: Seq[String], base: Long,
+                            files: Seq[String], base: Snapshot,
                             arm: ClaimArm = ExclusiveCreateClaim,
                             prePublish: () => Unit = () => (),
                             op: String = OpData,
-                            newStats: Map[String, FileStat] = Map.empty,
-                            baseSnap: Option[Snapshot] = None): Snapshot = {
+                            newStats: Map[String, FileStat] = Map.empty)
+      : Snapshot = {
     val (fs, rootP) = fsOf(spark, root)
-    val next = base + 1
+    val next = base.version + 1
     val target = manifestPath(rootP, next)
     if (fs.exists(target)) // cheap early refusal; the claim is the guarantee
       throw new ConcurrentCommitException(
         s"version $next already committed at $root — a concurrent " +
           "writer won from the same base; re-read and retry")
-    val prev = baseSnap.orElse(
-      if (base >= 1L) scala.util.Try(snapshotAt(spark, root, base)).toOption
-      else None)
-    val prevByDir = prev.map(_.files.filterNot(_.startsWith("-"))
-      .groupBy(dirOf).map { case (d, fs0) => d -> fs0.toSet })
-      .getOrElse(Map.empty)
-    val prevStats = prev.map(_.stats).getOrElse(Map.empty)
-    val prevSegs = prev.map(_.segments).getOrElse(Map.empty)
-
     val (delEntries, dataFiles) = files.partition(_.startsWith("-"))
+    val stats = dataFiles.map { f =>
+      f -> newStats.get(f).orElse(base.stats.get(f)).getOrElse(
+        throw new IllegalArgumentException(
+          s"commit of version $next at $root lists $f with no FileStat"))
+    }.toMap
+    val prevByDir = base.files.filterNot(_.startsWith("-"))
+      .groupBy(dirOf).map { case (d, fs0) => d -> fs0.toSet }
     val byDir = dataFiles.groupBy(dirOf)
     val manifestsDir = new Path(rootP, "_manifests")
     val tag = java.util.UUID.randomUUID().toString.take(12)
@@ -1136,7 +1083,7 @@ object SnapshotStore {
     // every arm has stopped, so no still-running write can recreate a
     // segment the rollback just deleted.
     val planned = byDir.toSeq.sortBy(_._1).map { case (dir, dirFiles) =>
-      val reuse = prevSegs.get(dir)
+      val reuse = base.segments.get(dir)
         .filter(_ => prevByDir.get(dir).contains(dirFiles.toSet))
       (dir, dirFiles, reuse)
     }
@@ -1147,20 +1094,18 @@ object SnapshotStore {
         case None =>
           val ref = f"segments/$tag-$segIdx%04d.seg"
           segIdx += 1
-          val body = renderSegment(dir, dirFiles.map(f =>
-            f -> newStats.get(f).orElse(prevStats.get(f))))
+          val body = renderSegment(dir, dirFiles.map(f => f -> stats(f)))
           (ref, Some(body))
       }
     }
     val written: Seq[Path] = jobs.collect { case (ref, Some(_)) =>
       new Path(manifestsDir, ref) }
     def rollbackSegs(): Unit = written.foreach(fs.delete(_, false))
-    timed("commit-segments")(
-      try graft.InParallel.map(
-          jobs.collect { case (ref, Some(body)) => (ref, body) }) {
-        case (ref, body) =>
-          writeSmallFile(fs, new Path(manifestsDir, ref), body)
-      } catch { case e: Throwable => rollbackSegs(); throw e })
+    try graft.InParallel.map(
+        jobs.collect { case (ref, Some(body)) => (ref, body) }) {
+      case (ref, body) =>
+        writeSmallFile(fs, new Path(manifestsDir, ref), body)
+    } catch { case e: Throwable => rollbackSegs(); throw e }
     val segRefs = jobs.map(_._1)
 
     // dir-qualified pointers: the root alone carries (dir → segment)
@@ -1183,10 +1128,7 @@ object SnapshotStore {
     prePublish() // claim held: a throw here is the fail-stop crash window
     require(fs.rename(tmp, target),
       s"claimed version $next but failed to publish $target")
-    val dataSet = dataFiles.toSet
-    val allStats = (prevStats ++ newStats).filter(kv => dataSet(kv._1))
-    Snapshot(next, files.sorted, op,
-      byDir.keys.toSeq.sorted.zip(segRefs).toMap, allStats)
+    Snapshot(next, files.sorted, op, dirsSorted.zip(segRefs).toMap, stats)
   }
 
   /** Clear the claim a CONFIRMED-DEAD writer left between its claim and
@@ -1220,7 +1162,8 @@ object SnapshotStore {
     val out = fs.create(new Path(rootP, "_schema.json"), false)
     try out.write(df.schema.json.getBytes("UTF-8")) finally out.close()
     val (files, stats) = writeData(spark, root, df, partCol)
-    commit(spark, root, files, 0L, op = OpInit, newStats = stats)
+    commit(spark, root, files, Snapshot(0L, Seq.empty, OpInit, Map.empty,
+      Map.empty), op = OpInit, newStats = stats)
   }
 
   /** ADD-COLUMN schema evolution: commit a new version whose schema
@@ -1254,12 +1197,12 @@ object SnapshotStore {
         old.fields.last)
     val (fs, rootP) = fsOf(spark, root)
     val next = base.version + 1
-    commit(spark, root, base.files, base.version, prePublish = () => {
+    commit(spark, root, base.files, base, prePublish = () => {
       fs.mkdirs(new Path(rootP, "_schemas"))
       val rec = new Path(new Path(rootP, "_schemas"), f"s$next%09d.json")
       val out = fs.create(rec, false)
       try out.write(widened.json.getBytes("UTF-8")) finally out.close()
-    }, op = OpEvolve, baseSnap = Some(base))
+    }, op = OpEvolve)
   }
 
   /** PARTITION-SPEC EVOLUTION (the r17 verdict's missing #6): re-route
@@ -1327,8 +1270,8 @@ object SnapshotStore {
     val (newFiles, stats) = writeData(spark, root, rerouted, partCol)
     val kept = dataFiles.filterNot(f => chosen(dirOf(f)))
     val snap = commit(spark, root,
-      kept ++ newFiles ++ delFiles.map("-" + _), base.version,
-      op = OpRespec, newStats = stats, baseSnap = Some(base))
+      kept ++ newFiles ++ delFiles.map("-" + _), base,
+      op = OpRespec, newStats = stats)
     (chosen.size, snap)
   }
 
@@ -1356,8 +1299,8 @@ object SnapshotStore {
       .join(store, keys, "left_anti")
     val (newFiles, stats) = writeData(spark, root, fresh, partCol)
     (stats.valuesIterator.map(_.rows).sum,
-      commit(spark, root, base.files ++ newFiles, base.version,
-      op = OpCompact, newStats = stats, baseSnap = Some(base)))
+      commit(spark, root, base.files ++ newFiles, base,
+      op = OpCompact, newStats = stats))
   }
 
   /** The affected-partition membership predicate, null-complete: `isin`
@@ -1415,33 +1358,26 @@ object SnapshotStore {
           .toIndexedSeq, 1),
       StructType(Seq(StructField(partCol, partType))))
     val deadParts = dead.select(col(partCol).as("__dead_pt")).distinct()
-    val affected = timed("retract-affected")(
-      storeValsDf
-        .join(deadParts, col(partCol) <=> col("__dead_pt"), "left_semi")
-        .collect().map(_.get(0)))
+    val affected = storeValsDf
+      .join(deadParts, col(partCol) <=> col("__dead_pt"), "left_semi")
+      .collect().map(_.get(0))
     if (affected.isEmpty) return (0, 0L, base)
-    val pruned = store.filter(partitionIn(partCol, affected))
     // `before` (the rowsRemoved minuend) comes from the manifest's
-    // exact per-file row counts — zero I/O; a pre-stats legacy file in
-    // an affected dir degrades to the counting pass
+    // exact per-file row counts — zero I/O
     val affectedDirs = affected.map(partitionDir(partCol, _)).toSet
-    val affRows = base.files
-      .filterNot(_.startsWith("-"))
+    val before = base.files.filterNot(_.startsWith("-"))
       .filter(f => affectedDirs.exists(f.startsWith))
-      .map(f => base.stats.get(f).map(_.rows).getOrElse(-1L))
-    val before =
-      if (affRows.forall(_ >= 0L)) affRows.sum
-      else timed("retract-before-count")(pruned.count())
+      .map(base.stats(_).rows).sum
     // survivors feed the write directly (the compact one-pass shape);
     // `after` is the new files' exact footer row sum
-    val survivors = pruned
+    val survivors = store.filter(partitionIn(partCol, affected))
       .join(dead.select(keys.map(col).toIndexedSeq: _*).distinct(), keys,
         "left_anti")
     val (newFiles, stats) = writeData(spark, root, survivors, partCol)
     val after = stats.valuesIterator.map(_.rows).sum
     val kept = base.files.filterNot(f => affectedDirs.exists(f.startsWith))
-    val snap = commit(spark, root, kept ++ newFiles, base.version,
-      op = OpRetract, newStats = stats, baseSnap = Some(base))
+    val snap = commit(spark, root, kept ++ newFiles, base,
+      op = OpRetract, newStats = stats)
     (affected.length, before - after, snap)
   }
 
@@ -1454,9 +1390,8 @@ object SnapshotStore {
     * are visible ATOMICALLY with the commit, cost ∝ the delete-list,
     * zero data files touched. A later [[retract]] of the same keys
     * physically folds them and [[foldStagedDeletes]] clears the staged
-    * entries in the same pass. Manifest encoding: delete files carry a
-    * leading `-` (the format is line-per-file either way; old manifests
-    * have none). */
+    * entries in the same pass. Manifest encoding: delete files are
+    * listed inline in the root manifest with a leading `-`. */
   def stageDeletes(spark: SparkSession, root: String, dead: DataFrame,
                    keys: Seq[String]): Snapshot = {
     requireNoSpeculation(spark)
@@ -1484,8 +1419,7 @@ object SnapshotStore {
         s"-$name"
       }.toSeq
     fs.delete(staging, true)
-    commit(spark, root, base.files ++ moved, base.version,
-      op = OpStageDeletes, baseSnap = Some(base))
+    commit(spark, root, base.files ++ moved, base, op = OpStageDeletes)
   }
 
   /** The data-file / delete-file split of a snapshot's manifest. */
@@ -1531,28 +1465,21 @@ object SnapshotStore {
       .select((keys :+ partCol).map(col).toIndexedSeq: _*).distinct()
     val affected = dead.select(col(partCol)).distinct()
       .collect().map(_.get(0))
-    val pruned =
-      if (affected.isEmpty) store.limit(0)
-      else store.filter(partitionIn(partCol, affected))
     // manifest-exact `before`, one-pass survivors write, footer-exact
-    // `after` — the retract r19 shape
+    // `after` — the retract shape
     val affectedDirs = affected.map(partitionDir(partCol, _)).toSet
-    val affRows = dataFiles
-      .filter(f => affectedDirs.exists(f.startsWith))
-      .map(f => base.stats.get(f).map(_.rows).getOrElse(-1L))
-    val before =
-      if (affected.isEmpty) 0L
-      else if (affRows.forall(_ >= 0L)) affRows.sum
-      else pruned.count()
-    val survivors = pruned.join(deadKeys, keys, "left_anti")
+    val before = dataFiles.filter(f => affectedDirs.exists(f.startsWith))
+      .map(base.stats(_).rows).sum
+    val survivors = store.filter(partitionIn(partCol, affected))
+      .join(deadKeys, keys, "left_anti")
     val (newFiles, stats) =
       if (affected.isEmpty) (Seq.empty[String], Map.empty[String, FileStat])
       else writeData(spark, root, survivors, partCol)
     val after = stats.valuesIterator.map(_.rows).sum
     val kept = dataFiles.filterNot(f => affectedDirs.exists(f.startsWith))
     // one commit: survivors in, affected files out, delete entries out
-    val snap = commit(spark, root, kept ++ newFiles, base.version,
-      op = OpFold, newStats = stats, baseSnap = Some(base))
+    val snap = commit(spark, root, kept ++ newFiles, base,
+      op = OpFold, newStats = stats)
     (affected.length, before - after, snap)
   }
 
@@ -1595,9 +1522,8 @@ object SnapshotStore {
     * shuffles on (partition, bin) so a hot partition's bins land IN
     * PARALLEL, `maxRecordsPerFile` hard-bounds every file regardless
     * of bin-hash skew, and per-partition row counts come from the
-    * manifest's own [[FileStat]]s (zero I/O) with a partition-column-
-    * only aggregation as the legacy-manifest fallback. Content is
-    * unchanged either way (same oracle); the op_snapshot_packskew
+    * manifest's own [[FileStat]]s (zero I/O). Content is unchanged
+    * either way (same oracle); the op_snapshot_packskew
     * probe measures the straggler the target mode removes. */
   def binPack(spark: SparkSession, root: String,
               minFilesToPack: Int = 2,
@@ -1623,31 +1549,17 @@ object SnapshotStore {
         writeData(spark, root, frag, partCol)
       else {
         import org.apache.spark.sql.functions.{broadcast, pmod, xxhash64}
-        val statRows: Option[Map[String, Long]] =
-          if (fragments.forall(f => base.stats.get(f).exists(_.rows >= 0L)))
-            Some(packDirs.map { case (d, fls) =>
-              d -> fls.map(base.stats(_).rows).sum })
-          else None
         val partType = frag.schema(partCol).dataType
-        // the packed partitions' VALUES are the chosen dirs' own values
-        // (r19) — no distinct-over-fragments job; legacy stores without
-        // row stats still pay one counting pass for the bin sizing
-        val values: IndexedSeq[Any] =
-          packDirs.keys.toIndexedSeq.map(dirValueTyped(spark, _, partType))
-        val rowsOf: Any => Long = statRows match {
-          case Some(m) => v =>
-            m.getOrElse(partitionDir(partCol, v).stripSuffix("/"), 0L)
-          case None =>
-            val counted = frag.groupBy(col(partCol)).count().collect()
-              .map(r => Option(r.get(0)) -> r.getLong(1)).toMap
-            v => counted.getOrElse(Option(v), 0L)
-        }
+        // each packed partition's VALUE is its dir's own value and its
+        // row count the manifest's — no job sizes the bins
         val binsSchema = StructType(Seq(
           StructField("__pv", partType), StructField("__bins",
             org.apache.spark.sql.types.LongType, nullable = false)))
-        val binRows = values.map(v =>
-          org.apache.spark.sql.Row(v, math.max(1L,
-            (rowsOf(v) + targetRowsPerFile - 1L) / targetRowsPerFile)))
+        val binRows = packDirs.toIndexedSeq.map { case (d, fls) =>
+          val rows = fls.map(base.stats(_).rows).sum
+          org.apache.spark.sql.Row(dirValueTyped(spark, d, partType),
+            math.max(1L, (rows + targetRowsPerFile - 1L) / targetRowsPerFile))
+        }
         val binsDf = spark.createDataFrame(
           spark.sparkContext.parallelize(binRows, 1), binsSchema)
         val dataCols = frag.columns.filterNot(_ == partCol).toIndexedSeq
@@ -1663,8 +1575,8 @@ object SnapshotStore {
       }
     val kept = dataFiles.filterNot(f => packDirs.contains(dirOf(f)))
     val snap = commit(spark, root,
-      kept ++ newFiles ++ delFiles.map("-" + _), base.version,
-      op = OpBinPack, newStats = stats, baseSnap = Some(base))
+      kept ++ newFiles ++ delFiles.map("-" + _), base,
+      op = OpBinPack, newStats = stats)
     (packDirs.size, fragments.size, snap)
   }
 
@@ -1695,10 +1607,7 @@ object SnapshotStore {
     * fragmentation band makes the plan IDEMPOTENT: a pack lands files
     * in (target/2, target] (modulo one small remainder bin), so a
     * re-plan right after `binPack(dirs = plan.dirs)` is empty
-    * (SnapshotStatsSpec pins it). Partitions whose rows are unknown
-    * (legacy pre-stats files, rows = -1) are never marked hot and
-    * count as fragmented on file count alone — hotness needs
-    * evidence; fragmentation is name-based and always works. */
+    * (SnapshotStatsSpec pins it). */
   def maintenancePlan(spark: SparkSession, root: String,
                       minFilesToPack: Int = 2,
                       targetRowsPerFile: Long,
@@ -1706,28 +1615,88 @@ object SnapshotStore {
     require(targetRowsPerFile > 0L, "a plan needs a target file size")
     require(hotFactor >= 1L, "hotFactor below 1 marks healthy dirs hot")
     val base = current(spark, root)
-    val byDir = base.files.filterNot(_.startsWith("-")).groupBy(dirOf)
-    def rowsOf(fls: Seq[String]): Option[Seq[Long]] = {
-      val rs = fls.map(f => base.stats.get(f).map(_.rows).getOrElse(-1L))
-      if (rs.forall(_ >= 0L)) Some(rs) else None
-    }
-    val fragmented = byDir.filter { case (_, fls) =>
-      fls.size >= minFilesToPack && (rowsOf(fls) match {
-        case Some(rs) => // mean < target/2, integer-safe
-          2L * rs.sum < targetRowsPerFile * fls.size
-        case None => true // unknown rows: count is the only evidence
-      })
+    val rowsByDir = base.files.filterNot(_.startsWith("-")).groupBy(dirOf)
+      .map { case (d, fls) => d -> fls.map(base.stats(_).rows) }
+    val fragmented = rowsByDir.filter { case (_, rs) => // mean < target/2
+      rs.size >= minFilesToPack && 2L * rs.sum < targetRowsPerFile * rs.size
     }.keys.toSeq.sorted
-    val hot = byDir.filter { case (_, fls) =>
-      rowsOf(fls) match {
-        case Some(rs) =>
-          rs.sum > hotFactor * targetRowsPerFile &&
-            rs.exists(_ > targetRowsPerFile)
-        case None => false
-      }
+    val hot = rowsByDir.filter { case (_, rs) =>
+      rs.sum > hotFactor * targetRowsPerFile && rs.exists(_ > targetRowsPerFile)
     }.keys.toSeq.sorted
     MaintenancePlan(fragmented, hot)
   }
+
+  /** Order comparator over [[FileStat]] bound strings: numerics as
+    * decimals, timestamps parsed to the epoch (unparseable renderings —
+    * NaN/Infinity, an ISO-T query endpoint — yield None, so callers
+    * keep the file), everything else by CODE POINT via unsigned UTF-8
+    * byte comparison. Two r18 ADVICE findings live here: (1) Spark
+    * computes string min/max in UTF-8 binary order but
+    * `String.compareTo` is UTF-16 unit order — the two diverge for
+    * supplementary characters vs [U+E000,U+FFFF], so the old compare
+    * could PROVE false disjointness and skip files holding matching
+    * rows; UTF-8 byte comparison (the Iceberg convention) is exactly
+    * the order the bounds were computed in. (2) `Timestamp.toString`
+    * always renders '.0' while Spark's cast trims zero fractions, so
+    * '…05' < '…05.0' lexicographically pruned boundary-equal files —
+    * parsing both sides to the epoch compares values, not renderings. */
+  private[graft] def statCmp(dt: DataType, a: String, b: String): Option[Int] =
+    dt match {
+      case _: org.apache.spark.sql.types.NumericType =>
+        scala.util.Try(BigDecimal(a).compare(BigDecimal(b))).toOption
+      case org.apache.spark.sql.types.TimestampType =>
+        scala.util.Try(java.sql.Timestamp.valueOf(a)
+          .compareTo(java.sql.Timestamp.valueOf(b))).toOption
+      case _ => Some(java.util.Arrays.compareUnsigned(
+        a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        b.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    }
+
+  /** One version's WALK-GRAIN metadata — what [[diff]]'s op-attributed
+    * version walk needs from an intermediate step: the commit op and
+    * the dir→segment-pointer map (pointer identity ⟺ file-set identity
+    * between CONSECUTIVE versions, by the commit reuse discipline).
+    * Never the stats, never the rows. */
+  private case class StepMeta(op: String, pointers: Map[String, String])
+
+  private def historyPath(root: Path, v: Long): Path =
+    new Path(new Path(root, "_manifests/history"), f"v$v%09d.root")
+
+  /** Read version `v`'s walk metadata from its LIVE root manifest or —
+    * after vacuum retired it — from the metadata-only history copy
+    * (`_manifests/history/`, the Iceberg snapshot-log shape): root
+    * manifests are pointer files, so retaining them costs ~100 bytes a
+    * version while keeping the op walk pruned across any vacuum. None
+    * when the root is gone or unreadable — the caller degrades to the
+    * endpoint arm. */
+  private def stepMetaAt(fs: FileSystem, rootP: Path,
+      v: Long): Option[StepMeta] = scala.util.Try {
+    val live = manifestPath(rootP, v)
+    val p = if (fs.exists(live)) live else historyPath(rootP, v)
+    val (op, pointers, _) = parseRoot(p, readTextFile(fs, p))
+    StepMeta(op, pointers)
+  }.toOption
+
+  /** Dirs whose file set CHANGED between consecutive versions `a` → `b`
+    * (`b` is the committing step): the pointer symmetric difference —
+    * exact, because a commit writes a new segment iff the dir's file
+    * set changed. */
+  private def stepChangedDirs(a: StepMeta, b: StepMeta): Set[String] =
+    (a.pointers.keySet ++ b.pointers.keySet)
+      .filter(d => a.pointers.get(d) != b.pointers.get(d))
+
+  /** Can a file with stats `st` hold a value of `colName` inside
+    * [lo, hi] (None = open end)? True unless the bounds PROVE
+    * disjointness — absent bounds always keep. */
+  private[graft] def statOverlapOne(st: FileStat, colName: String,
+      dt: DataType, lo: Option[String], hi: Option[String]): Boolean =
+    (st.mins.get(colName), st.maxs.get(colName)) match {
+      case (Some(mn), Some(mx)) =>
+        val below = lo.exists(l => statCmp(dt, mx, l).exists(_ < 0))
+        val above = hi.exists(h => statCmp(dt, mn, h).exists(_ > 0))
+        !(below || above)
+      case _ => true
+    }
 
   /** The CHANGE FEED between two committed versions — "what entered and
     * what left the corpus between snapshot `fromV` and snapshot `toV`",
@@ -1763,139 +1732,6 @@ object SnapshotStore {
     * change_type 'changed' carrying `toV`'s columns — the
     * q_corpus_diff device, replayed verbatim by
     * q_index_snapshot_diff_values' oracle. */
-  /** Order comparator over [[FileStat]] bound strings: numerics as
-    * decimals, timestamps parsed to the epoch (unparseable renderings —
-    * NaN/Infinity, an ISO-T query endpoint — yield None, so callers
-    * keep the file), everything else by CODE POINT via unsigned UTF-8
-    * byte comparison. Two r18 ADVICE findings live here: (1) Spark
-    * computes string min/max in UTF-8 binary order but
-    * `String.compareTo` is UTF-16 unit order — the two diverge for
-    * supplementary characters vs [U+E000,U+FFFF], so the old compare
-    * could PROVE false disjointness and skip files holding matching
-    * rows; UTF-8 byte comparison (the Iceberg convention) is exactly
-    * the order the bounds were computed in. (2) `Timestamp.toString`
-    * always renders '.0' while Spark's cast trims zero fractions, so
-    * '…05' < '…05.0' lexicographically pruned boundary-equal files —
-    * parsing both sides to the epoch compares values, not renderings. */
-  private[graft] def statCmp(dt: DataType, a: String, b: String): Option[Int] =
-    dt match {
-      case _: org.apache.spark.sql.types.NumericType =>
-        scala.util.Try(BigDecimal(a).compare(BigDecimal(b))).toOption
-      case org.apache.spark.sql.types.TimestampType =>
-        scala.util.Try(java.sql.Timestamp.valueOf(a)
-          .compareTo(java.sql.Timestamp.valueOf(b))).toOption
-      case _ => Some(java.util.Arrays.compareUnsigned(
-        a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        b.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    }
-
-  /** One version's WALK-GRAIN metadata — what [[diff]]'s op-attributed
-    * version walk needs from an intermediate step: the commit op and
-    * either the dir→segment-pointer map (segmented roots; pointer
-    * identity ⟺ file-set identity between CONSECUTIVE versions, by the
-    * commit reuse discipline) or the dir→file-set map (legacy flat
-    * roots list files inline). Never the stats, never the rows. */
-  private case class StepMeta(op: String,
-      pointers: Option[Map[String, String]],
-      fileSets: Option[Map[String, Set[String]]]) {
-    def dirs: Set[String] =
-      pointers.map(_.keySet).orElse(fileSets.map(_.keySet))
-        .getOrElse(Set.empty)
-  }
-
-  private def historyPath(root: Path, v: Long): Path =
-    new Path(new Path(root, "_manifests/history"), f"v$v%09d.root")
-
-  /** Read version `v`'s walk metadata from its LIVE root manifest or —
-    * after vacuum retired it — from the metadata-only history copy
-    * (`_manifests/history/`, the Iceberg snapshot-log shape): root
-    * manifests are pointer files, so retaining them costs ~100 bytes a
-    * version while keeping the op walk pruned across any vacuum. Reads
-    * segment BODIES only for pre-r19 roots whose pointers carry no dir
-    * (and returns None when those are already reclaimed — the caller
-    * degrades to the endpoint arm). */
-  private def stepMetaAt(fs: FileSystem, rootP: Path,
-      v: Long): Option[StepMeta] = scala.util.Try {
-    val live = manifestPath(rootP, v)
-    val p = if (fs.exists(live)) live else historyPath(rootP, v)
-    val lines = readTextFile(fs, p).split("\n").map(_.trim)
-      .filter(_.nonEmpty).toSeq
-    if (lines.headOption.exists(_.startsWith(ManifestHeader))) {
-      val op = lines.head.split("\\s+").drop(1)
-        .collectFirst { case s if s.startsWith("op=") => s.stripPrefix("op=") }
-        .getOrElse(OpData)
-      val segLines = lines.tail.filter(_.startsWith("@")).map(_.stripPrefix("@"))
-      val qualified = segLines.map(_.split("\t", 2))
-      if (qualified.forall(_.length == 2))
-        StepMeta(op,
-          Some(qualified.map(t => dec(t(0)) -> t(1)).toMap), None)
-      else {
-        // pre-r19 root: dirs live only in the segment bodies — resolve
-        // them if still on disk (throws into the Try when vacuumed)
-        val sets = segLines.map { line =>
-          val ref = line.split("\t", 2).last
-          val body = readTextFile(fs, new Path(new Path(rootP, "_manifests"), ref))
-          val dir = body.split("\n").headOption
-            .filter(_.startsWith("#dir=")).map(h => dec(h.stripPrefix("#dir=")))
-            .getOrElse("")
-          dir -> parseSegment(body).map(_._1).toSet
-        }.toMap
-        StepMeta(op, None, Some(sets))
-      }
-    } else StepMeta(OpData, None,
-      Some(lines.filterNot(_.startsWith("-"))
-        .groupBy(dirOf).map { case (d, fls) => d -> fls.toSet }))
-  }.toOption
-
-  /** Dirs whose file set CHANGED between consecutive versions `a` → `b`
-    * (`b` is the committing step): pointer symmetric-difference where
-    * both roots are dir-qualified (exact — a commit writes a new
-    * segment iff the dir's file set changed), file-set comparison where
-    * both are resolvable, and the conservative both-sides dir union
-    * when the forms are mixed (correct, merely unpruned for that
-    * step). */
-  private def stepChangedDirs(a: StepMeta, b: StepMeta): Set[String] =
-    (a.pointers, b.pointers) match {
-      case (Some(pa), Some(pb)) =>
-        (pa.keySet ++ pb.keySet).filter(d => pa.get(d) != pb.get(d))
-      case _ => (a.fileSets, b.fileSets) match {
-        case (Some(fa), Some(fb)) =>
-          (fa.keySet ++ fb.keySet).filter(d =>
-            fa.getOrElse(d, Set.empty) != fb.getOrElse(d, Set.empty))
-        case _ => a.dirs ++ b.dirs
-      }
-    }
-
-  private def stepMetaOf(s: Snapshot): StepMeta = {
-    val sets = s.files.filterNot(_.startsWith("-"))
-      .groupBy(dirOf).map { case (d, fls) => d -> fls.toSet }
-    StepMeta(s.op,
-      if (s.segments.nonEmpty) Some(s.segments) else None, Some(sets))
-  }
-
-  /** Can a file with stats `st` hold a value of `colName` inside
-    * [lo, hi] (None = open end)? True unless the bounds PROVE
-    * disjointness — absent bounds always keep. */
-  private[graft] def statOverlapOne(st: FileStat, colName: String,
-      dt: DataType, lo: Option[String], hi: Option[String]): Boolean =
-    (st.mins.get(colName), st.maxs.get(colName)) match {
-      case (Some(mn), Some(mx)) =>
-        val below = lo.exists(l => statCmp(dt, mx, l).exists(_ < 0))
-        val above = hi.exists(h => statCmp(dt, mn, h).exists(_ > 0))
-        !(below || above)
-      case _ => true
-    }
-
-  /** Can file `f` (under snapshot `s`) hold a value of `colName` inside
-    * [lo, hi]? True unless the manifest bounds PROVE disjointness —
-    * absent stats always keep. */
-  private def statsOverlap(s: Snapshot, f: String, colName: String,
-      dt: DataType, lo: String, hi: String): Boolean =
-    s.stats.get(f) match {
-      case Some(st) => statOverlapOne(st, colName, dt, Some(lo), Some(hi))
-      case None => true
-    }
-
   def diff(spark: SparkSession, root: String, fromV: Long, toV: Long,
            keys: Seq[String], valueGrain: Boolean = false,
            endpointNameSetOnly: Boolean = false): DataFrame = {
@@ -1925,16 +1761,15 @@ object SnapshotStore {
     // degraded the feed to the endpoint arm and a post-vacuum consumer
     // re-read every packed partition). `endpointNameSetOnly = true` is
     // the measured counterfactual arm of the op_snapshot_diffwalk
-    // probe; a pre-r19 history whose bare-pointer roots AND segments
-    // are gone still degrades to the endpoint comparison — correct,
-    // just unpruned across reorgs.
+    // probe; an intermediate root that cannot be read degrades to the
+    // endpoint comparison — correct, just unpruned across reorgs.
     val (fs0, rootP0) = fsOf(spark, root)
     val walk: Option[Seq[StepMeta]] =
       if (endpointNameSetOnly) None
       else {
         val metas = (fromV to toV).map { v =>
-          if (v == fromV) Some(stepMetaOf(from))
-          else if (v == toV) Some(stepMetaOf(to))
+          if (v == fromV) Some(StepMeta(from.op, from.segments))
+          else if (v == toV) Some(StepMeta(to.op, to.segments))
           else stepMetaAt(fs0, rootP0, v)
         }
         if (metas.forall(_.isDefined)) Some(metas.map(_.get)) else None
@@ -1958,8 +1793,7 @@ object SnapshotStore {
     // keys route to without touching data files. The ADDED delete
     // files are small (cost ∝ delete-list), and their first-key range
     // BOUNDS which data files can matter — prune the fallback by the
-    // manifest stats (files without stats are kept: the legacy-store
-    // full diff). Keys in REMOVED entries (a fold) left their files in
+    // manifest stats. Keys in REMOVED entries (a fold) left their files in
     // a data-changing step the walk already marked. Pruning is
     // MANIFEST-DRIVEN (the Iceberg shape): the side views are built
     // from Snapshots containing only the retained files, so unchanged
@@ -1991,7 +1825,8 @@ object SnapshotStore {
       if (!delChanged) false
       else if (addedDel.isEmpty) false // fold-only: walk marked the dirs
       else delBound match {
-        case Some((dt, lo, hi)) => statsOverlap(s, f, keyCol, dt, lo, hi)
+        case Some((dt, lo, hi)) =>
+          statOverlapOne(s.stats(f), keyCol, dt, Some(lo), Some(hi))
         case None => true // no bound computable: full fallback
       }
 

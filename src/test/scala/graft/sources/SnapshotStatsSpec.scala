@@ -477,7 +477,7 @@ class SnapshotStatsSpec extends SparkTestBase {
     val threads = (0 until 16).map { i =>
       new Thread(() =>
         try {
-          SnapshotStore.commit(spark, root, v1.files, v1.version, arm)
+          SnapshotStore.commit(spark, root, v1.files, v1, arm)
           results.add(s"win-$i")
         } catch {
           case _: ConcurrentCommitException => results.add(s"refused-$i")
@@ -622,7 +622,7 @@ class SnapshotStatsSpec extends SparkTestBase {
     // write reproduces it exactly
     val base = SnapshotStore.current(spark, root)
     intercept[RuntimeException] {
-      SnapshotStore.commit(spark, root, base.files, base.version,
+      SnapshotStore.commit(spark, root, base.files, base,
         prePublish = () => {
           val rec = new org.apache.hadoop.fs.Path(root,
             "_schemas/s000000003.json")
@@ -633,7 +633,7 @@ class SnapshotStatsSpec extends SparkTestBase {
     }
     // the version is wedged loudly (fail-stop)...
     intercept[ConcurrentCommitException] {
-      SnapshotStore.commit(spark, root, base.files, base.version)
+      SnapshotStore.commit(spark, root, base.files, base)
     }
     // ...and breakClaim clears the claim AND the orphan record, so the
     // next version-3 commit cannot inherit a dead writer's schema
@@ -642,7 +642,7 @@ class SnapshotStatsSpec extends SparkTestBase {
       "_schemas/s000000003.json")),
       "breakClaim left the dead writer's schema record to attach to " +
         "whatever commit lands as version 3")
-    val v3 = SnapshotStore.commit(spark, root, base.files, base.version)
+    val v3 = SnapshotStore.commit(spark, root, base.files, base)
     assert(v3.version === 3L)
     assert(SnapshotStore.read(spark, root).columns.toSeq
       === SnapshotStore.readAt(spark, root, 2L).columns.toSeq)

@@ -131,7 +131,7 @@ class SnapshotStoreSpec extends SparkTestBase {
       Seq("g", "doc_id"), "pt")
     // writer A, still holding base v1, tries to publish ITS version 2
     val ex = intercept[ConcurrentCommitException] {
-      SnapshotStore.commit(spark, root, v1.files, v1.version)
+      SnapshotStore.commit(spark, root, v1.files, v1)
     }
     assert(ex.getMessage.contains("concurrent"))
     // the store is untouched by the refused commit
@@ -274,7 +274,7 @@ class SnapshotStoreSpec extends SparkTestBase {
     val threads = (0 until 16).map { i =>
       new Thread(() =>
         try {
-          SnapshotStore.commit(spark, root, v1.files, v1.version)
+          SnapshotStore.commit(spark, root, v1.files, v1)
           results.add(s"win-$i")
         } catch {
           case _: ConcurrentCommitException => results.add(s"refused-$i")
@@ -303,11 +303,11 @@ class SnapshotStoreSpec extends SparkTestBase {
       new org.apache.hadoop.fs.Path(s"$root/_manifests/v000000002.claim")))
     // every committer from base 1 is now refused — fail-stop
     intercept[ConcurrentCommitException] {
-      SnapshotStore.commit(spark, root, v1.files, v1.version)
+      SnapshotStore.commit(spark, root, v1.files, v1)
     }
     // the operator confirms the writer is dead and breaks the claim
     assert(SnapshotStore.breakClaim(spark, root, 2L))
-    val v2 = SnapshotStore.commit(spark, root, v1.files, v1.version)
+    val v2 = SnapshotStore.commit(spark, root, v1.files, v1)
     assert(v2.version === 2L)
     // a PUBLISHED version's claim is history, not a stale lock
     intercept[IllegalArgumentException] {
@@ -607,5 +607,79 @@ class SnapshotStoreSpec extends SparkTestBase {
       SnapshotStore.read(spark, root,
         SnapshotStore.snapshotAt(spark, root, 1L)).collect()
     }
+  }
+
+  test("a manifest in a form the writer never produces is refused at " +
+      "parse time, naming the file: no header, a bare pointer, a " +
+      "segment row without its byte length") {
+    val root = freshRoot()
+    SnapshotStore.init(spark, root, baseRows, "pt")
+    val rootManifest = "_manifests/v000000001.manifest"
+    def body(r: String, rel: String) =
+      new String(Files.readAllBytes(java.nio.file.Paths.get(r, rel)), "UTF-8")
+    val segRel = "_manifests/" + body(root, rootManifest).split("\n")
+      .find(_.startsWith("@")).get.split("\t")(1)
+    // a copy of the store with `rel` rewritten by `edit`; the refusal
+    // must name the edited file
+    def refusedAfter(rel: String)(edit: String => String): Unit = {
+      val copy = freshRoot()
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(root), new java.io.File(copy))
+      val edited = edit(body(copy, rel))
+      assert(edited !== body(copy, rel), s"the edit left $rel unchanged")
+      Files.write(java.nio.file.Paths.get(copy, rel), edited.getBytes("UTF-8"))
+      val ex = intercept[IllegalStateException] {
+        SnapshotStore.snapshotAt(spark, copy, 1L)
+      }
+      assert(ex.getMessage.contains(rel.split("/").last), ex.getMessage)
+    }
+    // the flat file list: the data files, one per line, no header
+    val files = SnapshotStore.snapshotAt(spark, root, 1L).files
+    refusedAfter(rootManifest)(_ => files.mkString("", "\n", "\n"))
+    // `@<ref>` without its `<encDir>\t` qualifier
+    refusedAfter(rootManifest)(_.split("\n").map(l =>
+      if (l.startsWith("@")) "@" + l.split("\t")(1) else l)
+      .mkString("", "\n", "\n"))
+    // `rows` without `:bytes`
+    refusedAfter(segRel)(_.split("\n").map(l =>
+      if (l.startsWith("#")) l
+      else l.split("\t", -1).toSeq match {
+        case rel +: rowsTok +: rest =>
+          (rel +: rowsTok.takeWhile(_ != ':') +: rest).mkString("\t")
+      }).mkString("", "\n", "\n"))
+  }
+
+  test("commit refuses a data file without stats before it claims: the " +
+      "version and the segment listing stay unchanged") {
+    val root = freshRoot()
+    val v1 = SnapshotStore.init(spark, root, baseRows, "pt")
+    val manifests = new java.io.File(root, "_manifests")
+    def segments = new java.io.File(manifests, "segments").list().toSet
+    val segsBefore = segments
+    val ghost = "pt=0/ghost.parquet"
+    val ex = intercept[IllegalArgumentException] {
+      SnapshotStore.commit(spark, root, v1.files :+ ghost, v1)
+    }
+    assert(ex.getMessage.contains(ghost), ex.getMessage)
+    assert(SnapshotStore.current(spark, root).version === 1L)
+    assert(!new java.io.File(manifests, "v000000002.claim").exists(),
+      "the refused commit claimed version 2")
+    assert(segments === segsBefore, "the refused commit wrote segments")
+  }
+
+  test("a store write leaves the session's parquet timestamp type as it " +
+      "found it: a never-set key stays unset, a user's value comes back") {
+    val key = "spark.sql.parquet.outputTimestampType"
+    val s = spark.newSession()
+    def rows = s.range(40).selectExpr("cast(id as string) AS g",
+      "id AS doc_id", "cast(id % 4 AS int) AS pt")
+    assert(!s.sessionState.conf.contains(key))
+    SnapshotStore.init(s, freshRoot(), rows, "pt")
+    assert(!s.sessionState.conf.contains(key),
+      s"the store write left $key set to ${s.conf.get(key)}")
+    s.conf.set(key, "TIMESTAMP_MILLIS")
+    SnapshotStore.init(s, freshRoot(), rows, "pt")
+    assert(s.sessionState.conf.contains(key))
+    assert(s.conf.get(key) === "TIMESTAMP_MILLIS")
   }
 }

@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
 # Full local replica of the driver's per-round gate:
-#   hrbench unit tests -> one checked hr_etl run -> compile -> scalatest
+#   hrbench unit tests -> one checked hr_etl run -> one checked
+#   store_queries run -> compile -> scalatest
 #   -> Verify@sf0.01 -> DuckDB oracle compare -> Bench@sf0.1
 # Usage: tools/gate.sh [--quick]   (--quick skips the bench)
 set -euo pipefail
@@ -15,6 +16,14 @@ python3 hrbench/run.py --workload hr_etl --seed 1 --seconds 0 --trace 0 \
   | python3 -c 'import json, sys
 r = json.loads([l for l in sys.stdin if l.startswith("{")][-1])
 print("hr_etl correct:", r["correct"], "failed:", r["failed"])
+sys.exit(0 if r["correct"] else 1)'
+
+# one checked store_queries pass: every SnapshotStore commit, read, diff
+# and vacuum answer, plus the five corpus queries, must come out correct
+python3 hrbench/run.py --workload store_queries --seed 1 --seconds 0 --trace 0 \
+  | python3 -c 'import json, sys
+r = json.loads([l for l in sys.stdin if l.startswith("{")][-1])
+print("store_queries correct:", r["correct"], "failed:", r["failed"])
 sys.exit(0 if r["correct"] else 1)'
 
 sbt -batch test 2>&1 | grep -aE "Tests:|TESTS FAILED" | tail -2
