@@ -39,15 +39,14 @@ object SparkEntry {
     * lineages under md5 with full DuckDB hash-matches), so dumping the
     * seeded face through Verify bought the correctness sheet nothing
     * but a permanent rows-only entry (r17 verdict directive 6). They
-    * stay first-class everywhere PERFORMANCE is measured — Bench and
-    * ScaleProbe run [[allQueries]] — and stay spec-pinned (DedupSpec /
+    * stay first-class everywhere PERFORMANCE is measured — Bench runs
+    * [[allQueries]] — and stay spec-pinned (DedupSpec /
     * AnnSpec recall-vs-brute pins); they are simply not part of the
     * driver's oracle dump. */
   private val InternalOnly = Set("q_dedup_clusters", "q_ann_lsh")
 
   /** EVERY query the library ships, including the seeded-hash
-    * production variants — the inventory Bench times and ScaleProbe
-    * probes. */
+    * production variants — the inventory Bench times. */
   def allQueries: Map[String, (SparkSession, String) => DataFrame] =
     graft.queries.ParityQueries.queries ++
       graft.queries.TextQueries.queries ++

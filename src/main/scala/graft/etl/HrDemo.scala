@@ -2,8 +2,6 @@ package graft.etl
 
 import java.sql.Date
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI surface for the HR pipeline (the reference's `python scripts/main.py`
   * equivalent): reads the five raw CSVs, builds the star schema + DQ checks,
   * writes CSV and parquet outputs, prints the insight report.
@@ -16,26 +14,14 @@ object HrDemo {
       "usage: HrDemo <rawCsvDir> <outDir> [asOf yyyy-MM-dd]")
     val Array(rawDir, outDir) = args.take(2)
     val asOf = Date.valueOf(args.lift(2).getOrElse("2026-01-01"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("hr-etl")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HrEntryPoints.session()
 
     val missing = Seq("employees", "departments", "performance_reviews",
       "projects", "project_assignments")
       .filterNot(t => new java.io.File(s"$rawDir/$t.csv").exists())
     require(missing.isEmpty, s"missing raw inputs: ${missing.mkString(", ")}")
 
-    val out = HrPipeline.build(spark,
-      HrPipeline.readCsv(spark, rawDir, "employees"),
-      HrPipeline.readCsv(spark, rawDir, "departments"),
-      HrPipeline.readCsv(spark, rawDir, "performance_reviews"),
-      HrPipeline.readCsv(spark, rawDir, "projects"),
-      HrPipeline.readCsv(spark, rawDir, "project_assignments"), asOf)
+    val out = HrEntryPoints.readAll(spark, rawDir, asOf)
 
     HrPipeline.writeCsv(out, s"$outDir/csv")
     HrPipeline.writeParquet(out, s"$outDir/parquet")

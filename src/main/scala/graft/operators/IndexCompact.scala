@@ -32,8 +32,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * which none of the one-exchange pins rely on), and the write cost
   * is one shuffle OF THE INCREMENT into bucket files — never a
   * history rewrite. IndexCompactSpec re-pins the next increment's
-  * one-exchange plan against the compacted table; ScaleProbe's
-  * compact block measures cost flat in history size.
+  * one-exchange plan against the compacted table; its cost measured
+  * flat across 64× history growth (SCALING.md, round 19).
   */
 object IndexCompact {
 

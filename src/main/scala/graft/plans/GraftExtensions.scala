@@ -145,7 +145,7 @@ object FuseVectorHofs extends Rule[LogicalPlan] {
   * (usable from `spark.sql` text and `call_function` without any
   * `register()` call — the per-query `register()` helpers stay for
   * sessions built without the extension), and (b) [[FuseVectorHofs]] as
-  * an operator-optimization rule. Bench/Verify/ScaleProbe and the test
+  * an operator-optimization rule. Bench/Verify and the test
   * base all build their sessions with this config, so every oracle run
   * and every spec executes under the extension — the full suite is the
   * no-regression witness for the rule's no-fire conservatism. */

@@ -106,8 +106,8 @@ object DedupQueries {
   /** Default gram document-frequency cap for q_dedup_containment — the
     * value its DuckDB oracle is generated with (`HAVING count(*) <=`).
     * The `spark.graft.dedup.maxGramDf` conf overrides it for production
-    * corpora and the hostile ScaleProbe, but a non-default cap moves the
-    * query OFF the oracle contract: Verify must run at the default. */
+    * corpora, but a non-default cap moves the query OFF the oracle
+    * contract: Verify must run at the default. */
   private[queries] val DefaultMaxGramDf = 100
 
   /** q_dedup_substring's shingle width (tokens per positional k-shingle)
@@ -207,8 +207,8 @@ object DedupQueries {
     * past the cap raises a distributed assert_true error naming the tag
     * and cap instead of being silently dropped: the correctness record
     * shows an explicit "cap engaged" failure, never a mystery mismatch.
-    * Bench and the hostile ScaleProbe runs leave the flag unset — the
-    * production contract stays cap-and-continue with the drop observed. */
+    * Bench leaves the flag unset — the production contract stays
+    * cap-and-continue with the drop observed. */
   private[graft] def capPerKey(df: DataFrame, tag: String,
       keys: Column*): DataFrame = {
     import df.sparkSession.implicits._
@@ -980,10 +980,11 @@ object DedupQueries {
     // total output order are deterministic in both engines. HARD
     // oracle: compacted = history ∪ (admits under keep-first), exactly.
     // IndexCompactSpec re-pins the NEXT increment's one-exchange plan
-    // against the compacted table; the ScaleProbe compact block
-    // measures cost flat in history size. This index stays a bucketed
-    // catalog table, not a SnapshotStore: the one-exchange admit plan
-    // needs the bucket layout, which the store does not offer.
+    // against the compacted table; its cost measured flat across 64×
+    // history growth (SCALING.md, round 19). This index stays a
+    // bucketed catalog table, not a SnapshotStore: the one-exchange
+    // admit plan needs the bucket layout, which the store does not
+    // offer.
     "q_index_compact" -> ((s, dir) => {
       import s.implicits._
       val docs = Tables.table(s, dir, "documents")
@@ -1026,8 +1027,8 @@ object DedupQueries {
     // postings, grouped. SnapshotStoreSpec pins the physical claims
     // (untouched partitions keep their exact files, all-victims
     // partitions leave the manifest, MOR == COW, composite identities,
-    // escaped string routing values); ScaleProbe's op_snapshot_retract
-    // block measures fold cost ∝ affected bytes.
+    // escaped string routing values); the fold's cost measured ∝
+    // affected bytes (SCALING.md, round 21).
     "q_index_retract" -> ((s, dir) => {
       import s.implicits._
       val postings = gramPostings(s, dir)
@@ -1118,8 +1119,8 @@ object DedupQueries {
     // physical reorganization only). SnapshotStoreSpec pins the
     // physical side (one file per packed dir, single-file partitions
     // keep their exact file, pre-pack versions stay readable until
-    // vacuum); the op_snapshot_binpack probe measures the scan-cost
-    // recovery the op exists for.
+    // vacuum); the scan-cost recovery the op exists for was measured
+    // by the op_snapshot_binpack probe (SCALING.md, round 22).
     "q_index_snapshot_binpack" -> ((s, dir) => {
       import s.implicits._
       val postings = gramPostings(s, dir)
@@ -2306,7 +2307,7 @@ object DedupQueries {
     // spark.graft.dedup.failOnCapExceeded=true globally, under which an
     // engaged cap raises a distributed assert_true naming the tag and
     // cap (capPerKey scaladoc) instead of silently truncating into an
-    // unexplained oracle mismatch. Bench/ScaleProbe leave the flag unset
+    // unexplained oracle mismatch. Bench leaves the flag unset
     // (production posture: cap-and-continue with the drop observed).
     val funcs = affineConsts.zipWithIndex
       .map { case ((a, b), i) => s"($i, $a, $b)" }

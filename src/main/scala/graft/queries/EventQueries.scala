@@ -17,6 +17,10 @@ import graft.{Clean, Tables}
   */
 object EventQueries {
 
+  /** The attribution join's bot-guard cap: views kept per (user, 2h
+    * cell), the latest first (see the q_events_attrib scaladoc). */
+  private val MaxViewsPerCell = 1000
+
   /** The attribution join's shared machinery — (purchases, capped
     * views, inner pairs) — built once for q_events_attrib and its
     * full-outer sibling. `purchases` carries (purchase_id, user_id,
@@ -28,8 +32,6 @@ object EventQueries {
       : (DataFrame, DataFrame, DataFrame) = {
     import s.implicits._
     val W = 7200L
-    val cap = s.conf.getOption("spark.graft.events.maxViewsPerCell")
-      .map(_.toInt).getOrElse(1000)
     val failOnCap = s.conf
       .getOption("spark.graft.dedup.failOnCapExceeded").contains("true")
     val ev = Tables.table(s, dir, "events")
@@ -46,18 +48,18 @@ object EventQueries {
     val capW = Window.partitionBy($"v_user", $"__bin")
       .orderBy($"view_sec".desc, $"view_id")
     val keep =
-      if (!failOnCap) $"__rn" <= cap
-      else $"__rn" <= cap || isnull(assert_true(lit(false),
+      if (!failOnCap) $"__rn" <= MaxViewsPerCell
+      else $"__rn" <= MaxViewsPerCell || isnull(assert_true(lit(false),
         concat(lit("[graft] view cap engaged in 'attrib': rank "),
-          $"__rn", lit(s" > spark.graft.events.maxViewsPerCell=$cap " +
+          $"__rn", lit(s" > MaxViewsPerCell=$MaxViewsPerCell " +
             "under failOnCapExceeded — truncation would diverge from " +
             "the exact oracle, failing fast instead"))))
     val v = views.withColumn("__bin",
         floor($"view_sec" / W).cast("long"))
       .withColumn("__rn", row_number().over(capW))
       .observe("hot_cells_attrib",
-        coalesce(sum(when($"__rn" > cap, 1L).otherwise(0L)), lit(0L))
-          .as("dropped_views"),
+        coalesce(sum(when($"__rn" > MaxViewsPerCell, 1L).otherwise(0L)),
+          lit(0L)).as("dropped_views"),
         coalesce(max($"__rn".cast("long")), lit(0L)).as("max_cell"))
       .filter(keep)
       .drop("__rn")
@@ -276,7 +278,7 @@ object EventQueries {
     // BOT GUARD (the capPerKey contract, attribution-shaped): a bot
     // user flooding views makes the per-cell pair fan-out quadratic in
     // its density — views per (user, 2h cell) are therefore capped at
-    // `spark.graft.events.maxViewsPerCell` (default 1000), keeping the
+    // [[MaxViewsPerCell]] (1000), keeping the
     // LATEST views in the cell, so per-purchase work and output are
     // bounded by 2·cap at ANY density and total growth is linear in
     // arrivals. When the cap ENGAGES, capped attribution is BIASED,

@@ -639,8 +639,8 @@ object SimilarityQueries {
       assignOn: String = "v"): DataFrame = {
     import vecs.sparkSession.implicits._
     // register here, not only in the query-map closures: a caller that
-    // reaches the pipeline directly (ScaleProbe's filtered runs, library
-    // users) must not depend on some OTHER query having registered the
+    // reaches the pipeline directly (library users, filtered runs) must
+    // not depend on some OTHER query having registered the
     // vector functions on this session first — the r10 knee hunt hit
     // exactly that latent ordering bug (cosine_sim unresolved)
     VectorFunctions.register(vecs.sparkSession)

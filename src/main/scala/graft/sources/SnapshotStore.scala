@@ -1523,8 +1523,9 @@ object SnapshotStore {
     * PARALLEL, `maxRecordsPerFile` hard-bounds every file regardless
     * of bin-hash skew, and per-partition row counts come from the
     * manifest's own [[FileStat]]s (zero I/O). Content is unchanged
-    * either way (same oracle); the op_snapshot_packskew
-    * probe measures the straggler the target mode removes. */
+    * either way (same oracle); the straggler the target mode removes
+    * was measured by the op_snapshot_packskew probe (SCALING.md,
+    * round 23). */
   def binPack(spark: SparkSession, root: String,
               minFilesToPack: Int = 2,
               targetRowsPerFile: Long = 0L,
@@ -1760,8 +1761,9 @@ object SnapshotStore {
     // r18 verdict's missing #2 — previously ANY vacuumed intermediate
     // degraded the feed to the endpoint arm and a post-vacuum consumer
     // re-read every packed partition). `endpointNameSetOnly = true` is
-    // the measured counterfactual arm of the op_snapshot_diffwalk
-    // probe; an intermediate root that cannot be read degrades to the
+    // the counterfactual arm SnapshotStatsSpec (d) and the
+    // op_snapshot_diffwalk probe (SCALING.md, round 24) measured; an
+    // intermediate root that cannot be read degrades to the
     // endpoint comparison — correct, just unpruned across reorgs.
     val (fs0, rootP0) = fsOf(spark, root)
     val walk: Option[Seq[StepMeta]] =

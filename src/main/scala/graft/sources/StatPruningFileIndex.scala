@@ -25,7 +25,9 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   * rendered through Catalyst's own string `Cast` (the exact rendering
   * the bounds were written in — dates as `2024-01-01`, not epoch
   * days), and anything unrenderable or unrecognized simply prunes
-  * nothing. Files without stats always survive. Correctness never
+  * nothing. Every data file must have a manifest stat
+  * ([[SnapshotStore.read]] passes one per file); a file without one
+  * fails the scan, naming the file. Correctness never
   * depends on the skipping — the planner still applies the full
   * predicates to whatever is read (SnapshotStatsSpec pins the scan's
   * file count through a `spark.sql` WHERE on a registered view;
@@ -115,14 +117,14 @@ private[graft] class StatPruningFileIndex(
     val base = super.listFiles(partitionFilters, dataFilters)
     val constraints = dataFilters.flatMap(boundsOf)
       .flatMap { case (c, lo, hi) => dtOf(c).map(dt => (c, dt, lo, hi)) }
-    if (constraints.isEmpty || stats.isEmpty) base
+    if (constraints.isEmpty) base
     else base.map { pd =>
       pd.copy(files = pd.files.filter { f =>
-        stats.get(relOf(f.getPath)) match {
-          case Some(st) => constraints.forall { case (c, dt, lo, hi) =>
-            SnapshotStore.statOverlapOne(st, c, dt, lo, hi)
-          }
-          case None => true
+        val st = stats.getOrElse(relOf(f.getPath),
+          throw new IllegalStateException(s"no manifest stat for data " +
+            s"file ${f.getPath} (key ${relOf(f.getPath)})"))
+        constraints.forall { case (c, dt, lo, hi) =>
+          SnapshotStore.statOverlapOne(st, c, dt, lo, hi)
         }
       })
     }.filter(_.files.nonEmpty)

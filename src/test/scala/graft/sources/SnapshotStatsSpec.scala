@@ -57,6 +57,16 @@ class SnapshotStatsSpec extends SparkTestBase {
 
   private def dirOf(f: String) = f.takeWhile(_ != '/')
 
+  /** Files the executed plan's parquet scans read. */
+  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
+    df.collect()
+    val scans = df.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.nonEmpty, "no FileSourceScan in the plan")
+    scans.map(_.metrics("numFiles").value).sum
+  }
+
   test("concurrent commits to two stores leave the session's parquet " +
       "timestamp conf exactly as it was (the reference-counted scope: " +
       "a naive save/restore pair races and re-installs the other " +
@@ -197,16 +207,6 @@ class SnapshotStatsSpec extends SparkTestBase {
       .diff(SnapshotStore.snapshotAt(spark, root, 1L).files.toSet)
     assert(midFiles.nonEmpty)
 
-    def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
-      df.queryExecution.executedPlan.foreach(_ => ()) // force planning
-      df.collect()
-      val scans = df.queryExecution.executedPlan.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-      }
-      assert(scans.nonEmpty, "no FileSourceScan in the plan")
-      scans.map(_.metrics("numFiles").value).sum
-    }
-
     // SQL face: the WHERE's pushed predicates reach the FileIndex
     SnapshotStore.registerVersionView(spark, root, "snap_prune_default")
     val viaSql = spark.sql("SELECT g, doc_id FROM snap_prune_default " +
@@ -229,6 +229,30 @@ class SnapshotStatsSpec extends SparkTestBase {
     val dataCount = snap.files.count(!_.startsWith("-")).toLong
     assert(scannedFiles(SnapshotStore.read(spark, root)) === dataCount,
       "an unfiltered read lost files to the pruning index")
+  }
+
+  test("(c3) stat pruning over escaped partition dirs: a WHERE read of " +
+      "a store routed by values needing path escaping (pt=k%3A1) returns " +
+      "the exact rows and scans only the overlapping file") {
+    val root = freshRoot()
+    val rows = Seq(("g-a", 1L, "k:1"), ("g-b", 2L, "k:1"),
+      ("g-c", 100L, "k:2"), ("g-d", 101L, "k:2"), ("g-e", 200L, "plain"))
+      .toDF("g", "doc_id", "pt")
+    val v1 = SnapshotStore.init(spark, root, rows, "pt")
+    assert(v1.files.map(dirOf).toSet === Set("pt=k%3A1", "pt=k%3A2",
+      "pt=plain"), s"fixture degenerate: ${v1.files}")
+    SnapshotStore.registerVersionView(spark, root, "snap_prune_escaped")
+    try {
+      val low = spark.sql(
+        "SELECT g, doc_id FROM snap_prune_escaped WHERE doc_id <= 10")
+      assert(scannedFiles(low) === 1L)
+      assert(low.as[(String, Long)].collect().toSet
+        === Set(("g-a", 1L), ("g-b", 2L)))
+      val mid = SnapshotStore.read(spark, root)
+        .filter($"doc_id" >= 100 && $"doc_id" <= 101)
+      assert(scannedFiles(mid) === 1L)
+      assert(rowSet(mid) === Set(("g-c", 100L), ("g-d", 101L)))
+    } finally spark.catalog.dropTempView("snap_prune_escaped")
   }
 
   test("(d) a diff across a binPack reads NOTHING through the op walk; " +
@@ -592,41 +616,54 @@ class SnapshotStatsSpec extends SparkTestBase {
     import org.apache.spark.sql.types.{IntegerType, StructField}
     val root = freshRoot()
     SnapshotStore.init(spark, root, baseRows, "pt")
-    val results = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // all 16 threads leave one barrier together; a thread that resolves
+    // its base after an earlier winner published may legitimately win
+    // the next version, so the protocol guarantees distinct winning
+    // versions, one record each, and a refusal for everyone else
+    val start = new java.util.concurrent.CyclicBarrier(16)
+    val wins = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val refused = new java.util.concurrent.atomic.AtomicInteger()
     val threads = (0 until 16).map { i =>
       new Thread(() =>
         try {
-          SnapshotStore.evolve(spark, root,
+          start.await()
+          val v = SnapshotStore.evolve(spark, root,
             Seq(StructField(s"col_$i", IntegerType)))
-          results.add(s"win-$i")
+          wins.add((i, v.version))
         } catch {
-          case _: ConcurrentCommitException => results.add(s"refused-$i")
+          case _: ConcurrentCommitException => refused.incrementAndGet()
         })
     }
     threads.foreach(_.start()); threads.foreach(_.join())
     import scala.jdk.CollectionConverters._
-    val wins = results.asScala.toSeq.filter(_.startsWith("win"))
-    assert(wins.size === 1, s"evolve race: $wins")
-    val winnerCol = s"col_${wins.head.stripPrefix("win-")}"
-    // exactly ONE schema record exists, and it is the winner's — a
-    // loser writing its record pre-claim was the r17 ADVICE bug
+    val won = wins.asScala.toSeq
+    val versions = won.map(_._2)
+    assert(won.nonEmpty && versions.distinct.size === won.size,
+      s"evolve race: winners $won")
+    assert(refused.get() === 16 - won.size,
+      s"evolve race: ${won.size} winners, ${refused.get()} refused")
+    // one schema record per winning version and no other — a loser
+    // writing its record pre-claim was the r17 ADVICE bug
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def rec(v: Long) =
+      new org.apache.hadoop.fs.Path(root, f"_schemas/s$v%09d.json")
     val recs = fs.listStatus(
       new org.apache.hadoop.fs.Path(root, "_schemas")).map(_.getPath.getName)
-    assert(recs.toSeq === Seq("s000000002.json"))
-    assert(SnapshotStore.read(spark, root).columns.contains(winnerCol))
+    assert(recs.toSeq.sorted === versions.sorted.map(rec(_).getName))
+    val finalCols = SnapshotStore.read(spark, root).columns.toSet
+    assert(won.forall { case (i, _) => finalCols(s"col_$i") },
+      s"a winner's column is missing: $won vs $finalCols")
 
-    // crash window: a writer that claims v3, writes its record, and
-    // dies before publishing — prePublish throwing AFTER the record
-    // write reproduces it exactly
+    // crash window: a writer that claims the next version, writes its
+    // record, and dies before publishing — prePublish throwing AFTER
+    // the record write reproduces it exactly
     val base = SnapshotStore.current(spark, root)
+    val next = base.version + 1
     intercept[RuntimeException] {
       SnapshotStore.commit(spark, root, base.files, base,
         prePublish = () => {
-          val rec = new org.apache.hadoop.fs.Path(root,
-            "_schemas/s000000003.json")
-          val o = fs.create(rec, false)
+          val o = fs.create(rec(next), false)
           try o.write("{}".getBytes("UTF-8")) finally o.close()
           throw new RuntimeException("writer died post-claim")
         })
@@ -636,15 +673,14 @@ class SnapshotStatsSpec extends SparkTestBase {
       SnapshotStore.commit(spark, root, base.files, base)
     }
     // ...and breakClaim clears the claim AND the orphan record, so the
-    // next version-3 commit cannot inherit a dead writer's schema
-    assert(SnapshotStore.breakClaim(spark, root, 3L))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(root,
-      "_schemas/s000000003.json")),
+    // next commit cannot inherit a dead writer's schema
+    assert(SnapshotStore.breakClaim(spark, root, next))
+    assert(!fs.exists(rec(next)),
       "breakClaim left the dead writer's schema record to attach to " +
-        "whatever commit lands as version 3")
-    val v3 = SnapshotStore.commit(spark, root, base.files, base)
-    assert(v3.version === 3L)
+        s"whatever commit lands as version $next")
+    val landed = SnapshotStore.commit(spark, root, base.files, base)
+    assert(landed.version === next)
     assert(SnapshotStore.read(spark, root).columns.toSeq
-      === SnapshotStore.readAt(spark, root, 2L).columns.toSeq)
+      === SnapshotStore.readAt(spark, root, base.version).columns.toSeq)
   }
 }

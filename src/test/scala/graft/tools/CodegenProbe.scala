@@ -15,7 +15,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 object CodegenProbe {
   def main(args: Array[String]): Unit = {
     // mode 2: "query <dir>" — run q_doc_bpe_train over a materialized
-    // corpus three times in one session (the ScaleProbe path, with
+    // corpus three times in one session (a scaling run's path, with
     // compile-event accounting), to separate JIT warm-up from janino
     // compilation through the REAL query lineage
     if (args.headOption.contains("query")) { queryMode(args(1)); return }

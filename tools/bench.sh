@@ -11,7 +11,7 @@
 #      classes + jars);
 #   2. the compiled classes are COPIED to tools/.bench_stage/ first, so
 #      a concurrent compile cannot touch what the bench JVM loads;
-#   3. it refuses to start while another sbt/ScaleProbe JVM is alive
+#   3. it refuses to start while another sbt/Bench JVM is alive
 #      (override: SPARK_GRAFT_BENCH_FORCE=1), because a contended
 #      record is worthless no matter how it was launched.
 #
@@ -39,11 +39,11 @@ if [ "${SPARK_GRAFT_BENCH_FORCE:-0}" != "1" ]; then
   # graft.Bench itself is in the pattern: a SIBLING official run is the
   # single worst contention source (this guard runs while we are still
   # bash, so the current process never matches the java-comm filter)
-  for p in $(pgrep -f 'sbt-launch|xsbt.boot.Boot|graft.ScaleProbe|graft.Bench' || true); do
+  for p in $(pgrep -f 'sbt-launch|xsbt.boot.Boot|graft.Bench' || true); do
     [ "$(cat /proc/"$p"/comm 2>/dev/null)" = "java" ] && busy="$busy $p"
   done
   if [ -n "$busy" ]; then
-    echo "bench.sh: refusing to bench while sbt/ScaleProbe/another Bench runs (pids:$busy)" >&2
+    echo "bench.sh: refusing to bench while sbt/another Bench runs (pids:$busy)" >&2
     echo "bench.sh: wait for them or set SPARK_GRAFT_BENCH_FORCE=1" >&2
     exit 2
   fi
