@@ -20,79 +20,22 @@ object HrValidate {
     rows.toDF("table_name", "check_name", "detail", "violations")
   }
 
-  /** One check result. */
-  private def result(spark: SparkSession, table: String, check: String,
-                     detail: String, violations: Long): DataFrame =
-    checkRows(spark, Seq((table, check, detail, violations)))
-
-  /** reference validation.py:7-26 (check_completeness): null PK, duplicate
-    * PK, per-required-column nulls, missing columns. */
-  def checkCompleteness(spark: SparkSession, df: DataFrame, table: String,
-                        pk: String, required: Seq[String]): DataFrame = {
-    val missing = (pk +: required).filterNot(df.columns.contains)
-    val missingDf = missing.map(c =>
-      result(spark, table, "missing_column", c, 1L))
-    if (!df.columns.contains(pk))
-      return missingDf.reduce(_ union _)
-    val presentReq = required.filter(df.columns.contains)
-    val aggs =
-      sum(when(col(pk).isNull, 1L).otherwise(0L)).as("null_pk") +:
-        (count(col(pk)) - countDistinct(col(pk))).as("dup_pk") +:
-        presentReq.map(c =>
-          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"null_$c"))
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val checks =
-      result(spark, table, "null_pk", pk, row.getAs[Long]("null_pk")) +:
-        result(spark, table, "duplicate_pk", pk, row.getAs[Long]("dup_pk")) +:
-        presentReq.map(c =>
-          result(spark, table, "null_required", c, row.getAs[Long](s"null_$c")))
-    (checks ++ missingDf).reduce(_ union _)
-  }
-
-  /** reference validation.py:28-45 (check_consistency): FK values (minus
-    * the -1 sentinel) not present in the parent — a distributed anti-join,
-    * never a collected key set. */
-  def checkConsistency(spark: SparkSession, child: DataFrame, childFk: String,
-                       parent: DataFrame, parentPk: String,
-                       childTable: String): DataFrame = {
-    val bad =
-      if (!child.columns.contains(childFk) || !parent.columns.contains(parentPk)) 0L
-      else child
-        .filter(col(childFk).isNotNull && col(childFk) =!= -1)
-        .select(col(childFk).as("__fk")).distinct()
-        .join(parent.select(col(parentPk).as("__pk")),
-          col("__fk") === col("__pk"), "left_anti")
-        .count()
-    result(spark, childTable, "fk_consistency", s"$childFk->$parentPk", bad)
-  }
-
-  /** reference validation.py:47-57 (check_accuracy): violations are rows
-    * where `~condition` holds; pandas boolean masks coerce NaN comparisons
-    * to False, so a null-valued condition IS a violation here — matching
-    * `df[~condition]` exactly. Call sites that need pandas' positive-mask
-    * semantics instead (nulls NOT violations, reference validation.py:85-87)
-    * pre-coalesce their condition. */
-  def checkAccuracy(spark: SparkSession, df: DataFrame, table: String,
-                    validCond: org.apache.spark.sql.Column,
-                    label: String): DataFrame = {
-    val bad = df.filter(!coalesce(validCond, lit(false))).count()
-    result(spark, table, "accuracy", label, bad)
-  }
-
-  /** One table's whole check set in ONE action: the per-check API above
-    * mirrors the reference's one-action-per-check shape; this folds every
-    * completeness and accuracy aggregate into a single `agg`, and each FK
-    * check in as a left join against the parent's DISTINCT keys
-    * (distinct, so child rows never multiply; violations = countDistinct
-    * of unmatched keys, exactly the anti-join count). Emits the same
-    * (table, check, detail, violations) rows as [[checkCompleteness]],
-    * [[checkConsistency]] and [[checkAccuracy]] called in turn, in the
-    * same order (HrEtlSpec pins it), as plain values.
+  /** One table's whole check set in ONE action. The reference runs one
+    * action per check (validation.py:7-57: check_completeness,
+    * check_consistency, check_accuracy); this folds every completeness
+    * and accuracy aggregate into a single `agg`, and each FK check in as
+    * a left join against the parent's DISTINCT keys (distinct, so child
+    * rows never multiply; violations = countDistinct of unmatched keys,
+    * exactly the anti-join count). Emits the same (table, check, detail,
+    * violations) rows as the per-check suite, in the same order, as
+    * plain values — HrEtlSpec "single-pass DQ…" keeps that suite as its
+    * reference and pins the equality.
     *
     * @param pk       None = no completeness block (e.g. assignments)
     * @param fks      (childFk, parentTable, parentPk) triples
-    * @param accuracy (validCond, label) pairs — checkAccuracy semantics
-    *                 (a null-valued condition IS a violation)
+    * @param accuracy (validCond, label) pairs — violations are rows
+    *                 where `~condition` holds, as in pandas' boolean
+    *                 masks, so a null-valued condition IS a violation
     */
   private def singlePassChecks(df: DataFrame, table: String,
                                pk: Option[String], required: Seq[String],

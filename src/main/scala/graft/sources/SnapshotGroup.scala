@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import SnapshotStore.{claimPath, dec, enc, fsOf, manifestPath,
+  publishedVersions, readTextFile}
 
 /** MULTI-TABLE snapshot transactions (the r17 verdict's stretch #9) —
   * the cross-table consistency a curation pipeline needs when two
@@ -50,28 +52,10 @@ object SnapshotGroup {
 
   case class GroupSnapshot(version: Long, members: Map[String, Long])
 
-  private def enc(s: String): String =
-    java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String): String =
-    java.net.URLDecoder.decode(s, "UTF-8")
-
-  private def fsOf(spark: SparkSession, root: String): (FileSystem, Path) = {
-    val p = new Path(root)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-  private def manifestPath(root: Path, v: Long): Path =
-    new Path(new Path(root, "_manifests"), f"v$v%09d.manifest")
-  private def claimPath(root: Path, v: Long): Path =
-    new Path(new Path(root, "_manifests"), f"v$v%09d.claim")
-
-  private def readText(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 65536, false)
-      bos.toString("UTF-8")
-    } finally in.close()
-  }
+  // The group's version log is the store's (`_manifests/v<K>.manifest`
+  // and `.claim`, the same encoding and lister); its own files are
+  // written create-exclusive, never through the store's overwriting
+  // small-file writer.
   private def writeFile(fs: FileSystem, p: Path, body: String): Unit = {
     val out = fs.create(p, false)
     try out.write(body.getBytes("UTF-8")) finally out.close()
@@ -106,9 +90,9 @@ object SnapshotGroup {
         .map(n => n.stripPrefix("m").stripSuffix(".list").toLong)
         .filter(_ <= v)
         .sorted.lastOption
-        .map(k => parseMembers(readText(fs, membershipPath(rootP, k))))
+        .map(k => parseMembers(readTextFile(fs, membershipPath(rootP, k))))
     evolved.getOrElse(
-      parseMembers(readText(fs, new Path(rootP, "_members"))))
+      parseMembers(readTextFile(fs, new Path(rootP, "_members"))))
   }
 
   /** The CURRENT membership (name → store root). */
@@ -147,7 +131,7 @@ object SnapshotGroup {
   def snapshotAt(spark: SparkSession, groupRoot: String,
                  v: Long): GroupSnapshot = {
     val (fs, rootP) = fsOf(spark, groupRoot)
-    val pins = readText(fs, manifestPath(rootP, v)).split("\n")
+    val pins = readTextFile(fs, manifestPath(rootP, v)).split("\n")
       .map(_.trim).filter(_.nonEmpty).map { l =>
         val i = l.lastIndexOf('=')
         dec(l.take(i)) -> l.drop(i + 1).toLong
@@ -157,13 +141,11 @@ object SnapshotGroup {
 
   def current(spark: SparkSession, groupRoot: String): GroupSnapshot = {
     val (fs, rootP) = fsOf(spark, groupRoot)
-    val dir = new Path(rootP, "_manifests")
-    require(fs.exists(dir), s"no snapshot group at $groupRoot")
-    val versions = fs.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".manifest"))
-      .map(n => n.stripPrefix("v").stripSuffix(".manifest").toLong)
+    require(fs.exists(new Path(rootP, "_manifests")),
+      s"no snapshot group at $groupRoot")
+    val versions = publishedVersions(fs, rootP)
     require(versions.nonEmpty, s"no committed group version at $groupRoot")
-    snapshotAt(spark, groupRoot, versions.max)
+    snapshotAt(spark, groupRoot, versions.last)
   }
 
   /** Read member `name` THROUGH the group pin — the all-or-nothing
@@ -326,11 +308,7 @@ object SnapshotGroup {
              graceMs: Long = 0L): Int = {
     require(keepVersions >= 1, "must retain at least the current version")
     val (fs, rootP) = fsOf(spark, groupRoot)
-    val dir = new Path(rootP, "_manifests")
-    val versions = fs.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".manifest"))
-      .map(n => n.stripPrefix("v").stripSuffix(".manifest").toLong)
-      .sorted
+    val versions = publishedVersions(fs, rootP)
     val retained = versions.takeRight(keepVersions)
     val pinsByMember = retained.map(v => snapshotAt(spark, groupRoot, v))
       .flatMap(_.members.toSeq)
@@ -498,15 +476,12 @@ object SnapshotGroup {
       s"group version $next is published at $groupRoot — nothing to roll back")
     var removed = 0
     members(spark, groupRoot).foreach { case (n, r) =>
-      val storeRoot = new Path(r)
-      val sfs = storeRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val (sfs, storeRoot) = fsOf(spark, r)
       var v = SnapshotStore.current(spark, r).version
       while (v > base.members(n)) {
-        val m = new Path(new Path(storeRoot, "_manifests"),
-          f"v$v%09d.manifest")
+        val m = manifestPath(storeRoot, v)
         require(sfs.delete(m, false), s"rollback failed to drop $m")
-        sfs.delete(new Path(new Path(storeRoot, "_manifests"),
-          f"v$v%09d.claim"), false)
+        sfs.delete(claimPath(storeRoot, v), false)
         removed += 1
         v -= 1
       }

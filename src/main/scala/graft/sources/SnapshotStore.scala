@@ -169,9 +169,9 @@ object SnapshotStore {
   /** String-stat prefix length (see [[FileStat]]). */
   private[graft] val StatPrefixLen = 64
 
-  private def enc(s: String): String =
+  private[sources] def enc(s: String): String =
     java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String): String =
+  private[sources] def dec(s: String): String =
     java.net.URLDecoder.decode(s, "UTF-8")
 
   /** Increment the last incrementable CODE POINT of a ≤[[StatPrefixLen]]
@@ -351,30 +351,39 @@ object SnapshotStore {
     }
   }
 
-  private def fsOf(spark: SparkSession, root: String): (FileSystem, Path) = {
+  private[sources] def fsOf(spark: SparkSession,
+                            root: String): (FileSystem, Path) = {
     val p = new Path(root)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def manifestPath(root: Path, v: Long): Path =
+  private[sources] def manifestPath(root: Path, v: Long): Path =
     new Path(new Path(root, "_manifests"), f"v$v%09d.manifest")
 
-  private def claimPath(root: Path, v: Long): Path =
+  private[sources] def claimPath(root: Path, v: Long): Path =
     new Path(new Path(root, "_manifests"), f"v$v%09d.claim")
+
+  /** The published versions under `root/_manifests` (`v<K>.manifest`),
+    * ascending — the version log of a store and of a [[SnapshotGroup]]
+    * alike. Retired roots under `_manifests/history` are not listed. */
+  private[sources] def publishedVersions(fs: FileSystem,
+                                         rootP: Path): Seq[Long] =
+    fs.listStatus(new Path(rootP, "_manifests")).map(_.getPath.getName)
+      .filter(n => n.startsWith("v") && n.endsWith(".manifest"))
+      .map(n => n.stripPrefix("v").stripSuffix(".manifest").toLong)
+      .sorted.toSeq
 
   /** Resolve the current snapshot: the highest committed manifest. */
   def current(spark: SparkSession, root: String): Snapshot = {
     val (fs, rootP) = fsOf(spark, root)
-    val dir = new Path(rootP, "_manifests")
-    require(fs.exists(dir), s"no snapshot store at $root")
-    val versions = fs.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".manifest"))
-      .map(n => n.stripPrefix("v").stripSuffix(".manifest").toLong)
+    require(fs.exists(new Path(rootP, "_manifests")),
+      s"no snapshot store at $root")
+    val versions = publishedVersions(fs, rootP)
     require(versions.nonEmpty, s"no committed version at $root")
-    snapshotAt(spark, root, versions.max)
+    snapshotAt(spark, root, versions.last)
   }
 
-  private def readTextFile(fs: FileSystem, p: Path): String = {
+  private[sources] def readTextFile(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
     try {
       val bos = new java.io.ByteArrayOutputStream()
@@ -1904,10 +1913,7 @@ object SnapshotStore {
     require(keepVersions >= 1, "must retain at least the current version")
     val (fs, rootP) = fsOf(spark, root)
     val dir = new Path(rootP, "_manifests")
-    val versions = fs.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".manifest"))
-      .map(n => n.stripPrefix("v").stripSuffix(".manifest").toLong)
-      .sorted
+    val versions = publishedVersions(fs, rootP)
     val retain = (versions.takeRight(keepVersions) ++
       versions.filter(alsoRetain)).distinct.sorted
     val retainSnaps = retain.map(v => snapshotAt(spark, root, v))

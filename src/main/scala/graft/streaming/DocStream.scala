@@ -1,10 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, GroupState, OutputMode}
 import org.apache.spark.sql.types._
-import graft.queries.{CurationQueries, MediaQueries}
+import graft.queries.{CurationQueries, MediaQueries, PqQueries,
+  SimilarityQueries}
 
 /** Structured Streaming faces of the corpus-curation operators: the
   * ingestion-time twin of [[graft.queries.CurationQueries]]'s batch
@@ -18,9 +20,9 @@ import graft.queries.{CurationQueries, MediaQueries}
   * and per-batch work is linear in batch size exactly like the batch
   * query's per-partition work.
   */
-// Serializable because the ANN serve closures call the module-private
-// boundedTopK helper, which makes the flatMapGroupsWithState lambdas
-// capture the module instance.
+// Serializable because the per-arrival reducers call module-private
+// helpers (boundedTopK, cosine, snap4), which makes the
+// flatMapGroupsWithState lambdas capture the module instance.
 object DocStream extends Serializable {
 
   /** The documents schema as shipped in the testdata parquet. */
@@ -626,10 +628,9 @@ object DocStream extends Serializable {
   def semanticDedup(newVecs: DataFrame, historyVecs: DataFrame,
                     tau: Double = 0.3, prepared: Boolean = false,
                     cents: Seq[(Int, Seq[Double])] =
-                      graft.queries.SimilarityQueries.semCentroids(16, 64),
+                      SimilarityQueries.semCentroids(16, 64),
                     assignTicks: Boolean = false)
       : DataFrame = {
-    import graft.queries.SimilarityQueries
     require(cents.nonEmpty, "semanticDedup needs at least one centroid")
     // cosineSim resolves through the session's function registry
     graft.functions.VectorFunctions.register(newVecs.sparkSession)
@@ -638,13 +639,7 @@ object DocStream extends Serializable {
     val hist =
       if (prepared) historyVecs.select(col("cell"), col("hv"))
       else prepareSemIndex(historyVecs, cents, assignTicks)
-    val guarded = SimilarityQueries.semDedupGuard(
-      newVecs.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v")))
-    val incoming =
-      if (assignTicks) SimilarityQueries.semAssign(
-        SimilarityQueries.withTicks(guarded), cents, on = "dv")
-      else SimilarityQueries.semAssign(guarded, cents)
+    val incoming = assignCell(guardVecs(newVecs), cents, assignTicks)
     incoming.join(hist, incoming("cell") === hist("cell") &&
         graft.Clean.roundHalfUp(
           graft.functions.VectorFunctions.cosineSim(incoming("v"),
@@ -660,25 +655,83 @@ object DocStream extends Serializable {
     * only be cleared globally. */
   def prepareSemIndex(historyVecs: DataFrame,
       cents: Seq[(Int, Seq[Double])] =
-        graft.queries.SimilarityQueries.semCentroids(16, 64),
+        SimilarityQueries.semCentroids(16, 64),
       assignTicks: Boolean = false): DataFrame = {
-    import graft.queries.SimilarityQueries
     graft.functions.VectorFunctions.register(historyVecs.sparkSession)
-    val guarded = SimilarityQueries.semDedupGuard(
-      historyVecs.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v")))
-    val assigned =
-      if (assignTicks) SimilarityQueries.semAssign(
-        SimilarityQueries.withTicks(guarded), cents, on = "dv")
-      else SimilarityQueries.semAssign(guarded, cents)
-    SimilarityQueries.semHistoryIndex(assigned)
+    SimilarityQueries.semHistoryIndex(
+        assignCell(guardVecs(historyVecs), cents, assignTicks))
       .select(col("cell"), col("v").as("hv"))
       .cache()
   }
 
+  /** The query-vector guard every vector face applies first: `(vec_id,
+    * v)` with the float embedding widened to doubles, then
+    * [[SimilarityQueries.semDedupGuard]]. */
+  private def guardVecs(vecs: DataFrame): DataFrame =
+    SimilarityQueries.semDedupGuard(vecs.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("v")))
+
+  /** Quantizer cell of each guarded vector. With `assignTicks` (centroids
+    * from the fixed-point trainer) assignment ranks on the tick copy the
+    * batch faces rank on, keeping live and nightly cell boundaries
+    * bit-identical ([[semanticDedup]]'s contract). */
+  private def assignCell(guarded: DataFrame, cents: Seq[(Int, Seq[Double])],
+                         assignTicks: Boolean): DataFrame =
+    if (assignTicks) SimilarityQueries.semAssign(
+      SimilarityQueries.withTicks(guarded), cents, on = "dv")
+    else SimilarityQueries.semAssign(guarded, cents)
+
   /** One served neighbor from [[annSearch]]. */
   case class AnnHit(query_id: Long, rank: Int, neighbor_id: Long,
                     cosine: Double)
+
+  /** The zero-state arrival device every per-arrival face runs on:
+    * `rows` grouped by `key` (the arrival's id), `f` applied once per
+    * group as a flatMapGroupsWithState that NEVER writes state.
+    *
+    * One arrival — a query vector, a media item, a document — is one
+    * source row, so every row derived from it (probe cells, band rows,
+    * frames, tokens) lands in that arrival's own micro-batch: its group
+    * fires exactly once with all of its rows, needs nothing from
+    * earlier batches, and state_rows stays 0 at any arrival count. Each
+    * face's spec pins both that zero-state contract (from the progress
+    * metrics) and its row-for-row agreement with the batch twin. The
+    * unused state slot is typed `Long` on purpose: its encoder is part
+    * of the streaming plan and of a running query's checkpointed state
+    * schema, so it must not change under a deployed face. */
+  private def perArrival[T, U: Encoder](rows: Dataset[T])(key: T => Long)(
+      f: (Long, Iterator[T]) => Iterator[U]): Dataset[U] = {
+    implicit val unusedState: Encoder[Long] = Encoders.scalaLong
+    rows.groupByKey(key)
+      .flatMapGroupsWithState[Long, U](OutputMode.Append,
+        GroupStateTimeout.NoTimeout)((id, it, _) => f(id, it))
+  }
+
+  /** The per-doc reducer of the seven scorer faces on [[perArrival]]:
+    * `emit(doc_id, rows, Σa, Σb)` over the doc's rows. */
+  private def perDoc[T, U: Encoder](rows: Dataset[T])(key: T => Long,
+      a: T => Long, b: T => Long = (_: T) => 0L)(
+      emit: (Long, Long, Long, Long) => U): Dataset[U] =
+    perArrival(rows)(key) { (id, it) =>
+      var n = 0L; var sa = 0L; var sb = 0L
+      it.foreach { r => n += 1; sa += a(r); sb += b(r) }
+      Iterator.single(emit(id, n, sa, sb))
+    }
+
+  /** The 4-dp half-up snap of the batch twins (`Clean.roundHalfUp`'s
+    * floor formula), and its tick form. */
+  private def ticks4(x: Double): Double = math.floor(x * 10000 + 0.5)
+  private def snap4(x: Double): Double = ticks4(x) / 10000
+
+  /** The CosineSim op sequence (one ascending loop, dot/(√na·√nb)) in
+    * Scala, bit-equal to the batch pairwise cosines. */
+  private def cosine(a: Seq[Double], b: Seq[Double]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < a.length) {
+      dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
 
   /** Bounded top-k over a streamed candidate iterator: a size-`k`
     * max-heap keyed by the WORST kept element (smaller under `ord` =
@@ -700,6 +753,28 @@ object DocStream extends Serializable {
     heap.dequeueAll.reverse
   }
 
+  /** The serve path of the three top-k faces ([[annSearch]],
+    * [[annSearchPq]], [[annSearchPqRes]]): `(query_id, cell, ...)` probe
+    * rows make ONE stream-static equi-join on `cell` against the cached
+    * index (at 100 TB a cell-bucketed table, so a probe touches nprobe/K
+    * of the corpus), a query never serves itself, every candidate gets
+    * the face's `score` column, and [[perArrival]] keeps each query's
+    * best `k` (neighbor_id, score) under `order` through
+    * [[boundedTopK]], ranked from 1 by `hit`. */
+  private def serveTopK[S, U: Encoder](probes: DataFrame, index: DataFrame,
+      score: Column, k: Int, order: Ordering[(Long, S)])(
+      hit: (Long, Int, Long, S) => U)(
+      implicit scoredEnc: Encoder[(Long, Long, S)]): Dataset[U] = {
+    val scored = probes.join(index, Seq("cell"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), score)
+      .as[(Long, Long, S)]
+    perArrival(scored)(_._1) { (id, rows) =>
+      boundedTopK(rows.map(r => (r._2, r._3)), k)(order).iterator
+        .zipWithIndex.map { case ((nid, s), i) => hit(id, i + 1, nid, s) }
+    }
+  }
+
   /** Build + cache the cell-assigned ANN corpus index `(cell, vec_id,
     * v)` ONCE for any number of [[annSearch]] stream setups — the
     * [[prepareSemIndex]] device for serving. UNCAPPED, deliberately:
@@ -712,16 +787,9 @@ object DocStream extends Serializable {
   def prepareAnnIndex(corpusVecs: DataFrame,
       cents: Seq[(Int, Seq[Double])],
       assignTicks: Boolean = false): DataFrame = {
-    import graft.queries.SimilarityQueries
     graft.functions.VectorFunctions.register(corpusVecs.sparkSession)
-    val guarded = SimilarityQueries.semDedupGuard(
-      corpusVecs.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v")))
-    val assigned =
-      if (assignTicks) SimilarityQueries.semAssign(
-        SimilarityQueries.withTicks(guarded), cents, on = "dv")
-      else SimilarityQueries.semAssign(guarded, cents)
-    assigned.select(col("cell"), col("vec_id"), col("v")).cache()
+    assignCell(guardVecs(corpusVecs), cents, assignTicks)
+      .select(col("cell"), col("vec_id"), col("v")).cache()
   }
 
   /** Streaming ANN serving — the deployment face of `q_ann_ivf`, and
@@ -734,16 +802,11 @@ object DocStream extends Serializable {
     *
     * Plan shape, all stateless: nprobe cell ids per arriving query are
     * a PURE PROJECTION (the [[graft.queries.SimilarityQueries.nearestCells]]
-    * literal-array sort ivfPipeline uses) exploded to nprobe rows; ONE
-    * stream-static equi-join on `cell` against the cached index (at
-    * 100 TB: cell-bucketed table, so a probe touches nprobe/K of the
-    * corpus); scoring + the 4-dp snap are per-row expressions. The
-    * top-k per query runs as flatMapGroupsWithState that NEVER writes
-    * state — a query's candidates all land in its own micro-batch (one
-    * query = one source row), so the group fires exactly once and
-    * state_rows stays 0 at any arrival count (AnnStreamSpec pins both
-    * the row-for-row agreement with the batch ranking on a replayed
-    * probe set and the zero-state contract).
+    * literal-array sort ivfPipeline uses) exploded to nprobe rows, then
+    * the [[serveTopK]] path; scoring + the 4-dp snap are per-row
+    * expressions, and the top-k runs on the zero-state [[perArrival]]
+    * device (AnnStreamSpec pins both the row-for-row agreement with the
+    * batch ranking on a replayed probe set and the zero-state contract).
     *
     * `assignTicks = true` when `cents` came from the fixed-point
     * trainer, keeping probe cell choices bit-identical to the nightly
@@ -754,13 +817,9 @@ object DocStream extends Serializable {
                 nprobe: Int = 4, k: Int = 5,
                 assignTicks: Boolean = false): Dataset[AnnHit] = {
     import spark.implicits._
-    import graft.queries.SimilarityQueries
     require(cents.nonEmpty, "annSearch needs at least one centroid")
     graft.functions.VectorFunctions.register(spark)
-    val kL = k
-    val guarded = SimilarityQueries.semDedupGuard(
-      queryVecs.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v")))
+    val guarded = guardVecs(queryVecs)
     val probes = (if (assignTicks) SimilarityQueries.withTicks(guarded)
       else guarded.withColumn("dv", col("v")))
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
@@ -768,25 +827,12 @@ object DocStream extends Serializable {
       .withColumn("cell",
         explode(SimilarityQueries.nearestCells(cents, col("qav"), nprobe)))
       .select(col("query_id"), col("qv"), col("cell"))
-    val scored = probes.join(index, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        graft.Clean.roundHalfUp(
-          graft.functions.VectorFunctions.cosineSim(col("qv"), col("v")), 4)
-          .as("cosine"))
-      .as[(Long, Long, Double)]
-    def topk(id: Long, rows: Iterator[(Long, Long, Double)],
-             state: GroupState[Long]): Iterator[AnnHit] = {
+    serveTopK[Double, AnnHit](probes, index,
+      graft.Clean.roundHalfUp(
+        graft.functions.VectorFunctions.cosineSim(col("qv"), col("v")), 4)
+        .as("cosine"), k,
       // the batch window's exact order: cosine desc, neighbor_id asc
-      boundedTopK(rows.map { case (_, nid, cos) => (nid, cos) }, kL)(
-          Ordering.by { case (nid, cos) => (-cos, nid) })
-        .zipWithIndex
-        .map { case ((nid, cos), i) => AnnHit(id, i + 1, nid, cos) }
-        .iterator
-    }
-    scored.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(topk)
+      Ordering.by { case (nid, cos) => (-cos, nid) })(AnnHit(_, _, _, _))
   }
 
   /** One diverse pick served by [[searchDiverse]]: the MMR selection
@@ -803,9 +849,8 @@ object DocStream extends Serializable {
     * the smaller vec_id) — a reranker exactly where production runs
     * one, on the retrieved pool. Bounded work, zero state: the pool is
     * a `pool`-element bounded heap over the candidate stream, the
-    * greedy is O(k·pool) tick cosines, and group state is never
-    * written (a query's candidates land in its own micro-batch, the
-    * [[annSearch]] contract — MmrStreamSpec pins state_rows 0). With
+    * greedy is O(k·pool) tick cosines, and the reranker runs on the
+    * [[perArrival]] device (MmrStreamSpec pins state_rows 0). With
     * `nprobe` = the full cell count the candidate set is the whole
     * corpus and the served picks are IDENTICAL to the batch query's
     * (spec-pinned on a replayed probe); production nprobe trades pool
@@ -815,15 +860,9 @@ object DocStream extends Serializable {
                     nprobe: Int = 4, pool: Int = 50,
                     k: Int = 10): Dataset[DiverseHit] = {
     import spark.implicits._
-    import graft.queries.SimilarityQueries
     require(cents.nonEmpty, "searchDiverse needs at least one centroid")
     graft.functions.VectorFunctions.register(spark)
-    val poolL = pool
-    val kL = k
-    val guarded = SimilarityQueries.semDedupGuard(
-      queryVecs.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v")))
-    val probes = guarded
+    val probes = guardVecs(queryVecs)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
       .withColumn("cell",
         explode(SimilarityQueries.nearestCells(cents, col("qv"), nprobe)))
@@ -836,28 +875,16 @@ object DocStream extends Serializable {
           .cast("long").as("rel_t"),
         col("v"))
       .as[(Long, Long, Long, Seq[Double])]
-    def mmr(id: Long, rows: Iterator[(Long, Long, Long, Seq[Double])],
-            state: GroupState[Long]): Iterator[DiverseHit] = {
-      // the CosineSim op sequence (one ascending loop, dot/(√na·√nb)),
-      // snapped with the same floor formula — bit-equal to the batch
-      // pairwise ticks
-      def simT(a: Seq[Double], b: Seq[Double]): Long = {
-        var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < a.length) {
-          dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-        }
-        math.floor(dot / (math.sqrt(na) * math.sqrt(nb)) * 10000 + 0.5)
-          .toLong
-      }
+    perArrival(scored)(_._1) { (id, rows) =>
       val cand = boundedTopK(
-        rows.map { case (_, vid, rt, v) => (vid, rt, v) }, poolL)(
+        rows.map { case (_, vid, rt, v) => (vid, rt, v) }, pool)(
         Ordering.by { case (vid, rt, _) => (-rt, vid) })
       val ms = scala.collection.mutable.Map(
         cand.map(c => c._1 -> 0L).toSeq: _*)
       val remaining = cand.to(scala.collection.mutable.ArrayBuffer)
       val picks = scala.collection.mutable.Buffer.empty[DiverseHit]
       var r = 1
-      while (r <= kL && remaining.nonEmpty) {
+      while (r <= k && remaining.nonEmpty) {
         val best = remaining.minBy {
           case (vid, rt, _) => (-(rt - ms(vid)), vid)
         }
@@ -865,16 +892,15 @@ object DocStream extends Serializable {
           best._2 - ms(best._1))
         remaining -= best
         remaining.foreach { case (vid, _, v) =>
-          val t = simT(v, best._3)
+          // snapped with the same floor formula: bit-equal to the batch
+          // pairwise ticks
+          val t = ticks4(cosine(v, best._3)).toLong
           if (t > ms(vid)) ms(vid) = t
         }
         r += 1
       }
       picks.iterator
     }
-    scored.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(mmr)
   }
 
   /** One served neighbor from [[annSearchPq]] — the ADC distance is an
@@ -895,16 +921,12 @@ object DocStream extends Serializable {
   def prepareAnnIndexPq(corpusVecs: DataFrame,
       cents: Seq[(Int, Seq[Double])],
       books: Seq[(Int, Int, Seq[Long])]): DataFrame = {
-    import graft.queries.{PqQueries, SimilarityQueries}
     val s = corpusVecs.sparkSession
     graft.functions.VectorFunctions.register(s)
     val (encode, _) = graft.functions.PqFunctions.bind(s,
       graft.functions.PqBooks(books, PqQueries.PqM, PqQueries.PqSubDim))
-    val guarded = SimilarityQueries.semDedupGuard(
-      corpusVecs.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v")))
     SimilarityQueries.assignCells(
-        SimilarityQueries.withTicks(guarded), cents, on = "v")
+        SimilarityQueries.withTicks(guardVecs(corpusVecs)), cents, on = "v")
       .select(col("cell"), col("vec_id"),
         encode(col("tv")).getField("poss").as("poss"))
       .cache()
@@ -920,51 +942,35 @@ object DocStream extends Serializable {
     *
     * Plan shape, all stateless: the probe's nprobe cells and its M
     * distance tables ([[graft.functions.PqKernels.dtabs]], M·k longs)
-    * are pure projections on the arriving row; ONE stream-static
-    * equi-join on `cell` against the cached code index; the ADC
-    * distance is one codegen'd `pq_adist` call per candidate — M table
-    * lookups, never a vector op. Top-k per query runs as
-    * flatMapGroupsWithState that NEVER writes state (one query = one
-    * source row, so its candidates land in its own micro-batch;
-    * AnnPqStreamSpec pins row-for-row agreement with q_ann_ivfpq's
-    * hash-matched ranking and the zero-state contract). */
+    * are pure projections on the arriving row, then the [[serveTopK]]
+    * path; the ADC distance is one codegen'd `pq_adist` call per
+    * candidate — M table lookups, never a vector op (AnnPqStreamSpec
+    * pins row-for-row agreement with q_ann_ivfpq's hash-matched ranking
+    * and the zero-state contract). */
   def annSearchPq(spark: SparkSession, queryVecs: DataFrame,
                   index: DataFrame, cents: Seq[(Int, Seq[Double])],
                   books: Seq[(Int, Int, Seq[Long])],
                   nprobe: Int = 4, k: Int = 5): Dataset[AnnPqHit] = {
     import spark.implicits._
-    import graft.queries.{PqQueries, SimilarityQueries}
     require(books.nonEmpty, "annSearchPq needs a trained codebook")
     require(cents.nonEmpty, "annSearchPq needs at least one centroid")
     graft.functions.VectorFunctions.register(spark)
     val (_, dtabs) = graft.functions.PqFunctions.bind(spark,
       graft.functions.PqBooks(books, PqQueries.PqM, PqQueries.PqSubDim))
-    val kL = k
-    val guarded = SimilarityQueries.semDedupGuard(
-      queryVecs.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v")))
-    val probes = SimilarityQueries.withTicks(guarded)
+    val probes = SimilarityQueries.withTicks(guardVecs(queryVecs))
       .select(col("vec_id").as("query_id"), dtabs(col("tv")).as("dtabs"),
         explode(SimilarityQueries.nearestCells(cents, col("v"), nprobe))
           .as("cell"))
-    val scored = probes.join(index, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        graft.functions.PqFunctions.adist(col("dtabs"), col("poss"))
-          .as("adist"))
-      .as[(Long, Long, Long)]
-    def topk(id: Long, rows: Iterator[(Long, Long, Long)],
-             state: GroupState[Long]): Iterator[AnnPqHit] = {
-      // the batch window's exact order: adist asc, neighbor_id asc
-      boundedTopK(rows.map { case (_, nid, d) => (d, nid) }, kL)
-        .zipWithIndex
-        .map { case ((d, nid), i) => AnnPqHit(id, i + 1, nid, d) }
-        .iterator
-    }
-    scored.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(topk)
+    serveTopK[Long, AnnPqHit](probes, index, adistCol, k, adistOrder)(
+      AnnPqHit(_, _, _, _))
   }
+
+  /** The PQ faces' score and order: the exact-long ADC distance, ranked
+    * like the batch window (adist asc, neighbor_id asc). */
+  private def adistCol: Column =
+    graft.functions.PqFunctions.adist(col("dtabs"), col("poss")).as("adist")
+  private val adistOrder: Ordering[(Long, Long)] =
+    Ordering.by { case (nid, d) => (d, nid) }
 
   /** Build + cache the RESIDUAL code-only IVF-PQ index `(cell, vec_id,
     * poss)` under staged coarse + residual codebooks — the
@@ -978,14 +984,10 @@ object DocStream extends Serializable {
   def prepareAnnIndexPqRes(corpusVecs: DataFrame,
       coarse: Seq[(Int, Int, Seq[Long])],
       books: Seq[(Int, Int, Seq[Long])]): DataFrame = {
-    import graft.queries.{PqQueries, SimilarityQueries}
     graft.functions.VectorFunctions.register(corpusVecs.sparkSession)
-    val guarded = SimilarityQueries.semDedupGuard(
-      corpusVecs.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v")))
     PqQueries.resCodes(
         PqQueries.residualFrame(
-          SimilarityQueries.withTicks(guarded)
+          SimilarityQueries.withTicks(guardVecs(corpusVecs))
             .select(col("vec_id"), col("tv")), coarse), books)
       .select(col("cell"), col("vec_id"), col("poss"))
       .cache()
@@ -996,12 +998,11 @@ object DocStream extends Serializable {
     * coarse cells by exact tick L2 and carry PER-PROBED-CELL residual
     * distance tables ([[graft.queries.PqQueries.resProbes]], a pure
     * projection of nprobe·M·k longs per query), then the same
-    * stream-static cell join + exact-long `pq_adist` + stateless
-    * top-k. Both codebooks stage through
-    * [[graft.sources.Artifacts.writeCodebook]] (two tiny all-long
-    * parquet tables — the nightly double-trainer → live scorer
-    * handoff). AnnPqStreamSpec pins row-for-row agreement with
-    * q_ann_ivfpq_res's hash-matched ranking and the zero-state
+    * [[serveTopK]] path with the exact-long `pq_adist` score. Both
+    * codebooks stage through [[graft.sources.Artifacts.writeCodebook]]
+    * (two tiny all-long parquet tables — the nightly double-trainer →
+    * live scorer handoff). AnnPqStreamSpec pins row-for-row agreement
+    * with q_ann_ivfpq_res's hash-matched ranking and the zero-state
     * contract. */
   def annSearchPqRes(spark: SparkSession, queryVecs: DataFrame,
                      index: DataFrame,
@@ -1009,35 +1010,15 @@ object DocStream extends Serializable {
                      books: Seq[(Int, Int, Seq[Long])],
                      nprobe: Int = 4, k: Int = 5): Dataset[AnnPqHit] = {
     import spark.implicits._
-    import graft.queries.{PqQueries, SimilarityQueries}
     require(coarse.nonEmpty, "annSearchPqRes needs a trained coarse book")
     require(books.nonEmpty, "annSearchPqRes needs a trained codebook")
     graft.functions.VectorFunctions.register(spark)
-    val kL = k
-    val guarded = SimilarityQueries.semDedupGuard(
-      queryVecs.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v")))
     val probes = PqQueries.resProbes(
-      SimilarityQueries.withTicks(guarded)
+      SimilarityQueries.withTicks(guardVecs(queryVecs))
         .select(col("vec_id").as("query_id"), col("tv").as("qtv")),
       coarse, books, nprobe)
-    val scored = probes.join(index, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        graft.functions.PqFunctions.adist(col("dtabs"), col("poss"))
-          .as("adist"))
-      .as[(Long, Long, Long)]
-    def topk(id: Long, rows: Iterator[(Long, Long, Long)],
-             state: GroupState[Long]): Iterator[AnnPqHit] = {
-      // the batch window's exact order: adist asc, neighbor_id asc
-      boundedTopK(rows.map { case (_, nid, d) => (d, nid) }, kL)
-        .zipWithIndex
-        .map { case ((d, nid), i) => AnnPqHit(id, i + 1, nid, d) }
-        .iterator
-    }
-    scored.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(topk)
+    serveTopK[Long, AnnPqHit](probes, index, adistCol, k, adistOrder)(
+      AnnPqHit(_, _, _, _))
   }
 
   /** One judged media arrival from [[mediaDedup]]. */
@@ -1065,10 +1046,8 @@ object DocStream extends Serializable {
     * through the SAME codec seam as the batch (a stateless
     * mapPartitions — where a real codec runs), its 4 band rows
     * equi-join the static banded history, Hamming verifies the full
-    * signature against the codec's ring, and the verdict emits as
-    * flatMapGroupsWithState that NEVER writes state (an arrival's band
-    * rows all live in its own micro-batch, so the group fires once:
-    * state_rows stays 0 — the [[annSearch]] device). Rejections carry
+    * signature against the codec's ring, and the verdict emits on the
+    * zero-state [[perArrival]] device. Rejections carry
     * blame: the nearest history item (min Hamming, ties to the
     * smallest id). */
   def mediaDedup(spark: SparkSession, newDocs: DataFrame,
@@ -1084,8 +1063,7 @@ object DocStream extends Serializable {
           MediaQueries.hammingCol(col("bands"), col("h_bands")))
           .as("hamming"))
       .as[(Long, Option[Long], Option[Long])]
-    def judge(id: Long, rows: Iterator[(Long, Option[Long], Option[Long])],
-              state: GroupState[Long]): Iterator[MediaAdmit] = {
+    perArrival(scored)(_._1) { (id, rows) =>
       val ord = Ordering.Tuple2[Long, Long]
       var best: Option[(Long, Long)] = None // (hamming, hist_id)
       rows.foreach {
@@ -1100,9 +1078,6 @@ object DocStream extends Serializable {
         case None => MediaAdmit(id, admitted = true, None, None)
       })
     }
-    scored.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(judge)
   }
 
   /** One judged video arrival from [[frameDedup]] — rejections carry
@@ -1132,8 +1107,8 @@ object DocStream extends Serializable {
     * history index — exact aligned collisions, bucket-bounded per
     * arrival — and the judge admits unless some single history item
     * collected >= [[MediaQueries.VideoMinMatched]] collisions, blaming
-    * the most-matched (ties to the smallest id). Fires once per arrival
-    * inside its own micro-batch: zero state rows. */
+    * the most-matched (ties to the smallest id), on the zero-state
+    * [[perArrival]] device. */
   def frameDedup(spark: SparkSession, newDocs: DataFrame,
                  histIndex: DataFrame,
                  codec: MediaQueries.FrameCodec): Dataset[AviAdmit] = {
@@ -1144,8 +1119,7 @@ object DocStream extends Serializable {
       .join(histIndex, Seq("frame_idx", "sig"), "left_outer")
       .select($"item_id", $"hist_id")
       .as[(Long, Option[Long])]
-    def judge(id: Long, rows: Iterator[(Long, Option[Long])],
-              state: GroupState[Long]): Iterator[AviAdmit] = {
+    perArrival(scored)(_._1) { (id, rows) =>
       val counts = scala.collection.mutable.Map.empty[Long, Long]
         .withDefaultValue(0L)
       rows.foreach {
@@ -1160,9 +1134,6 @@ object DocStream extends Serializable {
         case None => AviAdmit(id, admitted = true, None, None)
       })
     }
-    scored.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(judge)
   }
 
   /** Per-cell admitted-vector index for [[semanticDedupOnline]]: ids in
@@ -1209,35 +1180,18 @@ object DocStream extends Serializable {
   def semanticDedupOnline(spark: SparkSession, newVecs: DataFrame,
                           tau: Double = 0.3,
                           cents: Seq[(Int, Seq[Double])] =
-                            graft.queries.SimilarityQueries
-                              .semCentroids(16, 64),
+                            SimilarityQueries.semCentroids(16, 64),
                           assignTicks: Boolean = false): Dataset[SemAdmit] = {
     import spark.implicits._
     require(cents.nonEmpty, "semanticDedupOnline needs at least one centroid")
     graft.functions.VectorFunctions.register(spark)
-    // local copies: the nested function must not capture the module
-    val tauL = tau
     val cap = spark.conf.getOption("spark.graft.dedup.maxBucket")
       .map(_.toInt).getOrElse(1000)
-    val guarded = graft.queries.SimilarityQueries.semDedupGuard(
-      newVecs.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v")))
-    val assigned = (if (assignTicks)
-        graft.queries.SimilarityQueries.semAssign(
-          graft.queries.SimilarityQueries.withTicks(guarded), cents,
-          on = "dv")
-      else graft.queries.SimilarityQueries.semAssign(guarded, cents))
+    val assigned = assignCell(guardVecs(newVecs), cents, assignTicks)
       .select(col("cell"), col("vec_id"), col("v"))
       .as[(Int, Long, Seq[Double])]
     def update(cell: Int, rows: Iterator[(Int, Long, Seq[Double])],
                state: GroupState[SemCellState]): Iterator[SemAdmit] = {
-      def cos4(a: Seq[Double], b: Seq[Double]): Double = {
-        var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < a.length) {
-          dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-        }
-        math.floor(dot / (math.sqrt(na) * math.sqrt(nb)) * 10000 + 0.5) / 10000
-      }
       val st = state.getOption.getOrElse(SemCellState(Nil, Nil))
       val ids = st.ids.to(scala.collection.mutable.ListBuffer)
       val vecs = st.vecs.to(scala.collection.mutable.ListBuffer)
@@ -1247,8 +1201,8 @@ object DocStream extends Serializable {
         var bestId = -1L
         var bestCos = -2.0
         ids.iterator.zip(vecs.iterator).foreach { case (aid, av) =>
-          val c = cos4(av, v)
-          if (c >= tauL && c > bestCos) { bestId = aid; bestCos = c }
+          val c = snap4(cosine(av, v))
+          if (c >= tau && c > bestCos) { bestId = aid; bestCos = c }
         }
         if (bestId >= 0)
           SemAdmit(id, cell, admitted = false, Some(bestId), Some(bestCos))
@@ -1508,12 +1462,8 @@ object DocStream extends Serializable {
     * the corpus it scores; a live model by definition lags arrivals).
     *
     * Scale shape: the token explode and the LM join are STATELESS
-    * stream-static work, and the per-doc mean runs as
-    * flatMapGroupsWithState that never stores state — a document's
-    * tokens all live in its own micro-batch (one doc = one source row),
-    * so the group fires exactly once and `state` is never written:
-    * state_rows stays 0 at any arrival count, which the spec pins from
-    * the progress metrics. The LM side is vocabulary-scale, not
+    * stream-static work, and the per-doc mean runs on the zero-state
+    * [[perArrival]] device. The LM side is vocabulary-scale, not
     * corpus-scale; it joins per micro-batch from the cached table
     * ([[trainLm]]) or, at 100 TB, from a bucketed-on-t materialized
     * table so only the micro-batch shuffles.
@@ -1533,18 +1483,10 @@ object DocStream extends Serializable {
       .select(col("doc_id"),
         coalesce(col("lp6"), lit(floorLp6)).as("lp6"))
       .as[(Long, Long)]
-    def score(id: Long, rows: Iterator[(Long, Long)],
-              state: GroupState[Long]): Iterator[ScoredDoc] = {
-      var c = 0L
-      var slp6 = 0L
-      rows.foreach { r => c += 1; slp6 += r._2 }
+    perDoc(toks)(_._1, _._2) { (id, c, slp6, _) =>
       // same op sequence as the batch twin: (slp6/1e6)/c, then 4-dp snap
-      Iterator.single(ScoredDoc(id, c,
-        math.floor((slp6 / 1e6) / c * 10000 + 0.5) / 10000))
+      ScoredDoc(id, c, snap4((slp6 / 1e6) / c))
     }
-    toks.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(score)
   }
 
   /** One scored arrival from [[scoreImportance]]. */
@@ -1598,8 +1540,7 @@ object DocStream extends Serializable {
     * `q_doc_dsir`'s scoring half (the batch twin then top-K-selects;
     * a stream GATES on the score instead, the caller's thresholding).
     * Stateless stream-static join against the single trained LM table;
-    * per-doc mean log-ratio via the zero-state flatMapGroupsWithState
-    * device (a doc's tokens live in its own micro-batch). Tokens the
+    * per-doc mean log-ratio on the zero-state [[perArrival]] device. Tokens the
     * target slice never saw score at the target floor (the batch
     * coalesce path); tokens NEITHER model saw score at
     * tgtFloor − rawFloor (stream-only — the batch raw side has no OOV).
@@ -1618,18 +1559,10 @@ object DocStream extends Serializable {
         (coalesce(col("tlp6"), lit(tgtFloor6))
           - coalesce(col("rlp6"), lit(rawFloor6))).as("d6"))
       .as[(Long, Long)]
-    def score(id: Long, rows: Iterator[(Long, Long)],
-              state: GroupState[Long]): Iterator[ImportanceDoc] = {
-      var c = 0L
-      var sd6 = 0L
-      rows.foreach { r => c += 1; sd6 += r._2 }
+    perDoc(toks)(_._1, _._2) { (id, c, sd6, _) =>
       // same op sequence as the batch twin: (sr6/1e6)/count, 4-dp snap
-      Iterator.single(ImportanceDoc(id, c,
-        math.floor((sd6 / 1e6) / c * 10000 + 0.5) / 10000))
+      ImportanceDoc(id, c, snap4((sd6 / 1e6) / c))
     }
-    toks.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(score)
   }
 
   /** One per-doc WordPiece token report from [[applyWordpiece]]. */
@@ -1644,9 +1577,8 @@ object DocStream extends Serializable {
     * lossless by construction), so scoring is a pure stateless
     * projection: ONE codegen'd greedy-longest-match kernel call per
     * arriving word ([[graft.functions.WpStats]], the batch twin's
-    * exact kernel), per-doc counts aggregating inside the doc's own
-    * micro-batch (flatMapGroupsWithState that never writes state —
-    * zero state rows at any arrival count). Unlike BPE's replace
+    * exact kernel), per-doc counts on the zero-state [[perArrival]]
+    * device. Unlike BPE's replace
     * chain, greedy longest match handles NOVEL words natively — the
     * vocabulary is a set, not a join — so stream and batch scores
     * agree on any word, seen or not; the only divergence is the
@@ -1663,17 +1595,10 @@ object DocStream extends Serializable {
       .select(col("doc_id"), col("st.wp_tokens").as("ntok"),
         col("st.oov_chars").as("oov"))
       .as[(Long, Long, Long)]
-    def report(id: Long, rows: Iterator[(Long, Long, Long)],
-               state: GroupState[Long]): Iterator[WpDoc] = {
-      var ws = 0L; var wp = 0L; var oov = 0L
-      rows.foreach { r => ws += 1; wp += r._2; oov += r._3 }
+    perDoc(perWord)(_._1, _._2, _._3) { (id, ws, wp, oov) =>
       // same op sequence as the batch twin: double(wp)/ws, 4-dp snap
-      Iterator.single(WpDoc(id, ws, wp, oov,
-        math.floor(wp.toDouble / ws * 10000 + 0.5) / 10000))
+      WpDoc(id, ws, wp, oov, snap4(wp.toDouble / ws))
     }
-    perWord.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(report)
   }
 
   /** One per-doc unigram-tokenizer report from [[applyUnigram]]. */
@@ -1689,8 +1614,8 @@ object DocStream extends Serializable {
     * codegen'd [[graft.functions.UgSegment]] call per arriving word
     * (exact-tick Viterbi, the batch twin's kernel — novel words
     * segment natively, long words take the same char fallback), and
-    * per-doc counts aggregate inside the doc's own micro-batch with
-    * zero state rows. Batch divergence, by design: docs with NO
+    * per-doc counts run on the zero-state [[perArrival]] device. Batch
+    * divergence, by design: docs with NO
     * non-empty token — null-text AND whitespace-only text (the batch
     * tok frame's length>0 filter leaves them token-less) — emit no row
     * here, where the batch twin's doc-universe left join surfaces
@@ -1706,16 +1631,9 @@ object DocStream extends Serializable {
       .filter(length(col("w")) > 0) // the batch tok frame's filter
       .select(col("doc_id"), size(segF(col("w"))).cast("long").as("ntok"))
       .as[(Long, Long)]
-    def report(id: Long, rows: Iterator[(Long, Long)],
-               state: GroupState[Long]): Iterator[UgDoc] = {
-      var ws = 0L; var ug = 0L
-      rows.foreach { r => ws += 1; ug += r._2 }
-      Iterator.single(UgDoc(id, ws, ug,
-        math.floor(ug.toDouble / ws * 10000 + 0.5) / 10000))
+    perDoc(perWord)(_._1, _._2) { (id, ws, ug, _) =>
+      UgDoc(id, ws, ug, snap4(ug.toDouble / ws))
     }
-    perWord.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(report)
   }
 
   /** One per-doc BPE token report from [[applyBpe]]. */
@@ -1728,10 +1646,8 @@ object DocStream extends Serializable {
     * vocabulary; at 100 TB materialized once, like the LM/centroid
     * artifacts) and arrives here as a literal rank-ordered list, so
     * application is a pure stateless projection — the replace chain
-    * runs per arriving word, and per-doc counts aggregate inside the
-    * doc's own micro-batch (a flatMapGroupsWithState that never writes
-    * state: zero state rows at any arrival count, the scoreLogprob
-    * contract). Unlike the batch twin there is NO vocabulary join: a
+    * runs per arriving word, and per-doc counts run on the zero-state
+    * [[perArrival]] device. Unlike the batch twin there is NO vocabulary join: a
     * stream cannot pre-know its vocabulary, and the per-word replace
     * chain handles out-of-vocabulary words exactly — they merge as far
     * as trained pairs allow, the true BPE OOV semantics a static vocab
@@ -1755,18 +1671,10 @@ object DocStream extends Serializable {
       .select(col("doc_id"), explode(
         graft.queries.TextQueries.tokens(lower(col("text")))).as("w"))
       .select(col("doc_id"), ntok.as("ntok")).as[(Long, Long)]
-    def report(id: Long, rows: Iterator[(Long, Long)],
-               state: GroupState[Long]): Iterator[BpeDoc] = {
-      var ws = 0L
-      var bpe = 0L
-      rows.foreach { r => ws += 1; bpe += r._2 }
+    perDoc(perWord)(_._1, _._2) { (id, ws, bpe, _) =>
       // same op sequence as the batch twin: double(bpe)/ws, 4-dp snap
-      Iterator.single(BpeDoc(id, ws, bpe,
-        math.floor(bpe.toDouble / ws * 10000 + 0.5) / 10000))
+      BpeDoc(id, ws, bpe, snap4(bpe.toDouble / ws))
     }
-    perWord.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(report)
   }
 
   /** One per-doc byte-BPE token report from [[applyBpeBytes]]. */
@@ -1777,8 +1685,8 @@ object DocStream extends Serializable {
     * `q_doc_bpe_bytes_apply` under an offline-trained merge table
     * ([[graft.sources.Artifacts.writeBpeMerges]] round-trips it; hex
     * symbols are plain strings). Same stateless shape as [[applyBpe]]
-    * (per-pretoken replace chain, per-doc counts aggregated inside the
-    * doc's own micro-batch, zero state rows) with ONE semantic
+    * (per-pretoken replace chain, per-doc counts on the zero-state
+    * [[perArrival]] device) with ONE semantic
     * improvement the byte level buys: there is NO divergence from the
     * batch twin besides the null/empty-doc row — no paren guard, no
     * OOV arm, because every pretoken (novel, paren-bearing,
@@ -1802,17 +1710,10 @@ object DocStream extends Serializable {
         size(regexp_extract_all(segCol, lit("\\(([^()]*)\\)"), lit(1)))
           .cast("long").as("ntok"))
       .as[(Long, Long, Long)]
-    def report(id: Long, rows: Iterator[(Long, Long, Long)],
-               state: GroupState[Long]): Iterator[BpeBytesDoc] = {
-      var pts = 0L; var nb = 0L; var bpe = 0L
-      rows.foreach { r => pts += 1; nb += r._2; bpe += r._3 }
+    perDoc(perPt)(_._1, _._2, _._3) { (id, pts, nb, bpe) =>
       // same op sequence as the batch twin: double(bytes)/bpe, 4-dp snap
-      Iterator.single(BpeBytesDoc(id, pts, nb, bpe,
-        math.floor(nb.toDouble / bpe * 10000 + 0.5) / 10000))
+      BpeBytesDoc(id, pts, nb, bpe, snap4(nb.toDouble / bpe))
     }
-    perPt.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(report)
   }
 
   /** One scored arrival from [[scoreKn]]. */
@@ -1881,8 +1782,7 @@ object DocStream extends Serializable {
     * product term of interpolated KN); unseen context → c6(w) alone
     * (pure continuation probability); unseen word → the floor. Three
     * stateless stream-static joins against bigram-type-scale tables,
-    * then the per-doc mean as the zero-state flatMapGroupsWithState of
-    * [[scoreLogprob]]. Docs with < 2 tokens emit no row (no bigram
+    * then the per-doc mean on the zero-state [[perArrival]] device. Docs with < 2 tokens emit no row (no bigram
     * positions — the batch twin surfaces them with count 0 via its
     * left join; a stream has no all-docs side). */
   def scoreKn(docs: DataFrame, lmBg: DataFrame, ctxBk: DataFrame,
@@ -1906,18 +1806,10 @@ object DocStream extends Serializable {
           when(col("cb6").isNotNull, col("cb6") + contOrFloor)
             .otherwise(contOrFloor)).as("t6"))
       .as[(Long, Long)]
-    def score(id: Long, rows: Iterator[(Long, Long)],
-              state: GroupState[Long]): Iterator[KnDoc] = {
-      var c = 0L
-      var s6 = 0L
-      rows.foreach { r => c += 1; s6 += r._2 }
+    perDoc(ticks)(_._1, _._2) { (id, c, s6, _) =>
       // same op sequence as the batch twin's final rounding
-      Iterator.single(KnDoc(id, c,
-        math.floor((s6 / 1e6) / c * 10000 + 0.5) / 10000))
+      KnDoc(id, c, snap4((s6 / 1e6) / c))
     }
-    ticks.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(score)
   }
 
   /** Offline trainer for [[scoreQuality]]: the batch hard-sigmoid

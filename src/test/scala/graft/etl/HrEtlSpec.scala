@@ -3,7 +3,8 @@ package graft.etl
 import java.sql.Date
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{coalesce, col, count, countDistinct,
+  lit, sum, when}
 import graft.SparkTestBase
 
 /** Mirrors the reference's own unit tests (reference test_etl.py:6-67) on
@@ -165,11 +166,73 @@ class HrEtlSpec extends SparkTestBase {
     assert(rows(2L).getAs[Long]("total_team_size") === 1L)
   }
 
+  // The reference's one-action-per-check DQ API (validation.py:7-57),
+  // the reference "single-pass DQ…" compares the build's check rows to.
+
+  /** One check result: (table_name, check_name, detail, violations). */
+  private def result(table: String, check: String, detail: String,
+                     violations: Long): DataFrame =
+    Seq((table, check, detail, violations))
+      .toDF("table_name", "check_name", "detail", "violations")
+
+  /** reference validation.py:7-26 (check_completeness): null PK, duplicate
+    * PK, per-required-column nulls, missing columns. */
+  private def checkCompleteness(df: DataFrame, table: String, pk: String,
+                                required: Seq[String]): DataFrame = {
+    val missing = (pk +: required).filterNot(df.columns.contains)
+    val missingDf = missing.map(c => result(table, "missing_column", c, 1L))
+    if (!df.columns.contains(pk))
+      return missingDf.reduce(_ union _)
+    val presentReq = required.filter(df.columns.contains)
+    val aggs =
+      sum(when(col(pk).isNull, 1L).otherwise(0L)).as("null_pk") +:
+        (count(col(pk)) - countDistinct(col(pk))).as("dup_pk") +:
+        presentReq.map(c =>
+          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"null_$c"))
+    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val checks =
+      result(table, "null_pk", pk, row.getAs[Long]("null_pk")) +:
+        result(table, "duplicate_pk", pk, row.getAs[Long]("dup_pk")) +:
+        presentReq.map(c =>
+          result(table, "null_required", c, row.getAs[Long](s"null_$c")))
+    (checks ++ missingDf).reduce(_ union _)
+  }
+
+  /** reference validation.py:28-45 (check_consistency): FK values (minus
+    * the -1 sentinel) not present in the parent — a distributed anti-join,
+    * never a collected key set. */
+  private def checkConsistency(child: DataFrame, childFk: String,
+                               parent: DataFrame, parentPk: String,
+                               childTable: String): DataFrame = {
+    val bad =
+      if (!child.columns.contains(childFk) || !parent.columns.contains(parentPk)) 0L
+      else child
+        .filter(col(childFk).isNotNull && col(childFk) =!= -1)
+        .select(col(childFk).as("__fk")).distinct()
+        .join(parent.select(col(parentPk).as("__pk")),
+          col("__fk") === col("__pk"), "left_anti")
+        .count()
+    result(childTable, "fk_consistency", s"$childFk->$parentPk", bad)
+  }
+
+  /** reference validation.py:47-57 (check_accuracy): violations are rows
+    * where `~condition` holds; pandas boolean masks coerce NaN comparisons
+    * to False, so a null-valued condition IS a violation here — matching
+    * `df[~condition]` exactly. Call sites that need pandas' positive-mask
+    * semantics instead (nulls NOT violations, reference validation.py:85-87)
+    * pre-coalesce their condition. */
+  private def checkAccuracy(df: DataFrame, table: String,
+                            validCond: org.apache.spark.sql.Column,
+                            label: String): DataFrame = {
+    val bad = df.filter(!coalesce(validCond, lit(false))).count()
+    result(table, "accuracy", label, bad)
+  }
+
   test("validation: completeness flags a null name (reference test_etl.py:43-54)") {
     val withNull = employees.withColumn("name",
       org.apache.spark.sql.functions.when($"employee_id" === 1L, null)
         .otherwise($"name"))
-    val checks = HrValidate.checkCompleteness(spark, withNull, "employees",
+    val checks = checkCompleteness(withNull, "employees",
       "employee_id", Seq("name", "salary", "hire_date"))
     val nullName = checks.filter($"check_name" === "null_required" &&
       $"detail" === "name").collect()(0)
@@ -179,7 +242,7 @@ class HrEtlSpec extends SparkTestBase {
   test("validation: FK anti-join catches unknown employee (J6)") {
     val badReviews = Seq((7L, 999L, d("2025-01-01"), 3.0, Option(1L)))
       .toDF("review_id", "employee_id", "review_date", "rating", "reviewer_id")
-    val check = HrValidate.checkConsistency(spark, badReviews, "employee_id",
+    val check = checkConsistency(badReviews, "employee_id",
       out.dimEmployees, "employee_id", "performance_reviews")
     assert(check.collect()(0).getAs[Long]("violations") === 1L)
   }
@@ -203,36 +266,34 @@ class HrEtlSpec extends SparkTestBase {
     def rows(df: DataFrame) = df.collect().toSeq.map(r =>
       (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
     // the reference's one-action-per-check suite (validation.py:63-135),
-    // composed from the public per-check API, in the reference's order
-    import HrValidate.{checkAccuracy, checkCompleteness, checkConsistency}
-    import org.apache.spark.sql.functions.{coalesce, lit}
+    // composed from the per-check API above, in the reference's order
     val emp = out.dimEmployees
     val perCheck = Seq(
-      checkCompleteness(spark, emp, "employees", "employee_id",
+      checkCompleteness(emp, "employees", "employee_id",
         Seq("name", "salary", "hire_date")),
-      checkConsistency(spark, emp, "department_id", out.dimDepartments,
+      checkConsistency(emp, "department_id", out.dimDepartments,
         "department_id", "employees"),
-      checkAccuracy(spark, emp, "employees",
+      checkAccuracy(emp, "employees",
         col("status").isin("active", "inactive", "terminated", "leave"),
         "status_enum"),
-      checkAccuracy(spark, emp, "employees",
+      checkAccuracy(emp, "employees",
         !coalesce(col("status") === "active" && col("salary") <= 0, lit(false)),
         "active_salary_positive"),
-      checkCompleteness(spark, out.factReviews, "performance_reviews",
+      checkCompleteness(out.factReviews, "performance_reviews",
         "review_id", Seq("employee_id", "rating", "review_date")),
-      checkConsistency(spark, out.factReviews, "employee_id", emp,
+      checkConsistency(out.factReviews, "employee_id", emp,
         "employee_id", "performance_reviews"),
-      checkAccuracy(spark, out.factReviews, "performance_reviews",
+      checkAccuracy(out.factReviews, "performance_reviews",
         col("rating").between(1.0, 5.0), "rating_range"),
-      checkConsistency(spark, out.factAssignments, "project_id",
+      checkConsistency(out.factAssignments, "project_id",
         cleanProjects, "project_id", "project_assignments"),
-      checkConsistency(spark, out.factAssignments, "employee_id", emp,
+      checkConsistency(out.factAssignments, "employee_id", emp,
         "employee_id", "project_assignments"),
-      checkAccuracy(spark, out.factAssignments, "project_assignments",
+      checkAccuracy(out.factAssignments, "project_assignments",
         col("allocation_percentage").between(0, 100), "allocation_range"),
-      checkCompleteness(spark, cleanProjects, "projects", "project_id",
+      checkCompleteness(cleanProjects, "projects", "project_id",
         Seq("project_name", "start_date")),
-      checkAccuracy(spark, cleanProjects, "projects",
+      checkAccuracy(cleanProjects, "projects",
         col("budget").isNull || col("budget") > 0, "budget_null_or_positive")
     ).reduce(_ union _)
     // build's check rows equal the per-check suite's, row for row

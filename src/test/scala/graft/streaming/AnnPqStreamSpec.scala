@@ -125,6 +125,23 @@ class AnnPqStreamSpec extends SparkTestBase {
         .as[(Long, Int, Long, Long)].collect().toSet
       assert(got === want)
       assert(got.map(_._1) === (0L until 10L).toSet)
+
+      // k = 0 is a valid 'no results' request on both PQ faces, as on
+      // annSearch: zero hits per probe, no exception in the serve task
+      val pqIndex = DocStream.prepareAnnIndexPq(corpusVecs, cents, books)
+      try Seq(
+        "ann_pq_k0" -> DocStream.annSearchPq(spark,
+          DocStream.readEmbeddings(spark, dir.toString), pqIndex, cents,
+          books, k = 0),
+        "ann_pqres_k0" -> DocStream.annSearchPqRes(spark,
+          DocStream.readEmbeddings(spark, dir.toString), index, stagedC,
+          stagedR, k = 0)
+      ).foreach { case (sink, served) =>
+        val q0 = EventStream.runToMemory(served.toDF(), sink,
+          OutputMode.Append())
+        q0.processAllAvailable(); q0.stop()
+        assert(spark.table(sink).count() === 0L, sink)
+      } finally pqIndex.unpersist()
     } finally index.unpersist()
   }
 
